@@ -69,9 +69,10 @@ def test_traced_run_reports_every_layer_metric(spark, tmp_path):
                   scale=SCALE, max_ops=3, setup_reps=1)
     assert r["error"] is None
     got = {k: m["unit"] for k, m in r["per_layer"].items()}
-    assert got == units(BENCH["per_layer"])
+    assert got.items() >= units(BENCH["per_layer"]).items()
     layer = {k: m["value"] for k, m in r["per_layer"].items()}
     assert layer["merge.kernel.calls"] + layer["merge.broadcast.calls"] > 0
+    assert layer["services.clean.files_deleted"] > 0
     assert layer["dml.merge_into.self_s"] > 0
     assert layer["py4j.calls_per_op.upsert"] > 0
     assert layer["spark.jobs_per_op.upsert"] > 0

@@ -345,6 +345,36 @@ def tree_cpu_s() -> float:
     return total
 
 
+def jit_threads(pid: int | None) -> dict[int, float]:
+    """Thread id → CPU seconds used so far, for each JIT compiler thread
+    (C1 or C2) of process ``pid``. The JVM starts and stops compiler
+    threads as its compile queue grows and drains, so the CPU used over a
+    span is ``jit_cpu_between`` of two of these, not a difference of sums."""
+    if pid is None:
+        return {}
+    tick = os.sysconf("SC_CLK_TCK")
+    out = {}
+    try:
+        tids = os.listdir(f"/proc/{pid}/task")
+    except OSError:
+        return {}
+    for tid in tids:
+        try:
+            with open(f"/proc/{pid}/task/{tid}/stat") as f:
+                head, rest = f.read().rsplit(")", 1)
+        except OSError:
+            continue
+        if "CompilerThre" in head:
+            fields = rest.split()
+            out[int(tid)] = (int(fields[11]) + int(fields[12])) / tick
+    return out
+
+
+def jit_cpu_between(t0: dict[int, float], t1: dict[int, float]) -> float:
+    """CPU seconds the compiler threads alive at the end used since ``t0``."""
+    return sum(cpu - t0.get(tid, 0.0) for tid, cpu in t1.items())
+
+
 def _vm_hwm_mb(pid: int | None) -> float:
     if pid is None:
         return 0.0

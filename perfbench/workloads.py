@@ -19,7 +19,7 @@ from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
-from tracing import tree_cpu_s
+from tracing import jit_cpu_between, jit_threads, jvm_pid, tree_cpu_s
 
 KB = 1 << 10
 EPOCH = dt.date(1992, 1, 1)
@@ -80,19 +80,22 @@ class Orders:
 class Lineitem:
     """``lineitem`` keyed by ``(l_orderkey, l_linenumber)`` and partitioned
     by ship year. The model's key is ``l_orderkey * 8 + l_linenumber``.
-    Ship dates rise with the order key, so the key-sorted bulk load gives
-    every file a narrow date and key range for footer stats to skip on."""
+    As in TPC-H, each order's date is drawn independently of its key and
+    a line ships 1-121 days after it, so a file's date range is as wide as
+    its partition's: only the partition and the key order give footer
+    stats anything to skip."""
 
     cfg = dict(record_key_field="l_orderkey,l_linenumber", partition_field="l_shipyear",
                precombine_field="l_shipdate")
     delete_cols = ("l_orderkey", "l_linenumber", "l_shipyear")
 
-    def __init__(self, n_orders: int):
-        self.n_orders = n_orders
+    def __init__(self, n_orders: int, seed: int):
         o = np.arange(1, n_orders + 1, dtype=np.int64)
         lines = 1 + ((o * 2654435761) >> 7) % 7
         ln = np.concatenate([np.arange(1, k + 1) for k in lines])
         self.base_keys = np.repeat(o, lines) * 8 + ln
+        # order date of order o at index o (index 0 unused)
+        self.order_day = np.random.default_rng([seed, 3]).integers(0, DAYS - 121, n_orders + 1)
         self.years = np.unique(self.ship_year(self.base_keys))
 
     @staticmethod
@@ -103,7 +106,7 @@ class Lineitem:
 
     def ship_days(self, keys: np.ndarray) -> np.ndarray:
         o, ln = keys // 8, keys % 8
-        return o * (DAYS - 122) // (self.n_orders + 1) + 1 + (o * 31 + ln * 17) % 121
+        return self.order_day[o] + 1 + (o * 31 + ln * 17) % 121
 
     def ship_year(self, keys: np.ndarray) -> np.ndarray:
         d = np.datetime64(EPOCH.isoformat()) + self.ship_days(keys).astype("timedelta64[D]")
@@ -144,10 +147,11 @@ def digest(items) -> tuple[int, int, int]:
     return n, s1, s2
 
 
-def spark_digest(df, key) -> tuple[int, int, int, int]:
-    """One action over a read result: ``digest``'s three numbers plus the
-    count of rows whose every column went through xxhash64, so no column
-    can be pruned from the scan (as ``bench.py`` materializes reads)."""
+def spark_digest(df, key) -> tuple[int, int, int]:
+    """One action over a read result: ``digest``'s three numbers. A fourth
+    aggregate, the XOR of every row's xxhash64 over all columns, is not
+    checked; it is there so that every column is read and decoded (as
+    ``bench.py`` materializes reads) rather than pruned from the scan."""
     from pyspark.sql import functions as F
 
     ver = F.col("bench_version").cast("long")
@@ -155,9 +159,9 @@ def spark_digest(df, key) -> tuple[int, int, int, int]:
         F.count(F.lit(1)),
         F.sum(key * F.lit(1009) + ver),
         F.sum(F.pmod(key * F.lit(2654435761) + ver * F.lit(40503), F.lit(1000003))),
-        F.count(F.xxhash64(*[F.col(c) for c in df.columns])),
+        F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns])),
     ).first()
-    return int(row[0]), int(row[1] or 0), int(row[2] or 0), int(row[3])
+    return int(row[0]), int(row[1] or 0), int(row[2] or 0)
 
 
 class Model:
@@ -264,20 +268,26 @@ class Spec:
 
 SPECS = {
     # file sizes scaled down (as a large table's 120 MB files are against
-    # its data) so the 30k-row table has tens of file groups
+    # its data) so the 30k-row table has tens of file groups; clean and
+    # archive retention scaled down with them (engine defaults 10 commits
+    # retained, archive from 30 down to 20) so that, after the set-up
+    # writes (one history upsert, then the warm-up delete and merge_into),
+    # every loop write cleans and every third one archives
     "cow_ingest": Spec(
         "cow_ingest", "orders", "COPY_ON_WRITE",
-        dict(max_file_size_bytes=48 * KB, small_file_limit_bytes=36 * KB),
+        dict(max_file_size_bytes=48 * KB, small_file_limit_bytes=36 * KB,
+             cleaner_commits_retained=3, keep_min_commits=4, keep_max_commits=6),
         block=("upsert", "delete", "merge_into", "upsert", "upsert"),
         mix={"upsert": 0.6, "delete": 0.2, "merge_into": 0.2},
-        base=30_000, batch=1_000, warmup=("upsert",)),
+        base=30_000, batch=1_000, history=1, warmup=("delete", "merge_into")),
     # default file sizes; compaction after every 2nd deltacommit (engine
     # default 5) so each run holds a compaction cycle
     "mor_ingest": Spec(
         "mor_ingest", "orders", "MERGE_ON_READ", dict(compact_max_delta_commits=2),
         block=("step",), mix={"upsert": 1, "snapshot": 1, "incremental": 1},
         base=30_000, batch=2_000),
-    # base: orders, ~4 lines each; history: small upserts in set-up
+    # base: orders, ~4 lines each; history: upserts of keys drawn
+    # uniformly, in set-up
     "snapshot_reads": Spec(
         "snapshot_reads", "lineitem", "COPY_ON_WRITE",
         dict(max_file_size_bytes=48 * KB, small_file_limit_bytes=36 * KB),
@@ -288,7 +298,7 @@ SPECS = {
                "snapshot", "filtered", "point_lookup", "incremental"),
         mix={"snapshot": 0.25, "filtered": 0.25, "point_lookup": 0.25,
              "incremental": 0.15, "time_travel": 0.10},
-        base=7_500, batch=300, history=2,
+        base=7_500, batch=300, history=3,
         warmup=("snapshot", "filtered", "point_lookup", "incremental", "time_travel")),
 }
 
@@ -299,11 +309,12 @@ def median(xs) -> float:
 
 def tail(xs) -> tuple[float, int] | None:
     """The highest whole percentile with at least ten samples above it, as
-    (value, percentile); None below 11 samples."""
+    (value, percentile); None until that percentile is above the median
+    (21 samples)."""
     n = len(xs)
-    if n < 11:
+    pct = int(100 * (n - 10) / n) if n else 0
+    if pct <= 50:
         return None
-    pct = int(100 * (n - 10) / n)
     return float(np.percentile(xs, pct)), pct
 
 
@@ -333,14 +344,14 @@ class Workload:
     model's answer and the comparison run outside the clock."""
 
     def __init__(self, spark, work_dir: str, spec: Spec, seed: int, scale: float = 1.0,
-                 tracer=None, setup_reps: int = 3):
+                 tracer=None, setup_reps: int = 6):
         from hudi_0_10_0_spark import HudiTable, TableType, WriteConfig
 
         self.spark, self.work, self.spec = spark, work_dir, spec
         self.tracer, self.setup_reps = tracer, setup_reps
         self.HudiTable = HudiTable
         size = max(20, int(round(spec.base * scale)))
-        self.kind = Orders(size) if spec.table == "orders" else Lineitem(size)
+        self.kind = Orders(size) if spec.table == "orders" else Lineitem(size, seed)
         self.key = self.kind.key_col()
         self.cfg = WriteConfig(table_type=TableType(spec.table_type),
                                **self.kind.cfg, **spec.cfg)
@@ -349,7 +360,10 @@ class Workload:
         self.gen = OpGen(seed, self.model, self.kind, int(self.kind.base_keys.max()) + 1)
         self.lat: dict[str, list[float]] = {}
         self.cpu: dict[str, list[float]] = {}  # CPU seconds of the process tree, per op
+        self.jit: dict[str, list[float]] = {}  # of that, the JVM's JIT compilers
+        self.jvm = jvm_pid()
         self.amp: dict[str, list[float]] = {}  # write kind → new bytes per row, per op
+        self.history_amp: dict[str, list[float]] = {}  # the same, of set-up history writes
         self.setup_s: list[float] = []
         self.history_s = 0.0
         self.attempted = self.failed = 0
@@ -366,19 +380,20 @@ class Workload:
         t0 = time.perf_counter()
         if not self.recording:
             return fn()
-        c0 = tree_cpu_s()
+        c0, j0 = tree_cpu_s(), jit_threads(self.jvm)
         out = self.tracer.run_op(kind, fn) if self.tracer else fn()
         self.lat.setdefault(kind, []).append(time.perf_counter() - t0)
         self.cpu.setdefault(kind, []).append(tree_cpu_s() - c0)
+        self.jit.setdefault(kind, []).append(jit_cpu_between(j0, jit_threads(self.jvm)))
         return out
 
     def check(self, what: str, make_df, got, want, items) -> None:
         """Compare a read's digest with the model's; on a mismatch record
         the per-key diff and raise."""
-        if tuple(got[:3]) == tuple(want) and got[3] == got[0]:
+        if tuple(got) == tuple(want):
             return
         self.failed += 1
-        self.failures.append(f"{what}: read gave (rows, sum1, sum2, hashed) = {got}, the "
+        self.failures.append(f"{what}: read gave (rows, sum1, sum2) = {got}, the "
                              f"model expects {tuple(want)}; {self.diff(make_df(), items)}")
         raise Failure("; ".join(self.failures))
 
@@ -415,8 +430,10 @@ class Workload:
     # -- set-up ------------------------------------------------------------------------
     def setup(self) -> None:
         """Create and bulk-load the table ``setup_reps`` times, each a set-up
-        sample (the first also warms the JVM); the last one stays. Then make
-        the history commits, once, and check the table against the model."""
+        sample (the first one, on a cold JVM, only warms it up and is not
+        counted when there are others); the last table stays. Then make
+        the history commits, once and untimed, and check the table against
+        the model."""
         src = os.path.join(self.work, "input", f"{self.spec.table}.parquet")
         os.makedirs(os.path.dirname(src), exist_ok=True)
         pq.write_table(self.kind.rows(self.gen.data_rng, self.kind.base_keys, 0), src)
@@ -433,13 +450,15 @@ class Workload:
         self.model.commit(instant, dict.fromkeys(self.kind.base_keys.tolist(), 0))
         self.files = dir_files(self.path)
         t0 = time.perf_counter()
+        self.recording = False
         for _ in range(self.spec.history):
-            self.write("upsert", self.gen.write_keys("upsert", self.batch, 0.0, 1.0))
+            self.write("upsert", self.gen.write_keys("upsert", self.batch, 0.0, 0.0),
+                       self.history_amp)
         self.history_s = time.perf_counter() - t0
         self.check_snapshot("set-up snapshot")
 
     # -- ops ---------------------------------------------------------------------------
-    def write(self, kind: str, keys: np.ndarray) -> str:
+    def write(self, kind: str, keys: np.ndarray, amp: dict | None = None) -> str:
         version = len(self.model.instants)
         df = self.spark.createDataFrame(self.kind.rows(self.gen.data_rng, keys, version))
         if kind == "delete":
@@ -451,8 +470,10 @@ class Workload:
         instant = self.timed(kind, lambda: op(df))
         self.model.commit(instant, changes)
         new_bytes = self._new_bytes()
-        if self.recording:
-            self.amp.setdefault(kind, []).append(new_bytes / len(keys))
+        if amp is None and self.recording:
+            amp = self.amp
+        if amp is not None:
+            amp.setdefault(kind, []).append(new_bytes / len(keys))
         return instant
 
     def _new_bytes(self) -> int:
@@ -533,19 +554,17 @@ class Workload:
 
     # -- run ---------------------------------------------------------------------------
     def run(self, seconds: float, max_ops: int | None = None) -> None:
-        """Set up, then run the block's ops in turn until ``seconds`` have
-        passed (and every kind ran once), or ``max_ops``; then check the
-        final snapshot."""
+        """Set up, then run whole blocks of ops, at least one, until
+        ``seconds`` have passed, or ``max_ops`` ops; then check the final
+        snapshot."""
         self.setup()
-        self.recording = False
         for kind in self.spec.warmup:
             self.op(kind)
         self.recording = True
         block = self.spec.block
-        min_ops = max(block.index(k) for k in block) + 1
         deadline = time.perf_counter() + seconds
         n = 0
-        while (time.perf_counter() < deadline or n < min_ops) and (
+        while (time.perf_counter() < deadline or n < len(block) or n % len(block)) and (
                 max_ops is None or n < max_ops):
             self.op(block[n % len(block)])
             n += 1
@@ -554,13 +573,14 @@ class Workload:
     # -- metrics -----------------------------------------------------------------------
     def metrics(self) -> dict[str, tuple[float, str]]:
         """The end-to-end metrics, each defined on every workload."""
-        cpu = {k: median(xs) for k, xs in self.cpu.items()}
-        amp = {k: median(xs) for k, xs in self.amp.items()}
+        # whole blocks run, so the loop's ops are in the mix's proportions
+        cpu = [x for k in self.spec.mix for x in self.cpu.get(k, [])]
+        amp = {k: median(xs) for k, xs in (self.amp or self.history_amp).items()}
         live_bytes = sum(s.total_bytes for s in self.table.file_slices())
         return {
-            "setup_s": (median(self.setup_s), "s"),
-            "op_mix_cpu_s": (weighted(cpu, self.spec.mix), "s"),
-            # set-up history upserts count where the loop writes nothing
+            "setup_s": (median(self.setup_s[1:] or self.setup_s), "s"),
+            "op_mix_cpu_s": (statistics.fmean(cpu) if cpu else 0.0, "s"),
+            # the set-up history writes count where the loop writes nothing
             "write_bytes_per_row": (
                 weighted(amp, {k: self.spec.mix.get(k, 1.0) for k in amp}), "B/row"),
             "table_bytes_per_live_row": (live_bytes / max(1, len(self.model.live)), "B/row"),
@@ -568,8 +588,9 @@ class Workload:
 
     def op_metrics(self) -> dict[str, dict]:
         """Per-op-kind metrics of this workload (the kinds it ran): wall
-        latency ``<kind>_p50_s`` and, from 11 samples, ``<kind>_tail_s``
-        with its percentile; median CPU seconds ``<kind>_cpu_s``; and
+        latency ``<kind>_p50_s`` and, from 21 samples, ``<kind>_tail_s``
+        with its percentile; median CPU seconds ``<kind>_cpu_s`` and the JIT
+        compilers' part of them ``<kind>_jit_cpu_s``; and
         ``op_mix_p50_s``, the mix-weighted wall latency."""
         names = {"snapshot": "snapshot_read", "filtered": "filtered_read",
                  "incremental": "incremental_read"}
@@ -581,6 +602,7 @@ class Workload:
             if tl:
                 out[f"{name}_tail_s"] = {"value": tl[0], "unit": "s", "pct": tl[1], "n": len(xs)}
             out[f"{name}_cpu_s"] = {"value": median(self.cpu[k]), "unit": "s", "n": len(xs)}
+            out[f"{name}_jit_cpu_s"] = {"value": median(self.jit[k]), "unit": "s", "n": len(xs)}
         p50 = {k: median(xs) for k, xs in self.lat.items()}
         out["op_mix_p50_s"] = {"value": weighted(p50, self.spec.mix), "unit": "s"}
         out["failed_op_ratio"] = {"value": self.failed / max(1, self.attempted), "unit": "ratio"}
