@@ -77,7 +77,7 @@ def stop_spark(spark) -> None:
 
 
 def run(spark, work_dir: str, workload: str, seed: int, seconds: float, trace: bool,
-        scale: float = 1.0, max_ops: int | None = None, setup_reps: int = 6) -> dict:
+        scale: float = 1.0, max_ops: int | None = None, setup_reps: int = 4) -> dict:
     """Run one workload on an existing session; returns the report dict
     (also used in-process by the benchmark's tests)."""
     from tracing import Tracer, cpu_ticks, host_sentinel

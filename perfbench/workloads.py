@@ -344,7 +344,7 @@ class Workload:
     model's answer and the comparison run outside the clock."""
 
     def __init__(self, spark, work_dir: str, spec: Spec, seed: int, scale: float = 1.0,
-                 tracer=None, setup_reps: int = 6):
+                 tracer=None, setup_reps: int = 4):
         from hudi_0_10_0_spark import HudiTable, TableType, WriteConfig
 
         self.spark, self.work, self.spec = spark, work_dir, spec
