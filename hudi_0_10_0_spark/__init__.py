@@ -8,8 +8,10 @@ Hudi 0.10.0 (reference: punish-yh/hudi-0.10.0), re-expressed Spark-first:
   ``hudi-common/.../HoodieTableMetaClient.java:73-79`` keeps the same
   information as byte-encoded files under ``.hoodie/``).
 - All *compute* is DataFrame ops — key-location joins for indexing,
-  full-outer join + Column expressions for merge payloads, window
-  functions for preCombine — so Catalyst/Tungsten plan the physical
+  a union + one hash exchange on (file_id, partition) + per-key window
+  (``stored LEFT JOIN broadcast(incoming)`` for small batches) with
+  Column expressions for merge payloads, window functions for
+  preCombine — so Catalyst/Tungsten plan the physical
   execution (the reference hand-schedules RDDs of Avro records).
 - MOR "log files" are per-commit *delta parquet files* per file group —
   same semantics as Hudi's avro log blocks

@@ -28,7 +28,7 @@ from ..timeline import REPLACE_COMMIT
 from .merge import mor_merge_window
 from ..payloads import get_payload
 from ..sources.read import base_format as _base_format
-from .write import collect_write_stats
+from .write import WriteInstant, collect_write_stats
 
 
 def pending_clustering_plans(table) -> dict[str, set[tuple[str, str]]]:
@@ -237,7 +237,11 @@ def _execute_cluster(
     view = table.view()
     target = target_file_size or cfg.max_file_size_bytes
     table.timeline.transition_to_inflight(instant, REPLACE_COMMIT)
-    try:
+    # no claim step: the plan already owns the instant. A failed
+    # EXECUTION returns the plan to REQUESTED when keep_plan_on_failure:
+    # cancelling it would silently drop both the scheduled work and the
+    # pending-clustering update-REJECT protection on its file groups
+    with WriteInstant(table, "cluster", REPLACE_COMMIT, instant, keep_plan=keep_plan_on_failure) as wi:
         from ..sources.read import _read_paths, slices_to_df
 
         log_paths = [p for s in slices for l in s.logs for p in l.paths]
@@ -344,30 +348,7 @@ def _execute_cluster(
         # only fires for plans that existed at ITS profile time), and
         # replacing the group would silently drop those committed rows —
         # guarded_commit's overlap check on `replaced` catches it and
-        # the except handler rolls the clustering back
-        from ..concurrency import guarded_commit, txn_start_marker
+        # the abort rolls the clustering back
+        from ..concurrency import txn_start_marker
 
-        guarded_commit(
-            table, instant, REPLACE_COMMIT, md,
-            txn_start=txn_start_marker(table, view),
-        )
-    except Exception as exc:
-        table.fs.delete(table.instant_data_path(instant), recursive=True)
-        if keep_plan_on_failure:
-            # return the scheduled plan to REQUESTED: the failure was in
-            # EXECUTION; cancelling the plan would silently drop both the
-            # scheduled work and the pending-clustering update-REJECT
-            # protection on its file groups
-            table.timeline.revert_to_requested(instant, REPLACE_COMMIT)
-        else:
-            table.timeline.delete_instant_files(instant, REPLACE_COMMIT)
-        from ..concurrency import CommitUndoneError as _Undone
-        from .key_index import drop_instant as _ki_drop
-
-        # CommitUndoneError = the replacecommit was momentarily
-        # COMPLETED (guarded_commit's post-write undo), so a rival index
-        # compaction could have folded its delta — run the folded check
-        # then (code-review r7); plain failures never completed
-        _ki_drop(table, instant, folded_possible=isinstance(exc, _Undone))
-        raise
-    return instant
+        return wi.commit(md, txn_start_marker(table, view))

@@ -5,11 +5,16 @@ probes a spillable hash map of incoming records, calls
 ``payload.combineAndGetUpdateValue`` per record, then flushes unmatched
 incoming records (``client/io/HoodieMergeHandle.java:93-118,253,315-330``).
 
-Ours is a single ``full_outer`` join on (file_id, record_key) with the
-payload's Column expressions deciding survivor + values — Catalyst picks
-the physical join, Tungsten codegens the expressions, and Spark's
-shuffle spill replaces ``ExternalSpillableMap``. The same kernel serves
-COW upsert, MOR compaction, and MOR snapshot merge.
+Ours unions stored and incoming rows, hash-exchanges them ONCE on
+(file_id, partition) — the reference's bucket ``Partitioner`` — and
+reconciles each (file_id, partition, record_key) with one window; the
+payload's Column expressions decide survivor + values
+(``finish_merge_frame``). Tungsten codegens the expressions and Spark's
+shuffle spill replaces ``ExternalSpillableMap``. Batches within the
+broadcast budget run ``stored LEFT JOIN broadcast(incoming)`` instead
+(``broadcast_merge_stored``), so the stored side never shuffles; both
+share the same tail. MOR snapshot reads and compaction merge base ∪
+logs with ``mor_merge_window``.
 """
 
 from __future__ import annotations
@@ -80,9 +85,9 @@ def merge_stored_and_incoming(
     Physical shape — ONE shuffle, keyed by file group: stored ∪ incoming
     rows are hash-partitioned on (file_id, partition) exactly like the
     reference's bucket ``Partitioner`` (``BaseSparkCommitActionExecutor
-    .partition``), then reconciled by a shuffle-free ``groupBy`` on
+    .partition``), then reconciled by a shuffle-free window over
     (file_id, partition, key) — HashPartitioning([fid, pp]) already
-    satisfies the aggregation's ClusteredDistribution, and the output
+    satisfies the window's ClusteredDistribution, and the output
     lands pre-partitioned for the parquet writer (no re-layout shuffle).
     A full-outer join on the key would instead shuffle on the key AND
     need a second shuffle to group output by file — 2× the shuffle volume

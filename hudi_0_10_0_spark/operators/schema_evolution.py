@@ -47,32 +47,18 @@ def is_widening(old: T.DataType, new: T.DataType) -> bool:
 
 
 def _commit_schema(table, new_schema: T.StructType, operation: str) -> str:
-    from ..concurrency import guarded_commit, txn_start_marker
+    from ..concurrency import txn_start_marker
+    from .write import WriteInstant
 
-    # ONE claim/heartbeat/create-once implementation for every commit
-    # path (code-review r7 — this used to be a hand-rolled copy that
-    # error-handling fixes had to be applied to twice): the heartbeat
-    # guards the pending window (advice r5) so a rival's lazy
-    # failed-write sweep never judges this pending DDL crashed
-    from .write import _claim_write_instant
-
-    instant, hb = _claim_write_instant(table, "commit", operation)
-    try:
-        table.timeline.transition_to_inflight(instant, "commit")
+    # the shared write-instant lifecycle: the heartbeat guards the
+    # pending window (advice r5) so a rival's lazy failed-write sweep
+    # never judges this pending DDL crashed
+    with WriteInstant.open(table, "ddl", "commit", operation) as wi:
         md = make_commit_metadata(operation, new_schema.json(), [])
         # through the OCC gate: serializes concurrent DDLs under the table
         # lock, and the gate's reconcile-on-commit folds in any OTHER schema
         # change that completed while this one was being prepared
-        guarded_commit(table, instant, "commit", md, txn_start=txn_start_marker(table))
-    except BaseException:
-        table.timeline.delete_pending_instant_files(instant, "commit")
-        # the claim is ours (claim_timestamp succeeded) — collect it now
-        # rather than stranding it for the orphan sweep (code-review r7)
-        table.fs.delete(f"{table.timeline.dir}/{instant}.claim")
-        raise
-    finally:
-        if hb is not None:
-            hb.stop()
+        instant = wi.commit(md, txn_start_marker(table))
     table._schema_cache = None
     return instant
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from dataclasses import dataclass
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame
@@ -43,7 +44,7 @@ from ..config import (
 from ..callbacks import fire_commit_callback, validate_callback_config
 from ..metrics import table_metrics, validate_metrics_config
 from ..precommit import run_precommit_validators, validate_precommit_config
-from ..concurrency import guarded_commit, start_heartbeat, txn_start_marker
+from ..concurrency import CommitUndoneError, guarded_commit, start_heartbeat, txn_start_marker
 from ..keygen import stamp_keys
 from ..local_rel import local_df
 from ..metadata import FileSystemView, WriteStat, make_commit_metadata
@@ -1023,6 +1024,147 @@ def _claim_write_instant(table, action, operation, instant_time=None):
     raise last
 
 
+# --------------------------------------------------------------------------
+# Write-instant lifecycle: open (claim + inflight) → commit, or abort
+# --------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class CommitHooks:
+    """Which lifecycle steps fire for one kind of data-writing commit.
+    ``owns_data``: the abort removes ``data/<instant>/`` and the key-index
+    delta. ``pending_only``: the abort keeps a COMPLETED file, so catching
+    ``BaseException`` never erases a commit an interrupt landed after."""
+
+    validators: bool
+    callback: bool
+    metrics: bool
+    services: bool
+    owns_data: bool
+    pending_only: bool = False
+    catch: type = Exception
+
+
+# The reference fires validators, callback and metrics on user writes
+# only (``commitStats``, ``AbstractHoodieWriteClient.java:209-213``) and
+# runs inline services from its post-commit hook (``:833,1002``).
+COMMIT_HOOKS = {
+    #       validators callback metrics services owns_data pending_only catch
+    "write": CommitHooks(True, True, True, True, True),
+    "replace": CommitHooks(True, True, True, True, True),
+    "bootstrap": CommitHooks(False, True, False, False, False),
+    "ddl": CommitHooks(False, False, False, False, False, True, BaseException),
+    "cluster": CommitHooks(False, False, False, False, True),
+}
+
+
+class WriteInstant:
+    """One data-writing commit, from its inflight instant to commit or
+    abort. Use as a context manager around the work that fills the
+    instant: ``commit`` runs validators → ``guarded_commit`` → heartbeat
+    stop → callback → metrics → post-commit services, and an exception
+    escaping the block before the commit point aborts the instant. The
+    kind's ``COMMIT_HOOKS`` row decides which steps fire."""
+
+    def __init__(self, table, kind, action, instant, hb=None, started=None,
+                 keep_plan=False, owns_claim=False):
+        self.table, self.action, self.instant = table, action, instant
+        self.hooks = COMMIT_HOOKS[kind]
+        self.started = time.time() if started is None else started
+        self.keep_plan = keep_plan  # a failed clustering keeps its plan
+        self.owns_claim = owns_claim
+        self._hb = hb
+        self._pending = True
+
+    @classmethod
+    def open(cls, table, kind, action, operation, instant_time=None, started=None):
+        """Claim a fresh instant (or the caller-supplied one) and make it
+        inflight, removing what the claim created if that fails."""
+        instant, hb = _claim_write_instant(table, action, operation, instant_time)
+        wi = cls(table, kind, action, instant, hb, started,
+                 owns_claim=instant_time is None)
+        try:
+            table.timeline.transition_to_inflight(instant, action)
+        except BaseException:
+            # stop the refresher first: it keeps the heartbeat fresh,
+            # making a half-created pending instant unsweepable
+            wi._stop_heartbeat()
+            wi._drop_pending()
+            raise
+        return wi
+
+    def __enter__(self) -> "WriteInstant":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        self.abort(exc)
+
+    def _stop_heartbeat(self) -> None:
+        if self._hb is not None:
+            self._hb.stop()
+            self._hb = None
+
+    def _drop_pending(self) -> None:
+        """Remove OUR requested/inflight files and, when provably ours,
+        the claim: a caller-supplied instant never ran claim_timestamp, so
+        its claim file is a RIVAL's and deleting it would reopen the
+        millisecond to a third writer (code-review r7)."""
+        self.table.timeline.delete_pending_instant_files(self.instant, self.action)
+        if self.owns_claim:
+            self.table.fs.delete(f"{self.table.timeline.dir}/{self.instant}.claim")
+
+    def commit(self, md: dict, txn_start: str | None = None) -> str:
+        table, instant, action, hooks = self.table, self.instant, self.action, self.hooks
+        if hooks.validators:
+            run_precommit_validators(table, instant, action, md)
+        guarded_commit(table, instant, action, md, txn_start)
+        # durable from here on: a failure below must NOT erase committed
+        # data, so the abort becomes a no-op and the error surfaces as-is
+        self._pending = False
+        self._stop_heartbeat()
+        if hooks.callback:
+            fire_commit_callback(table, instant, action, md)
+        if hooks.metrics:
+            table_metrics(table).update_commit_metrics(
+                action, time.time() - self.started, md
+            )
+        if hooks.services:
+            table.run_post_commit_services()
+        return instant
+
+    def abort(self, exc: BaseException | None) -> None:
+        """Undo a write that failed before its commit point: its instant
+        files, ``data/<instant>/`` and key-index delta go, and the
+        heartbeat stops. A failure outside the kind's ``catch`` class (a
+        crash) only stops the heartbeat. No-op once committed."""
+        if not self._pending:
+            return
+        self._pending = False
+        try:
+            if not isinstance(exc, self.hooks.catch):
+                return
+            table, instant = self.table, self.instant
+            if self.keep_plan:
+                table.timeline.revert_to_requested(instant, self.action)
+            elif self.hooks.pending_only:
+                self._drop_pending()
+            else:
+                table.timeline.delete_instant_files(instant, self.action)
+            if self.hooks.owns_data:
+                from . import key_index
+
+                table.fs.delete(table.instant_data_path(instant), recursive=True)
+                # CommitUndoneError means the instant was momentarily
+                # COMPLETED (guarded_commit's post-write undo) — a rival
+                # index compaction could have folded it into a base in
+                # that window, so the folded check must run (advice r6)
+                key_index.drop_instant(
+                    table, instant, folded_possible=isinstance(exc, CommitUndoneError)
+                )
+        finally:
+            self._stop_heartbeat()
+
+
 def run_batch_write(
     table,
     df: DataFrame,
@@ -1032,14 +1174,15 @@ def run_batch_write(
     instant_time: str | None = None,
     pre_tagged: bool = False,
 ) -> str:
-    """``pre_tagged=True``: the incoming frame's ``_hoodie_file_id``
+    """upsert / insert / bulk_insert / delete, COW and MOR.
+
+    ``pre_tagged=True``: the incoming frame's ``_hoodie_file_id``
     column is trusted as the record's current location, skipping the
     index-tagging join. Only safe when the rows were just read from this
     table (UPDATE/DELETE ... WHERE — read→modify→write in one call under
     the single-writer assumption); the reference's analogue is the
     tagged ``currentLocation`` a ``HoodieRecord`` keeps when the caller
     supplies already-located records."""
-    """upsert / insert / bulk_insert / delete, COW and MOR."""
     cfg = table.cfg
     cfg.validate_virtual_keys()
     validate_callback_config(cfg)  # fail fast, never post-commit
@@ -1122,351 +1265,214 @@ def run_batch_write(
         else "commit"
     )
     txn_start = txn_start_marker(table, view)
-    instant, hb = _claim_write_instant(table, action, operation, instant_time)
+    tagged = incoming  # rebound to the persisted tag frame below
     try:
-        table.timeline.transition_to_inflight(instant, action)
-    except BaseException:
-        # a failure HERE is outside the main try/finally below: stop the
-        # refresh thread (else it keeps the heartbeat file perpetually
-        # fresh, making any half-created pending instant unsweepable)
-        # and remove OUR pending files (never COMPLETED — it cannot
-        # exist for our fresh claim, and touching it would be the
-        # timestamp-collision data-loss bug all over again)
-        if hb is not None:
-            hb.stop()
-        table.timeline.delete_pending_instant_files(instant, action)
-        if instant_time is None:
-            # the claim is provably OURS here (claim_timestamp returned
-            # True) — delete it directly instead of stranding it for the
-            # age-gated orphan sweep. NEVER when the instant was
-            # caller-supplied: claim_timestamp never ran, so a claim
-            # file at this timestamp belongs to a RIVAL and deleting it
-            # would reopen the millisecond to a third writer
-            # (code-review r7)
-            table.fs.delete(f"{table.timeline.dir}/{instant}.claim")
-        raise
-    committed = False
-    try:
-        if operation == WriteOperation.BULK_INSERT:
-            # fast path (row-writer analogue,
-            # HoodieDatasetBulkInsertHelper.java:70-133): no index lookup,
-            # no small-file packing — one range shuffle + local sort,
-            # file groups derived from the output partition id
-            out = _bulk_insert_df(table, incoming, data_cols, instant)
-            write_instant_files(table, out, instant, 0, pre_partitioned=True)
-            timer.mark("bulk_write")
-            stats = collect_write_stats(table, instant)
-            timer.mark("stats")
-            if key_index.enabled(cfg):
-                key_index.append_from_written(table, instant)
-            md = make_commit_metadata(
-                operation.value, out.schema.json(), stats, extra=extra
-            )
-            run_precommit_validators(table, instant, action, md)
-            guarded_commit(table, instant, action, md, txn_start)
-            committed = True
-            fire_commit_callback(table, instant, action, md)
-            table_metrics(table).update_commit_metrics(
-                action, time.time() - _write_t0, md
-            )
-            table.run_post_commit_services()
-            return instant
+        with WriteInstant.open(table, "write", action, operation, instant_time, _write_t0) as wi:
+            instant = wi.instant
+            if operation == WriteOperation.BULK_INSERT:
+                # fast path (row-writer analogue,
+                # HoodieDatasetBulkInsertHelper.java:70-133): no index lookup,
+                # no small-file packing — one range shuffle + local sort,
+                # file groups derived from the output partition id
+                out = _bulk_insert_df(table, incoming, data_cols, instant)
+                write_instant_files(table, out, instant, 0, pre_partitioned=True)
+                timer.mark("bulk_write")
+                stats = collect_write_stats(table, instant)
+                timer.mark("stats")
+                if key_index.enabled(cfg):
+                    key_index.append_from_written(table, instant)
+                md = make_commit_metadata(
+                    operation.value, out.schema.json(), stats, extra=extra
+                )
+                return wi.commit(md, txn_start)
 
-        from pyspark import StorageLevel
+            from pyspark import StorageLevel
 
-        # ---- index tagging ------------------------------------------------
-        if pre_tagged:
-            tagged = incoming
-        elif operation in (WriteOperation.UPSERT, WriteOperation.DELETE) or (
-            operation == WriteOperation.INSERT and cfg.insert_drop_dups
-        ):
-            # A table with few partitions gains nothing from discovering
-            # the incoming batch's affected partitions (a Spark job + a
-            # cache pass over `incoming` to avoid re-evaluating keygen +
-            # preCombine): index over every partition and let only the
-            # `tagged` cache materialize the pipeline, once. Tables with
-            # many partitions (the 100 TB shape) keep the pruning join.
-            few_parts = len(view.partitions()) <= 64
-            from .bloom import enabled as _bloom_filters_on
-
-            if (
-                not few_parts
-                or key_index.enabled(cfg)
-                or _bloom_filters_on(cfg)
+            # ---- index tagging ------------------------------------------------
+            if pre_tagged:
+                tagged = incoming
+            elif operation in (WriteOperation.UPSERT, WriteOperation.DELETE) or (
+                operation == WriteOperation.INSERT and cfg.insert_drop_dups
             ):
-                # the incoming pipeline (keygen + align + preCombine
-                # window) is evaluated more than once downstream: by the
-                # affected-partitions collect (many-partition tables),
-                # by the RECORD_INDEX tag's key semi-join + tag join
-                # (code-review r7), or by the bloom membership stage's
-                # range agg + distinct-keys pair job (review r8) — cache
-                # it so that evaluation isn't repeated
-                incoming = incoming.persist(StorageLevel.MEMORY_AND_DISK)
-            tagged = tag_location(table, view, incoming, all_partitions=few_parts)
-            if operation == WriteOperation.INSERT and cfg.insert_drop_dups:
-                # INSERT_DROP_DUPS: drop records whose key already exists
-                tagged = tagged.filter(F.col(FILE_ID_COL).isNull())
-        else:
-            tagged = incoming.withColumn(FILE_ID_COL, F.lit(None).cast("string"))
+                # A table with few partitions gains nothing from discovering
+                # the incoming batch's affected partitions (a Spark job + a
+                # cache pass over `incoming` to avoid re-evaluating keygen +
+                # preCombine): index over every partition and let only the
+                # `tagged` cache materialize the pipeline, once. Tables with
+                # many partitions (the 100 TB shape) keep the pruning join.
+                few_parts = len(view.partitions()) <= 64
+                from .bloom import enabled as _bloom_filters_on
 
-        # the tagged frame feeds ≥3 actions (profile collects + the write);
-        # persist it like the reference persists its input RDD
-        # (BaseSparkCommitActionExecutor.java:150-151)
-        tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
-        updates = tagged.filter(F.col(FILE_ID_COL).isNotNull())
-        inserts = tagged.filter(F.col(FILE_ID_COL).isNull())
-        timer.mark("tag_plan")
-
-        # ---- workload profile (ONE job, like buildProfile:
-        # BaseSparkCommitActionExecutor.java:182-214): per-(partition,
-        # file_id) counts give the insert bucket sizes, the touched
-        # update groups, and the MOR log fids without extra collects.
-        # Driver memory bound: one tiny row per TOUCHED (partition,
-        # file_id) — the same shape as the reference's countByKey. Worst
-        # case (a batch touching every group of a 100 TB / ~875k-group
-        # table) is ~tens of MB; batches are normally far narrower, and
-        # a full-table rewrite belongs to bulk_insert/insert_overwrite
-        # which skip tagging entirely.
-        marker = (
-            F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False))
-            if DELETE_MARKER_COL in tagged.columns
-            else F.lit(False)
-        )
-        profile = (
-            tagged.groupBy(PARTITION_PATH_COL, FILE_ID_COL)
-            # max(marker) rides the same shuffle for free: per-group
-            # tombstone presence, recorded on MOR log stats below so
-            # readers can skip the delete-block merge pass when no log
-            # of a slice carries a delete (optimization r8)
-            .agg(F.count(F.lit(1)).alias("count"), F.max(marker).alias("__tomb"))
-            .collect()
-        )
-        timer.mark("profile")
-        insert_counts = [(r[0], r[2]) for r in profile if r[1] is None]
-        update_groups = {(r[0], r[1]) for r in profile if r[1] is not None}
-        group_tombstones = {
-            (r[0], r[1]): bool(r[3]) for r in profile if r[1] is not None
-        }
-
-        # Updates aimed at file groups frozen in a pending clustering
-        # plan (``BaseSparkCommitActionExecutor.clusteringHandleUpdate``,
-        # :117-143): REJECT raises (SparkRejectUpdateStrategy — the
-        # executed clustering would silently drop the update otherwise);
-        # ALLOW_ROLLBACK instead rolls back exactly the pending
-        # clustering plans that name a conflicting group, then proceeds
-        # (SparkAllowUpdateStrategy + isRollbackPendingClustering).
-        if update_groups:
-            from .clustering import pending_clustering_plans
-
-            plans = pending_clustering_plans(table)
-            conflict_instants = {
-                ts for ts, groups in plans.items() if groups & update_groups
-            }
-            if conflict_instants:
-                strategy = getattr(
-                    table.cfg, "clustering_updates_strategy", "REJECT"
-                ).upper()
-                if strategy in ("ALLOW_ROLLBACK", "ALLOW", "ROLLBACK"):
-                    from .services import rollback_instant
-
-                    for ts in sorted(conflict_instants):
-                        rollback_instant(table, ts)
-                else:
-                    conflict = set().union(
-                        *(plans[ts] for ts in conflict_instants)
-                    ) & update_groups
-                    raise ValueError(
-                        "update rejected: file groups are under pending clustering: "
-                        + ", ".join(f"{pp}/{fid}" for pp, fid in sorted(conflict)[:5])
-                    )
-        if is_delete:
-            inserts = inserts.limit(0)  # deleting absent keys is a no-op
-            insert_counts = []
-
-        mor_delta = action == "deltacommit"
-        pack = operation in (WriteOperation.UPSERT, WriteOperation.INSERT) and not mor_delta
-        assigned_inserts, packed_fids = assign_inserts(
-            table, view, inserts, pack, insert_counts=insert_counts
-        )
-        timer.mark("assign")
-
-        log_fids: set[tuple[str, str]] = set()
-        if mor_delta:
-            # MOR: updates/deletes become delta ("log") rows; inserts open
-            # new base file groups in the same deltacommit.
-            log_rows = _stamp_meta(updates, instant)
-            base_rows = _stamp_meta(assigned_inserts, instant)
-            out = _finalize(log_rows, data_cols).unionByName(
-                _finalize(base_rows, data_cols)
-            )
-            log_fids = set(update_groups)
-            n_groups = len({fid for _, fid in log_fids}) + 8
-            write_instant_files(table, out, instant, n_groups)
-        else:
-            # COW: rewrite every affected file group (updates + packed
-            # inserts), merging with stored rows; fresh groups come along
-            # in the same pass with an empty old side.
-            touched = set(update_groups)
-            for sl in view.latest_file_slices():
-                if (sl.partition, sl.file_id) in packed_fids:
-                    touched.add((sl.partition, sl.file_id))
-            old_slices = [
-                s
-                for s in view.latest_file_slices()
-                if (s.partition, s.file_id) in touched
-            ]
-            all_new = (
-                assigned_inserts
-                if operation in (WriteOperation.INSERT, WriteOperation.BULK_INSERT)
-                else updates.unionByName(assigned_inserts, allowMissingColumns=True)
-            )
-
-            if old_slices:
-                n_parts = max(len(touched), 1) + 8
-                from ..sources.read import _merge_slices, slices_to_df
-
-                if any(s.logs for s in old_slices):
-                    # a MOR table routed through the COW rewrite path
-                    # (MERGE INTO / requires_stored_merge payloads): the
-                    # stored side must be the MERGED view of the touched
-                    # slices — reading base files alone would silently
-                    # drop uncompacted deltacommit updates/deletes when
-                    # the new base supersedes the slice (the logs detach)
-                    old = _merge_slices(table, old_slices)
-                    old = old.filter(
-                        ~F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False))
-                    )
-                else:
-                    old = slices_to_df(table, old_slices)
-                if operation in (WriteOperation.INSERT, WriteOperation.BULK_INSERT):
-                    # insert never consults the index: duplicates of
-                    # existing keys are APPENDED, not merged — i.e. the
-                    # rewrite needs NO reconciliation at all (reference
-                    # create-handle writes every row; stored rows are
-                    # copied over unchanged). Say that directly
-                    # (optimization r9): stored rows of the touched
-                    # groups stream through from the scan byte-identical
-                    # (original commit time / seqno) and incoming rows
-                    # are stamped and appended. Replaces the r8 shape
-                    # that salted keys through the merge kernel purely
-                    # to defeat its per-key reconcile — the union +
-                    # repartition + per-key window over every stored row
-                    # of the touched groups, plus the uuid salt/strip,
-                    # all disappear (guide §2.4: remove shuffles
-                    # outright).
-                    passthrough = _project_write_shape(
-                        old, data_cols, col_types
-                    )
-                    live = _pure_insert_frame(
-                        all_new, payload, data_cols, col_types
-                    )
-                    appended = _project_write_shape(
-                        _stamp_meta(live, instant), data_cols, col_types
-                    ).repartition(
-                        max(1, len(packed_fids)) + 8,
-                        F.col(FILE_ID_COL), F.col(PARTITION_PATH_COL),
-                    )
-                    merged = passthrough.unionByName(appended)
-                elif (
-                    is_delete
-                    and payload.name == "empty"
-                    and sum(r[2] for r in profile if r[1] is not None) * 120
-                    <= int(getattr(cfg, "delete_antijoin_broadcast_budget_bytes", 64 << 20))
+                if (
+                    not few_parts
+                    or key_index.enabled(cfg)
+                    or _bloom_filters_on(cfg)
                 ):
-                    # Pure COW delete (EmptyPayload: every incoming row a
-                    # tombstone, kernel output = stored rows with no
-                    # incoming match): say that directly as a broadcast
-                    # LEFT ANTI join instead of routing (old ∪ keys)
-                    # through the kernel's union + repartition + sort-
-                    # aggregate. Survivors stream straight from the base-
-                    # file scan, byte-identical (original commit time /
-                    # seqno — the kernel's take_new=false path), and the
-                    # stored side never shuffles at all (guide §3.1).
-                    # Gated on the delete-key count from the profile we
-                    # already hold (~120 B/key framed) so a huge delete
-                    # batch keeps the shuffle kernel rather than building
-                    # an oversized broadcast; at 100 TB the delete batch
-                    # is the small side by construction. Scan tasks are
-                    # file-aligned, so the output stays grouped by file
-                    # group for the pre-partitioned writer.
-                    jk = [FILE_ID_COL, PARTITION_PATH_COL, RECORD_KEY_COL]
-                    merged = old.join(
-                        F.broadcast(updates.select(*jk)), jk, "left_anti"
-                    )
-                else:
-                    upd_for_merge = updates
-                    if not needs_combine:
-                        # the reference's HoodieMergeHandle collapses
-                        # duplicate update keys via its keyToNewRecords
-                        # hash map even with preCombine disabled — mirror
-                        # that so the merge groups hold ≤1 incoming row.
-                        # Inserts keep duplicates (create-handle path
-                        # writes every row).
-                        upd_for_merge = precombine_dedup(
-                            updates, payload, global_idx
-                        )
-                        all_new = upd_for_merge.unionByName(
-                            assigned_inserts, allowMissingColumns=True
-                        )
-                    n_upd = sum(r[2] for r in profile if r[1] is not None)
-                    if (
-                        not any(s.logs for s in old_slices)
-                        and n_upd * _est_merge_row_bytes(data_cols, col_types)
-                        <= int(getattr(cfg, "upsert_broadcast_budget_bytes", 64 << 20))
-                    ):
-                        # Trickle-upsert fast path (optimization r9,
-                        # guide §3.1): the incoming batch fits the
-                        # broadcast budget, so reconcile via stored LEFT
-                        # JOIN broadcast(incoming winners) — the stored
-                        # side streams from the base-file scan with ZERO
-                        # shuffle (see broadcast_merge_stored for the
-                        # equivalence contract). Gated off when the
-                        # touched slices carry logs: a log tombstone can
-                        # remove a tagged key from the merged stored
-                        # view, and such an unmatched incoming row must
-                        # re-insert via the kernel's new-only path.
-                        # Index tagging against live base files makes
-                        # every update key provably present in `old`
-                        # otherwise, and inserts provably absent — so
-                        # updates reconcile in the join and inserts
-                        # append without one.
-                        from pyspark.sql import Window
+                    # the incoming pipeline (keygen + align + preCombine
+                    # window) is evaluated more than once downstream: by the
+                    # affected-partitions collect (many-partition tables),
+                    # by the RECORD_INDEX tag's key semi-join + tag join
+                    # (code-review r7), or by the bloom membership stage's
+                    # range agg + distinct-keys pair job (review r8) — cache
+                    # it so that evaluation isn't repeated
+                    incoming = incoming.persist(StorageLevel.MEMORY_AND_DISK)
+                tagged = tag_location(table, view, incoming, all_partitions=few_parts)
+                if operation == WriteOperation.INSERT and cfg.insert_drop_dups:
+                    # INSERT_DROP_DUPS: drop records whose key already exists
+                    tagged = tagged.filter(F.col(FILE_ID_COL).isNull())
+            else:
+                tagged = incoming.withColumn(FILE_ID_COL, F.lit(None).cast("string"))
 
-                        jk = [FILE_ID_COL, PARTITION_PATH_COL, RECORD_KEY_COL]
-                        ord_col = (
-                            F.col(ARRIVAL_ORDER_COL).desc_nulls_last()
-                            if ARRIVAL_ORDER_COL in upd_for_merge.columns
-                            else F.lit(1)
+            # the tagged frame feeds ≥3 actions (profile collects + the write);
+            # persist it like the reference persists its input RDD
+            # (BaseSparkCommitActionExecutor.java:150-151)
+            tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
+            updates = tagged.filter(F.col(FILE_ID_COL).isNotNull())
+            inserts = tagged.filter(F.col(FILE_ID_COL).isNull())
+            timer.mark("tag_plan")
+
+            # ---- workload profile (ONE job, like buildProfile:
+            # BaseSparkCommitActionExecutor.java:182-214): per-(partition,
+            # file_id) counts give the insert bucket sizes, the touched
+            # update groups, and the MOR log fids without extra collects.
+            # Driver memory bound: one tiny row per TOUCHED (partition,
+            # file_id) — the same shape as the reference's countByKey. Worst
+            # case (a batch touching every group of a 100 TB / ~875k-group
+            # table) is ~tens of MB; batches are normally far narrower, and
+            # a full-table rewrite belongs to bulk_insert/insert_overwrite
+            # which skip tagging entirely.
+            marker = (
+                F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False))
+                if DELETE_MARKER_COL in tagged.columns
+                else F.lit(False)
+            )
+            profile = (
+                tagged.groupBy(PARTITION_PATH_COL, FILE_ID_COL)
+                # max(marker) rides the same shuffle for free: per-group
+                # tombstone presence, recorded on MOR log stats below so
+                # readers can skip the delete-block merge pass when no log
+                # of a slice carries a delete (optimization r8)
+                .agg(F.count(F.lit(1)).alias("count"), F.max(marker).alias("__tomb"))
+                .collect()
+            )
+            timer.mark("profile")
+            insert_counts = [(r[0], r[2]) for r in profile if r[1] is None]
+            update_groups = {(r[0], r[1]) for r in profile if r[1] is not None}
+            group_tombstones = {
+                (r[0], r[1]): bool(r[3]) for r in profile if r[1] is not None
+            }
+
+            # Updates aimed at file groups frozen in a pending clustering
+            # plan (``BaseSparkCommitActionExecutor.clusteringHandleUpdate``,
+            # :117-143): REJECT raises (SparkRejectUpdateStrategy — the
+            # executed clustering would silently drop the update otherwise);
+            # ALLOW_ROLLBACK instead rolls back exactly the pending
+            # clustering plans that name a conflicting group, then proceeds
+            # (SparkAllowUpdateStrategy + isRollbackPendingClustering).
+            if update_groups:
+                from .clustering import pending_clustering_plans
+
+                plans = pending_clustering_plans(table)
+                conflict_instants = {
+                    ts for ts, groups in plans.items() if groups & update_groups
+                }
+                if conflict_instants:
+                    strategy = getattr(
+                        table.cfg, "clustering_updates_strategy", "REJECT"
+                    ).upper()
+                    if strategy in ("ALLOW_ROLLBACK", "ALLOW", "ROLLBACK"):
+                        from .services import rollback_instant
+
+                        for ts in sorted(conflict_instants):
+                            rollback_instant(table, ts)
+                    else:
+                        conflict = set().union(
+                            *(plans[ts] for ts in conflict_instants)
+                        ) & update_groups
+                        raise ValueError(
+                            "update rejected: file groups are under pending clustering: "
+                            + ", ".join(f"{pp}/{fid}" for pp, fid in sorted(conflict)[:5])
                         )
-                        # one winner per (group, key) — the kernel's
-                        # max_by(__ord) map-put-last pick (also collapses
-                        # the identical copies a duplicate-stored-key tag
-                        # join multiplies out)
-                        wk = Window.partitionBy(*jk).orderBy(ord_col)
-                        bc = (
-                            upd_for_merge.withColumn(
-                                "__rnk", F.row_number().over(wk)
-                            )
-                            .filter(F.col("__rnk") == 1)
-                            .drop("__rnk")
+            if is_delete:
+                inserts = inserts.limit(0)  # deleting absent keys is a no-op
+                insert_counts = []
+
+            mor_delta = action == "deltacommit"
+            pack = operation in (WriteOperation.UPSERT, WriteOperation.INSERT) and not mor_delta
+            assigned_inserts, packed_fids = assign_inserts(
+                table, view, inserts, pack, insert_counts=insert_counts
+            )
+            timer.mark("assign")
+
+            log_fids: set[tuple[str, str]] = set()
+            if mor_delta:
+                # MOR: updates/deletes become delta ("log") rows; inserts open
+                # new base file groups in the same deltacommit.
+                log_rows = _stamp_meta(updates, instant)
+                base_rows = _stamp_meta(assigned_inserts, instant)
+                out = _finalize(log_rows, data_cols).unionByName(
+                    _finalize(base_rows, data_cols)
+                )
+                log_fids = set(update_groups)
+                n_groups = len({fid for _, fid in log_fids}) + 8
+                write_instant_files(table, out, instant, n_groups)
+            else:
+                # COW: rewrite every affected file group (updates + packed
+                # inserts), merging with stored rows; fresh groups come along
+                # in the same pass with an empty old side.
+                touched = set(update_groups)
+                for sl in view.latest_file_slices():
+                    if (sl.partition, sl.file_id) in packed_fids:
+                        touched.add((sl.partition, sl.file_id))
+                old_slices = [
+                    s
+                    for s in view.latest_file_slices()
+                    if (s.partition, s.file_id) in touched
+                ]
+                all_new = (
+                    assigned_inserts
+                    if operation in (WriteOperation.INSERT, WriteOperation.BULK_INSERT)
+                    else updates.unionByName(assigned_inserts, allowMissingColumns=True)
+                )
+
+                if old_slices:
+                    n_parts = max(len(touched), 1) + 8
+                    from ..sources.read import _merge_slices, slices_to_df
+
+                    if any(s.logs for s in old_slices):
+                        # a MOR table routed through the COW rewrite path
+                        # (MERGE INTO / requires_stored_merge payloads): the
+                        # stored side must be the MERGED view of the touched
+                        # slices — reading base files alone would silently
+                        # drop uncompacted deltacommit updates/deletes when
+                        # the new base supersedes the slice (the logs detach)
+                        old = _merge_slices(table, old_slices)
+                        old = old.filter(
+                            ~F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False))
                         )
-                        merged = broadcast_merge_stored(
-                            old, bc, data_cols, col_types, payload, instant
+                    else:
+                        old = slices_to_df(table, old_slices)
+                    if operation in (WriteOperation.INSERT, WriteOperation.BULK_INSERT):
+                        # insert never consults the index: duplicates of
+                        # existing keys are APPENDED, not merged — i.e. the
+                        # rewrite needs NO reconciliation at all (reference
+                        # create-handle writes every row; stored rows are
+                        # copied over unchanged). Say that directly
+                        # (optimization r9): stored rows of the touched
+                        # groups stream through from the scan byte-identical
+                        # (original commit time / seqno) and incoming rows
+                        # are stamped and appended. Replaces the r8 shape
+                        # that salted keys through the merge kernel purely
+                        # to defeat its per-key reconcile — the union +
+                        # repartition + per-key window over every stored row
+                        # of the touched groups, plus the uuid salt/strip,
+                        # all disappear (guide §2.4: remove shuffles
+                        # outright).
+                        passthrough = _project_write_shape(
+                            old, data_cols, col_types
                         )
-                        ins_src = assigned_inserts
-                        if not needs_combine:
-                            # kernel parity: duplicate insert keys headed
-                            # to the same group collapse by arrival order
-                            wi = Window.partitionBy(*jk).orderBy(ord_col)
-                            ins_src = (
-                                assigned_inserts.withColumn(
-                                    "__rnk", F.row_number().over(wi)
-                                )
-                                .filter(F.col("__rnk") == 1)
-                                .drop("__rnk")
-                            )
                         live = _pure_insert_frame(
-                            ins_src, payload, data_cols, col_types
+                            all_new, payload, data_cols, col_types
                         )
                         appended = _project_write_shape(
                             _stamp_meta(live, instant), data_cols, col_types
@@ -1474,112 +1480,190 @@ def run_batch_write(
                             max(1, len(packed_fids)) + 8,
                             F.col(FILE_ID_COL), F.col(PARTITION_PATH_COL),
                         )
-                        merged = merged.unionByName(appended)
-                    else:
-                        merged = merge_stored_and_incoming(
-                            old, all_new, data_cols, col_types, payload, instant,
-                            num_partitions=n_parts,
+                        merged = passthrough.unionByName(appended)
+                    elif (
+                        is_delete
+                        and payload.name == "empty"
+                        and sum(r[2] for r in profile if r[1] is not None) * 120
+                        <= int(getattr(cfg, "delete_antijoin_broadcast_budget_bytes", 64 << 20))
+                    ):
+                        # Pure COW delete (EmptyPayload: every incoming row a
+                        # tombstone, kernel output = stored rows with no
+                        # incoming match): say that directly as a broadcast
+                        # LEFT ANTI join instead of routing (old ∪ keys)
+                        # through the kernel's union + repartition + sort-
+                        # aggregate. Survivors stream straight from the base-
+                        # file scan, byte-identical (original commit time /
+                        # seqno — the kernel's take_new=false path), and the
+                        # stored side never shuffles at all (guide §3.1).
+                        # Gated on the delete-key count from the profile we
+                        # already hold (~120 B/key framed) so a huge delete
+                        # batch keeps the shuffle kernel rather than building
+                        # an oversized broadcast; at 100 TB the delete batch
+                        # is the small side by construction. Scan tasks are
+                        # file-aligned, so the output stays grouped by file
+                        # group for the pre-partitioned writer.
+                        jk = [FILE_ID_COL, PARTITION_PATH_COL, RECORD_KEY_COL]
+                        merged = old.join(
+                            F.broadcast(updates.select(*jk)), jk, "left_anti"
                         )
-                out = _finalize(merged, data_cols)
-                timer.mark("merge_plan")
-                write_instant_files(
-                    table, out, instant, n_parts, pre_partitioned=True,
-                )
-            else:
-                # merge-kernel bypass (no stored side): the payload
-                # must still veto pure inserts — e.g. MERGE INTO with
-                # no WHEN NOT MATCHED drops unmatched source rows.
-                live = _pure_insert_frame(all_new, payload, data_cols, col_types)
-                merged = _stamp_meta(live, instant)
-                out = _finalize(merged, data_cols)
-                write_instant_files(table, out, instant, max(len(touched), 1) + 8)
+                    else:
+                        upd_for_merge = updates
+                        if not needs_combine:
+                            # the reference's HoodieMergeHandle collapses
+                            # duplicate update keys via its keyToNewRecords
+                            # hash map even with preCombine disabled — mirror
+                            # that so the merge groups hold ≤1 incoming row.
+                            # Inserts keep duplicates (create-handle path
+                            # writes every row).
+                            upd_for_merge = precombine_dedup(
+                                updates, payload, global_idx
+                            )
+                            all_new = upd_for_merge.unionByName(
+                                assigned_inserts, allowMissingColumns=True
+                            )
+                        n_upd = sum(r[2] for r in profile if r[1] is not None)
+                        if (
+                            not any(s.logs for s in old_slices)
+                            and n_upd * _est_merge_row_bytes(data_cols, col_types)
+                            <= int(getattr(cfg, "upsert_broadcast_budget_bytes", 64 << 20))
+                        ):
+                            # Trickle-upsert fast path (optimization r9,
+                            # guide §3.1): the incoming batch fits the
+                            # broadcast budget, so reconcile via stored LEFT
+                            # JOIN broadcast(incoming winners) — the stored
+                            # side streams from the base-file scan with ZERO
+                            # shuffle (see broadcast_merge_stored for the
+                            # equivalence contract). Gated off when the
+                            # touched slices carry logs: a log tombstone can
+                            # remove a tagged key from the merged stored
+                            # view, and such an unmatched incoming row must
+                            # re-insert via the kernel's new-only path.
+                            # Index tagging against live base files makes
+                            # every update key provably present in `old`
+                            # otherwise, and inserts provably absent — so
+                            # updates reconcile in the join and inserts
+                            # append without one.
+                            from pyspark.sql import Window
 
-        timer.mark("write")
-        stats = collect_write_stats(table, instant, log_fids)
-        if mor_delta:
-            # stamp tombstone presence on the log stats from the profile
-            # aggregation (same frame the log rows were written from) —
-            # the MOR merge's delete-block pass is skipped when every
-            # log of a slice records False
-            for st in stats:
-                if st.log:
-                    st.tombstones = group_tombstones.get(
-                        (st.partition, st.file_id)
+                            jk = [FILE_ID_COL, PARTITION_PATH_COL, RECORD_KEY_COL]
+                            ord_col = (
+                                F.col(ARRIVAL_ORDER_COL).desc_nulls_last()
+                                if ARRIVAL_ORDER_COL in upd_for_merge.columns
+                                else F.lit(1)
+                            )
+                            # one winner per (group, key) — the kernel's
+                            # max_by(__ord) map-put-last pick (also collapses
+                            # the identical copies a duplicate-stored-key tag
+                            # join multiplies out)
+                            wk = Window.partitionBy(*jk).orderBy(ord_col)
+                            bc = (
+                                upd_for_merge.withColumn(
+                                    "__rnk", F.row_number().over(wk)
+                                )
+                                .filter(F.col("__rnk") == 1)
+                                .drop("__rnk")
+                            )
+                            merged = broadcast_merge_stored(
+                                old, bc, data_cols, col_types, payload, instant
+                            )
+                            ins_src = assigned_inserts
+                            if not needs_combine:
+                                # kernel parity: duplicate insert keys headed
+                                # to the same group collapse by arrival order
+                                w_rank = Window.partitionBy(*jk).orderBy(ord_col)
+                                ins_src = (
+                                    assigned_inserts.withColumn(
+                                        "__rnk", F.row_number().over(w_rank)
+                                    )
+                                    .filter(F.col("__rnk") == 1)
+                                    .drop("__rnk")
+                                )
+                            live = _pure_insert_frame(
+                                ins_src, payload, data_cols, col_types
+                            )
+                            appended = _project_write_shape(
+                                _stamp_meta(live, instant), data_cols, col_types
+                            ).repartition(
+                                max(1, len(packed_fids)) + 8,
+                                F.col(FILE_ID_COL), F.col(PARTITION_PATH_COL),
+                            )
+                            merged = merged.unionByName(appended)
+                        else:
+                            merged = merge_stored_and_incoming(
+                                old, all_new, data_cols, col_types, payload, instant,
+                                num_partitions=n_parts,
+                            )
+                    out = _finalize(merged, data_cols)
+                    timer.mark("merge_plan")
+                    write_instant_files(
+                        table, out, instant, n_parts, pre_partitioned=True,
                     )
-        timer.mark("stats")
-        if key_index.enabled(cfg):
-            # COW rewrites OMIT deleted rows, so the written files carry
-            # no trace of a delete — emit index tombstones from the
-            # tagged delete rows (MOR deltacommits write marker rows that
-            # append_from_written picks up by itself)
-            tomb = None
-            if not mor_delta and DELETE_MARKER_COL in tagged.columns:
-                tomb = tagged.filter(
-                    F.col(FILE_ID_COL).isNotNull()
-                    & F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False))
-                ).select(RECORD_KEY_COL, PARTITION_PATH_COL, FILE_ID_COL)
-            if table.fs.exists(table.instant_data_path(instant)):
-                key_index.append_from_written(table, instant, tombstones=tomb)
-            elif tomb is not None:
-                # every affected group came out empty: no data files were
-                # written, but the deletes must still tombstone the index
-                key_index.append_delta(
-                    table,
-                    instant,
-                    tomb.withColumn(key_index.DELETED_COL, F.lit(True)),
-                )
-        if not mor_delta:
-            # a rewritten file group can come out EMPTY (every record
-            # deleted): Spark's sink writes no file, but the commit must
-            # still supersede the old slice — record a zero-row version
-            # (reference analogue: HoodieMergeHandle always produces a
-            # file, even with 0 records)
-            seen = {(s.partition, s.file_id) for s in stats}
-            for pp, fid in sorted(touched):
-                if (pp, fid) not in seen:
-                    stats.append(
-                        WriteStat(partition=pp, file_id=fid, paths=[], rows=0, bytes=0)
-                    )
-        md = make_commit_metadata(
-            operation.value,
-            out.schema.json(),
-            stats,
-            extra=extra,
-        )
-        run_precommit_validators(table, instant, action, md)
-        guarded_commit(table, instant, action, md, txn_start)
-        committed = True
-        fire_commit_callback(table, instant, action, md)
-        table_metrics(table).update_commit_metrics(
-            action, time.time() - _write_t0, md
-        )
-    except Exception as exc:
-        if committed:
-            # the instant is durable — a post-commit service failure must
-            # NOT erase committed data; surface the error as-is
-            raise
-        table.timeline.delete_instant_files(instant, action)
-        table.fs.delete(table.instant_data_path(instant), recursive=True)
-        # CommitUndoneError means the instant was momentarily COMPLETED
-        # (guarded_commit's post-write undo) — a rival index compaction
-        # could have folded it into a base in that window, so the folded
-        # check must run (advice r6)
-        from ..concurrency import CommitUndoneError as _Undone
+                else:
+                    # merge-kernel bypass (no stored side): the payload
+                    # must still veto pure inserts — e.g. MERGE INTO with
+                    # no WHEN NOT MATCHED drops unmatched source rows.
+                    live = _pure_insert_frame(all_new, payload, data_cols, col_types)
+                    merged = _stamp_meta(live, instant)
+                    out = _finalize(merged, data_cols)
+                    write_instant_files(table, out, instant, max(len(touched), 1) + 8)
 
-        key_index.drop_instant(
-            table, instant, folded_possible=isinstance(exc, _Undone)
-        )
-        raise
+            timer.mark("write")
+            stats = collect_write_stats(table, instant, log_fids)
+            if mor_delta:
+                # stamp tombstone presence on the log stats from the profile
+                # aggregation (same frame the log rows were written from) —
+                # the MOR merge's delete-block pass is skipped when every
+                # log of a slice records False
+                for st in stats:
+                    if st.log:
+                        st.tombstones = group_tombstones.get(
+                            (st.partition, st.file_id)
+                        )
+            timer.mark("stats")
+            if key_index.enabled(cfg):
+                # COW rewrites OMIT deleted rows, so the written files carry
+                # no trace of a delete — emit index tombstones from the
+                # tagged delete rows (MOR deltacommits write marker rows that
+                # append_from_written picks up by itself)
+                tomb = None
+                if not mor_delta and DELETE_MARKER_COL in tagged.columns:
+                    tomb = tagged.filter(
+                        F.col(FILE_ID_COL).isNotNull()
+                        & F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False))
+                    ).select(RECORD_KEY_COL, PARTITION_PATH_COL, FILE_ID_COL)
+                if table.fs.exists(table.instant_data_path(instant)):
+                    key_index.append_from_written(table, instant, tombstones=tomb)
+                elif tomb is not None:
+                    # every affected group came out empty: no data files were
+                    # written, but the deletes must still tombstone the index
+                    key_index.append_delta(
+                        table,
+                        instant,
+                        tomb.withColumn(key_index.DELETED_COL, F.lit(True)),
+                    )
+            if not mor_delta:
+                # a rewritten file group can come out EMPTY (every record
+                # deleted): Spark's sink writes no file, but the commit must
+                # still supersede the old slice — record a zero-row version
+                # (reference analogue: HoodieMergeHandle always produces a
+                # file, even with 0 records)
+                seen = {(s.partition, s.file_id) for s in stats}
+                for pp, fid in sorted(touched):
+                    if (pp, fid) not in seen:
+                        stats.append(
+                            WriteStat(partition=pp, file_id=fid, paths=[], rows=0, bytes=0)
+                        )
+            md = make_commit_metadata(
+                operation.value,
+                out.schema.json(),
+                stats,
+                extra=extra,
+            )
+            return wi.commit(md, txn_start)
     finally:
-        if hb is not None:
-            hb.stop()
-        try:
-            incoming.unpersist()  # no-op when never persisted
-            tagged.unpersist()
-        except NameError:
-            pass
-    table.run_post_commit_services()
-    return instant
+        incoming.unpersist()  # no-op when never persisted
+        tagged.unpersist()
 
 
 def bootstrap_metadata_only(table, parquet_path: str) -> str:
@@ -1680,21 +1764,7 @@ def bootstrap_metadata_only(table, parquet_path: str) -> str:
         T.StringType,
     )
 
-    # heartbeat-guard the pending window like every other write (a
-    # rival's lazy sweep must never judge this pending commit crashed);
-    # collision-retrying claim, never touching a rival's files
-    instant, hb = _claim_write_instant(
-        table, "commit", WriteOperation.BOOTSTRAP
-    )
-    try:
-        table.timeline.transition_to_inflight(instant, "commit")
-    except BaseException:
-        if hb is not None:
-            hb.stop()
-        table.timeline.delete_pending_instant_files(instant, "commit")
-        table.fs.delete(f"{table.timeline.dir}/{instant}.claim")  # ours
-        raise
-    try:
+    with WriteInstant.open(table, "bootstrap", "commit", WriteOperation.BOOTSTRAP) as wi:
         stats = []
         for uri, size in sorted(listed):
             fstats = per_file[uri]
@@ -1722,16 +1792,7 @@ def bootstrap_metadata_only(table, parquet_path: str) -> str:
             stats,
             extra={"bootstrap_from": parquet_path, "mode": "METADATA_ONLY"},
         )
-        guarded_commit(table, instant, "commit", md)
-    except Exception:
-        table.timeline.delete_instant_files(instant, "commit")
-        raise
-    finally:
-        if hb is not None:
-            hb.stop()
-    # post-durability: a callback failure can't undo the bootstrap
-    fire_commit_callback(table, instant, "commit", md)
-    return instant
+        return wi.commit(md)
 
 
 def run_replace_write(
@@ -1755,16 +1816,8 @@ def run_replace_write(
     view = table.view()
     table_schema = table.schema()
     txn_start = txn_start_marker(table, view)
-    instant, hb = _claim_write_instant(table, "replacecommit", operation)
-    try:
-        table.timeline.transition_to_inflight(instant, "replacecommit")
-    except BaseException:
-        if hb is not None:
-            hb.stop()  # else the refresh thread outlives the failed write
-        table.timeline.delete_pending_instant_files(instant, "replacecommit")
-        table.fs.delete(f"{table.timeline.dir}/{instant}.claim")  # ours
-        raise
-    try:
+    with WriteInstant.open(table, "replace", "replacecommit", operation, started=_write_t0) as wi:
+        instant = wi.instant
         stats: list[WriteStat] = []
         incoming = None
         if df is not None:
@@ -1806,26 +1859,4 @@ def run_replace_write(
         md = make_commit_metadata(
             operation.value, schema_json, stats, replaced=replaced, extra=extra
         )
-        run_precommit_validators(table, instant, "replacecommit", md)
-        guarded_commit(table, instant, "replacecommit", md, txn_start)
-    except Exception as exc:
-        table.timeline.delete_instant_files(instant, "replacecommit")
-        table.fs.delete(table.instant_data_path(instant), recursive=True)
-        from ..concurrency import CommitUndoneError as _Undone
-        from . import key_index as _ki
-
-        # folded only possible if the instant was momentarily COMPLETED
-        # (guarded_commit post-write undo — advice r6)
-        _ki.drop_instant(table, instant, folded_possible=isinstance(exc, _Undone))
-        raise
-    finally:
-        if hb is not None:
-            hb.stop()
-    # post-durability (outside the try: the except above deletes instant
-    # files, which must never run for a committed instant)
-    fire_commit_callback(table, instant, "replacecommit", md)
-    table_metrics(table).update_commit_metrics(
-        "replacecommit", time.time() - _write_t0, md
-    )
-    table.run_post_commit_services()
-    return instant
+        return wi.commit(md, txn_start)

@@ -9,12 +9,15 @@ The reference's ``HoodieRecordPayload`` plugins
 - ``combineAndGetUpdateValue(current, schema)`` — merge an incoming
   record against the stored record; returning EMPTY means delete.
 
-Our engine evaluates both as DataFrame expressions over a full-outer
-join of (stored, incoming) per file group, so the merge runs inside
-whole-stage codegen instead of per-record Avro calls.
+Our engine evaluates both as DataFrame expressions over the merge frame
+of (stored, incoming) rows per file group — a per-key window over their
+union after one hash exchange on (file_id, partition), or
+``stored LEFT JOIN broadcast(incoming)`` for batches within the
+broadcast budget — so the merge runs inside whole-stage codegen instead
+of per-record Avro calls.
 
-Join-contract used by ``combine_exprs``: the merge frame has every data
-column duplicated as ``old__<c>`` / ``new__<c>`` plus boolean markers
+Merge-frame contract used by ``finish_merge_frame``: the frame has every
+data column duplicated as ``old__<c>`` / ``new__<c>`` plus boolean markers
 ``__has_old`` / ``__has_new`` and (incoming only) the delete marker.
 A payload returns (``take_new``: Column, per-column value fn) — rows
 where ``take_new`` is true use the incoming value expression, others

@@ -675,7 +675,9 @@ def test_clustering_occ_conflict_detected(spark, tmp_table_path):
     the clustering, not silently lose the committed rows."""
     from hudi_0_10_0_spark.concurrency import ConcurrentWriteConflictError
     from hudi_0_10_0_spark.metadata import WriteStat, make_commit_metadata
-    import hudi_0_10_0_spark.concurrency as C
+    # clustering commits through the shared write-instant lifecycle,
+    # which binds guarded_commit in the write module
+    import hudi_0_10_0_spark.operators.write as C
 
     t = HudiTable.create(
         spark, tmp_table_path + "/cocc",
