@@ -179,40 +179,27 @@ class WriteConfig:
     # HoodieBloomIndex.java explode/lookup, a shape we avoid entirely
     # for the trickle batches where filters pay off)
     bloom_prune_max_keys: int = 2_000_000
-    # MOR snapshot log-key bypass: broadcast the distinct log keys and
-    # let base rows with no log record skip the merge shuffle (reference
-    # scanner semantics — only log keys merge). The gate is COST-BASED
-    # from manifest stats (verdict r6 #7): bypass when the estimated
-    # saved shuffle bytes (untouched base rows × avg row size) beat the
-    # bypass's own cost (a second base scan ≈ base_bytes/3 in
-    # shuffle-byte units, plus a fixed stage-overhead floor), and the
-    # broadcast key set fits the budget below. The two row thresholds
-    # are OVERRIDES: leave None for the cost model, set an int to pin
-    # that side of the decision (tests and ops escape hatch).
-    mor_log_key_broadcast_max_rows: int | None = None
-    mor_log_key_bypass_min_base_rows: int | None = None
-    # auto-gate calibration: broadcast key-set budget (keys estimated at
-    # ~96 B each: file_id uuid + partition path + record key), and the
-    # fixed overhead floor in shuffle-byte units for the extra join
-    # stages + broadcast build (measured crossover ~2M rows on the r6
-    # scale curve — see SCALE.md)
-    mor_bypass_broadcast_budget_bytes: int = 64 << 20
-    mor_bypass_fixed_overhead_bytes: int = 64 << 20
-    # COW pure-delete fast path (optimization r8): tombstone keys small
-    # enough to broadcast (~120 B/key framed) rewrite the touched groups
-    # via a broadcast LEFT ANTI join — the stored side streams from the
-    # scan without shuffling. Larger delete batches keep the one-shuffle
-    # merge kernel. 0 disables the fast path.
-    delete_antijoin_broadcast_budget_bytes: int = 64 << 20
-    # COW trickle-upsert fast path (optimization r9): when the incoming
-    # update rows fit this broadcast budget (estimated from the profile
-    # counts x a schema-derived row width), touched groups rewrite via
-    # stored LEFT OUTER JOIN broadcast(incoming winners) + the same
-    # payload expressions — the stored side streams from the scan with
-    # ZERO shuffle (the reference merge-handle's stream-base/probe-map
-    # algorithm; the union+window kernel is its sort-merge analogue for
-    # oversized batches). 0 disables the fast path.
-    upsert_broadcast_budget_bytes: int = 64 << 20
+    # One broadcast budget for the three cost-gated broadcast paths; each
+    # path estimates its own row width and takes the broadcast only when
+    # rows x width fit (operators/merge.fits_broadcast). 0 disables all
+    # three, sending each to its general shuffle path:
+    # - COW pure delete (optimization r8): tombstone keys (~120 B/key
+    #   framed) rewrite the touched groups via a broadcast LEFT ANTI
+    #   join instead of the merge kernel.
+    # - COW trickle upsert (optimization r9): incoming update rows
+    #   (profile counts x a schema-derived row width) reconcile via
+    #   stored LEFT OUTER JOIN broadcast(incoming winners) — the
+    #   reference merge-handle's stream-base/probe-map algorithm; the
+    #   union+window kernel is its sort-merge analogue.
+    # - MOR snapshot log-key bypass: the distinct log keys (~96 B each)
+    #   are broadcast so base rows with no log record skip the merge
+    #   shuffle (reference scanner semantics — only log keys merge).
+    #   This path is further COST-gated from manifest stats (verdict
+    #   r6 #7, sources/read._log_key_bypass_pays): it runs only when the
+    #   saved shuffle beats a second base scan plus a fixed overhead.
+    # In all three the stored side streams from the scan without a
+    # shuffle.
+    broadcast_budget_bytes: int = 64 << 20
     # Virtual keys (hoodie.populate.meta.fields,
     # HoodieTableConfig.java:159-163): when False, data files carry NO
     # meta columns — the record key is re-derived from the key-generator

@@ -25,8 +25,6 @@ from ..config import (
 from ..functions.zorder import with_hilbert_value, with_zvalue
 from ..metadata import make_commit_metadata
 from ..timeline import REPLACE_COMMIT
-from .merge import mor_merge_window
-from ..payloads import get_payload
 from ..sources.read import base_format as _base_format
 from .write import WriteInstant, collect_write_stats
 
@@ -242,24 +240,10 @@ def _execute_cluster(
     # cancelling it would silently drop both the scheduled work and the
     # pending-clustering update-REJECT protection on its file groups
     with WriteInstant(table, "cluster", REPLACE_COMMIT, instant, keep_plan=keep_plan_on_failure) as wi:
-        from ..sources.read import _read_paths, slices_to_df
+        from ..sources.read import merge_slices
 
-        log_paths = [p for s in slices for l in s.logs for p in l.paths]
-        df = slices_to_df(table, slices)
-        if log_paths:  # MOR: fold deltas while clustering
-            # _read_paths pins the table schema and derives meta
-            # columns for virtual-key tables (the merge keys on them)
-            df = df.withColumn("__log", F.lit(0)).unionByName(
-                _read_paths(table, log_paths).withColumn("__log", F.lit(1))
-            )
-            from .merge import logs_may_have_tombstones
-
-            df = mor_merge_window(
-                df, get_payload(cfg.payload, cfg.precombine_field),
-                # manifest-proved tombstone absence skips the
-                # delete-block pass, as in read.py/services.py (r8)
-                hard_tombstones_possible=logs_may_have_tombstones(slices),
-            )
+        # fold MOR deltas; the range repartition below sets the layout
+        df = merge_slices(table, slices)
 
         sort_key = None
         if layout == "zorder" and sort_cols:

@@ -245,6 +245,15 @@ def finish_merge_frame(
     return j.filter(~is_delete & (F.col(HAS_OLD) | take_new)).select(*out_cols)
 
 
+def fits_broadcast(cfg, rows: int, row_bytes: float) -> bool:
+    """The one broadcast gate shared by the delete anti-join, the
+    trickle upsert and the MOR log-key bypass: ``rows`` framed rows of
+    about ``row_bytes`` each (the caller's own width estimate) fit
+    ``cfg.broadcast_budget_bytes``. A budget of 0 never broadcasts."""
+    budget = cfg.broadcast_budget_bytes
+    return budget > 0 and rows * row_bytes <= budget
+
+
 def broadcast_merge_stored(
     old: DataFrame,
     new: DataFrame,

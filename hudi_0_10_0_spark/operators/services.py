@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from ..config import DELETE_MARKER_COL, TableType
 from ..metadata import FileSystemView, WriteStat, make_commit_metadata
-from ..payloads import get_payload
 from ..timeline import (
     CLEAN,
     COMMIT,
@@ -29,7 +28,6 @@ from ..timeline import (
     SAVEPOINT,
     WRITE_ACTIONS,
 )
-from .merge import mor_merge_window
 from .write import collect_write_stats, write_instant_files
 
 
@@ -297,39 +295,11 @@ def _run_compaction_claimed(table, instant, req, hb):
     committed = False
     created_commit = False
     try:
-        payload = get_payload(table.cfg.payload, table.cfg.precombine_field)
-        from ..sources.read import _read_paths, slices_to_df
+        from ..sources.read import merge_slices
 
-        from pyspark.sql import functions as _F
-
-        log_paths = [p for s in slices for l in s.logs for p in l.paths]
-        union = slices_to_df(table, slices).withColumn("__log", _F.lit(0))
-        if log_paths:
-            # _read_paths (not a bare spark.read): pins the table
-            # schema AND derives the meta columns for virtual-key
-            # tables, which this merge keys on
-            union = union.unionByName(
-                _read_paths(table, log_paths).withColumn("__log", _F.lit(1))
-            )
-        # single shuffle keyed by file group: the window merge's
-        # ClusteredDistribution((fid, pp, key)) is satisfied by
-        # HashPartitioning((fid, pp)), and the output lands pre-grouped
-        # for the writer — no re-layout shuffle
-        from ..config import FILE_ID_COL, PARTITION_PATH_COL
-        from pyspark.sql import functions as F
-
-        union = union.repartition(
-            max(1, len(slices)), F.col(FILE_ID_COL), F.col(PARTITION_PATH_COL)
-        )
-        # same manifest proof as the snapshot read: when no merged log
-        # records a tombstone, the delete-block window pass is a no-op —
-        # skip it (optimization r8)
-        from .merge import logs_may_have_tombstones
-
-        merged = mor_merge_window(
-            union, payload,
-            hard_tombstones_possible=logs_may_have_tombstones(slices),
-        )
+        # by_group: output lands hash-partitioned by file group for the
+        # pre-partitioned writer — no re-layout shuffle
+        merged = merge_slices(table, slices, by_group=True)
         # crash recovery: a process killed mid-save leaves a partial
         # data/<instant>/ dir (the failed-write sweep skips pending
         # COMPACTION plans so the plan stays retryable) — clear it, or

@@ -53,8 +53,8 @@ from .merge import (
     ARRIVAL_ORDER_COL,
     bq,
     broadcast_merge_stored,
+    fits_broadcast,
     merge_stored_and_incoming,
-    mor_merge_window,
     precombine_dedup,
     seqno_expr,
 )
@@ -1437,7 +1437,7 @@ def run_batch_write(
 
                 if old_slices:
                     n_parts = max(len(touched), 1) + 8
-                    from ..sources.read import _merge_slices, slices_to_df
+                    from ..sources.read import merge_slices, slices_to_df
 
                     if any(s.logs for s in old_slices):
                         # a MOR table routed through the COW rewrite path
@@ -1446,10 +1446,7 @@ def run_batch_write(
                         # slices — reading base files alone would silently
                         # drop uncompacted deltacommit updates/deletes when
                         # the new base supersedes the slice (the logs detach)
-                        old = _merge_slices(table, old_slices)
-                        old = old.filter(
-                            ~F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False))
-                        )
+                        old = merge_slices(table, old_slices)
                     else:
                         old = slices_to_df(table, old_slices)
                     if operation in (WriteOperation.INSERT, WriteOperation.BULK_INSERT):
@@ -1484,8 +1481,9 @@ def run_batch_write(
                     elif (
                         is_delete
                         and payload.name == "empty"
-                        and sum(r[2] for r in profile if r[1] is not None) * 120
-                        <= int(getattr(cfg, "delete_antijoin_broadcast_budget_bytes", 64 << 20))
+                        and fits_broadcast(
+                            cfg, sum(r[2] for r in profile if r[1] is not None), 120
+                        )
                     ):
                         # Pure COW delete (EmptyPayload: every incoming row a
                         # tombstone, kernel output = stored rows with no
@@ -1525,8 +1523,9 @@ def run_batch_write(
                         n_upd = sum(r[2] for r in profile if r[1] is not None)
                         if (
                             not any(s.logs for s in old_slices)
-                            and n_upd * _est_merge_row_bytes(data_cols, col_types)
-                            <= int(getattr(cfg, "upsert_broadcast_budget_bytes", 64 << 20))
+                            and fits_broadcast(
+                                cfg, n_upd, _est_merge_row_bytes(data_cols, col_types)
+                            )
                         ):
                             # Trickle-upsert fast path (optimization r9,
                             # guide §3.1): the incoming batch fits the

@@ -178,7 +178,7 @@ def _after_df(table, instant: str, action: str, metadata: dict):
     swapped (COW rewrite / replacecommit), delta files appended (MOR).
     Pure manifest math over files already on disk."""
     from .metadata import BaseFileVersion, FileSlice, LogFileVersion
-    from .sources.read import _merge_slices
+    from .sources.read import merge_slices
 
     import json as _json
 
@@ -274,14 +274,9 @@ def _after_df(table, instant: str, action: str, metadata: dict):
                     raw=bool(sd.get("raw", False)),
                 ),
             )
-    from pyspark.sql import functions as F
-
     from .config import DELETE_MARKER_COL
 
-    df = _merge_slices(table, list(slices.values()))
-    # mirror snapshot()'s post-processing exactly (tombstone drop for
-    # the COW/plain path happens inside _merge_slices' merge; the
-    # explicit filter covers log-free COW output) so before/after have
-    # identical shape and semantics
-    df = df.filter(~F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False)))
-    return df.drop(DELETE_MARKER_COL)
+    # the same merge snapshot() runs, which drops tombstones on every
+    # path (log-free and merged alike), so before/after have identical
+    # shape and semantics
+    return merge_slices(table, list(slices.values())).drop(DELETE_MARKER_COL)

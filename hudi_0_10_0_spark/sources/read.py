@@ -22,11 +22,14 @@ from ..config import (
     PARTITION_PATH_COL,
     RECORD_KEY_COL,
     SEQNO_COL,
-    TableType,
 )
 from ..metadata import FileSlice
 from ..payloads import get_payload
-from ..operators.merge import mor_merge_window
+from ..operators.merge import (
+    fits_broadcast,
+    logs_may_have_tombstones,
+    mor_merge_window,
+)
 
 QUERY_SNAPSHOT = "snapshot"
 QUERY_READ_OPTIMIZED = "read_optimized"
@@ -370,6 +373,12 @@ def _range_unreadable(
     return False
 
 
+# fixed overhead floor of the log-key bypass in shuffle-byte units: the
+# two extra join stages + the broadcast build, calibrated to the
+# measured ~2M-row crossover on the r6 scale curve (SCALE.md)
+_BYPASS_FIXED_OVERHEAD_BYTES = 64 << 20
+
+
 def _log_key_bypass_pays(cfg, with_logs) -> bool:
     """Cost-based gate for the MOR log-key bypass (verdict r6 #7),
     decided entirely from manifest stats the read already holds.
@@ -377,40 +386,35 @@ def _log_key_bypass_pays(cfg, with_logs) -> bool:
     In shuffle-byte units: the bypass SAVES shuffling the untouched base
     rows (``(base_rows − touched) × avg_row_bytes``) and COSTS a second
     scan of the base files (a columnar scan is ~3× cheaper per byte than
-    a shuffle's write+read+sort → ``base_bytes / 3``) plus a fixed
-    overhead floor for the two extra join stages and the broadcast build
-    (``mor_bypass_fixed_overhead_bytes``, calibrated to the measured
-    ~2M-row crossover in SCALE.md). The broadcast side requires the
-    distinct log keys (~96 B each) to fit
-    ``mor_bypass_broadcast_budget_bytes``. The two row thresholds remain
-    as hard overrides when set (non-None)."""
+    a shuffle's write+read+sort → ``base_bytes / 3``) plus
+    ``_BYPASS_FIXED_OVERHEAD_BYTES``. The broadcast side requires the
+    distinct log keys (~96 B each: file_id uuid + partition path +
+    record key) to fit ``broadcast_budget_bytes``."""
     log_rows = sum(l.rows for s in with_logs for l in s.logs)
     base_rows = sum(s.base.rows for s in with_logs)
     base_bytes = sum(s.base.bytes for s in with_logs)
-    max_log = getattr(cfg, "mor_log_key_broadcast_max_rows", None)
-    if max_log is not None:
-        if log_rows > int(max_log):
-            return False
-    elif log_rows * 96 > int(
-        getattr(cfg, "mor_bypass_broadcast_budget_bytes", 64 << 20)
-    ):
-        return False
-    min_base = getattr(cfg, "mor_log_key_bypass_min_base_rows", None)
-    if min_base is not None:
-        return base_rows >= int(min_base)
-    if base_rows <= 0:
+    if not fits_broadcast(cfg, log_rows, 96) or base_rows <= 0:
         return False
     avg_row = (base_bytes / base_rows) if base_bytes > 0 else 45.0
     saved = (base_rows - min(log_rows, base_rows)) * avg_row
-    fixed = int(getattr(cfg, "mor_bypass_fixed_overhead_bytes", 64 << 20))
-    return saved >= base_bytes / 3.0 + fixed
+    return saved >= base_bytes / 3.0 + _BYPASS_FIXED_OVERHEAD_BYTES
 
 
-def _merge_slices(
-    table, slices: list[FileSlice], merge_type: str = "payload_combine"
+def merge_slices(
+    table,
+    slices: list[FileSlice],
+    merge_type: str = "payload_combine",
+    by_group: bool = False,
 ) -> DataFrame:
-    """MOR snapshot view of the given slices: base ∪ delta rows, then
-    latest-version-per-key (payload order) and tombstone drop.
+    """Merged view of the given slices — the one base ∪ logs merge that
+    snapshot/incremental reads, compaction, clustering, the COW rewrite
+    of a MOR table and the precommit after-state all run: base ∪ delta
+    rows, then latest-version-per-key (payload order) and tombstone
+    drop. Slices without logs (every COW slice) come out as their base
+    files with the tombstone filter, so the caller never branches on
+    table type. The reference shares ``HoodieMergedLogRecordScanner``
+    the same way between ``HoodieMergeOnReadRDD.scala:297`` and
+    ``HoodieCompactor.java:169``.
 
     Only file groups that HAVE delta files go through the window merge
     (one shuffle over just those groups); log-free groups are a plain
@@ -419,20 +423,34 @@ def _merge_slices(
     uncompacted fraction is small (compaction every 5 delta commits), so
     the merge shuffle never covers the whole table.
 
+    ``by_group=True`` promises output hash-partitioned on (file_id,
+    partition) into ``len(slices)`` partitions, for a writer that takes
+    one partition per file group (``pre_partitioned=True``): every slice
+    goes through the one exchange, with no log-free split and no
+    log-key bypass. The window merge's ClusteredDistribution((fid, pp,
+    key)) is satisfied by that HashPartitioning((fid, pp)), so it adds
+    no second shuffle.
+
     ``merge_type="skip_merge"`` (``hoodie.datasource.merge.type``,
     ``HoodieMergeOnReadRDD.scala`` unMergedReader): concatenate base and
     delta rows without per-key resolution — every version of a key
     surfaces, no shuffle at all."""
-    with_logs = [s for s in slices if s.logs]
-    log_free = [s for s in slices if not s.logs]
+    if by_group:
+        with_logs, log_free = list(slices), []
+    else:
+        with_logs = [s for s in slices if s.logs]
+        log_free = [s for s in slices if not s.logs]
     plain = None
     if log_free or not with_logs:
-        plain = slices_to_df(table, log_free)
-        if merge_type != "skip_merge":
-            plain = plain.filter(~F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False)))
+        plain = slices_to_df(table, log_free).filter(
+            ~F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False))
+        )
     if not with_logs:
         return plain
     base = slices_to_df(table, with_logs)
+    # _read_paths (not a bare spark.read): pins the table schema AND
+    # derives the meta columns for virtual-key tables, which the merge
+    # keys on
     logs = _read_paths(
         table, [p for s in with_logs for l in s.logs for p in l.paths]
     )
@@ -458,7 +476,7 @@ def _merge_slices(
     # is larger than that (measured: 3× read throughput at 4.6M rows,
     # but ~+0.4s pure stage latency at 150k rows).
     untouched = None
-    if _log_key_bypass_pays(table.cfg, with_logs):
+    if not by_group and _log_key_bypass_pays(table.cfg, with_logs):
         keys3 = [FILE_ID_COL, PARTITION_PATH_COL, RECORD_KEY_COL]
         log_keys = logs.select(*keys3).distinct()
         untouched = base.join(F.broadcast(log_keys), keys3, "left_anti").filter(
@@ -471,14 +489,16 @@ def _merge_slices(
     both = base.withColumn("__log", F.lit(0)).unionByName(
         logs.withColumn("__log", F.lit(1))
     )
+    if by_group:
+        both = both.repartition(
+            max(1, len(slices)), F.col(FILE_ID_COL), F.col(PARTITION_PATH_COL)
+        )
     payload = get_payload(table.cfg.payload, table.cfg.precombine_field)
-    # when every merged log's stats say tombstones=False the delete-block
-    # window pass is provably a no-op and is skipped (r8)
-    from ..operators.merge import logs_may_have_tombstones
-
-    hard_tombs = logs_may_have_tombstones(with_logs)
     merged = mor_merge_window(
-        both, payload, hard_tombstones_possible=hard_tombs,
+        both, payload,
+        # when every merged log's stats say tombstones=False the
+        # delete-block window pass is provably a no-op and is skipped (r8)
+        hard_tombstones_possible=logs_may_have_tombstones(with_logs),
         # bypass path: base was semi-joined on the log keys, so every
         # key entering the window has a log row — the base-passthrough
         # window pass is provably constant and skipped (r8)
@@ -509,17 +529,9 @@ def snapshot(
     slices = view.latest_file_slices(as_of=as_of)
     if filters:
         slices = prune_slices_by_stats(table, slices, filters)
-    if table.cfg.table_type == TableType.COPY_ON_WRITE or query_type == QUERY_READ_OPTIMIZED:
-        df = slices_to_df(table, slices)
-        df = df.filter(~F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False)))
-    else:
-        if as_of is not None:
-            # time-travel over MOR must bound delta rows by the instant
-            slices = [
-                FileSlice(s.partition, s.file_id, s.base, [l for l in s.logs if l.instant <= as_of])
-                for s in slices
-            ]
-        df = _merge_slices(table, slices, merge_type=merge_type)
+    if query_type == QUERY_READ_OPTIMIZED:
+        slices = [FileSlice(s.partition, s.file_id, s.base) for s in slices]
+    df = merge_slices(table, slices, merge_type=merge_type)
     if filters:
         for f in filters:
             df = df.filter(_pred_to_column(f))
@@ -620,11 +632,7 @@ def incremental(
         if begin is not None:
             cond = cond & (F.col(COMMIT_TIME_COL) > F.lit(begin))
         return df.filter(cond)
-    if table.cfg.table_type == TableType.COPY_ON_WRITE:
-        df = slices_to_df(table, slices)
-        df = df.filter(~F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False)))
-    else:
-        df = _merge_slices(table, slices)
+    df = merge_slices(table, slices)
     cond = F.col("_hoodie_commit_time") <= F.lit(end_ts)
     if begin is not None:
         cond = cond & (F.col("_hoodie_commit_time") > F.lit(begin))

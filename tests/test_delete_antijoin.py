@@ -64,7 +64,7 @@ def test_antijoin_delete_equals_kernel_delete(spark, orders, tmp_table_path):
 
     slow = _mk(spark, f"{tmp_table_path}/slow", orders)
     slow.cfg = dataclasses.replace(
-        slow.cfg, delete_antijoin_broadcast_budget_bytes=0
+        slow.cfg, broadcast_budget_bytes=0
     )  # force the merge-kernel path
     slow.delete(dels)
 
@@ -126,7 +126,7 @@ def test_delete_preserves_untouched_duplicate_stored_keys(
     t = _dup_table(spark, tmp_table_path)
     if budget is not None:
         t.cfg = dataclasses.replace(
-            t.cfg, delete_antijoin_broadcast_budget_bytes=budget
+            t.cfg, broadcast_budget_bytes=budget
         )  # force the merge-kernel path
     t.delete(spark.createDataFrame([(2, "p0")], "id long, part string"))
     got = sorted(tuple(r) for r in t.snapshot().select("id", "v").collect())
@@ -145,10 +145,80 @@ def test_upsert_merges_each_duplicate_stored_key_per_row(
     t = _dup_table(spark, tmp_table_path)
     if budget is not None:
         t.cfg = dataclasses.replace(
-            t.cfg, upsert_broadcast_budget_bytes=budget
+            t.cfg, broadcast_budget_bytes=budget
         )  # force the merge-kernel path
     t.upsert(
         spark.createDataFrame([(1, "p0", 30)], "id long, part string, v long")
     )
     got = sorted(tuple(r) for r in t.snapshot().select("id", "v").collect())
     assert got == [(1, 30), (1, 30), (2, 5)]
+
+
+def _plan_outside_cache(df) -> str:
+    """Executed plan of ``df`` without the subtrees of cached frames:
+    the tag join's own broadcast lives inside the cached ``tagged``
+    frame and is not one of the budget-gated paths."""
+    keep, cut = [], None
+    for line in df._jdf.queryExecution().executedPlan().toString().splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cut is not None and depth > cut:
+            continue
+        cut = depth if "InMemoryRelation" in line else None
+        keep.append(line)
+    return "\n".join(keep)
+
+
+def test_zero_broadcast_budget_takes_every_general_path(
+    spark, orders, tmp_table_path, monkeypatch
+):
+    """``broadcast_budget_bytes=0`` sends all three budget-gated paths to
+    their general shuffle paths — the delete anti-join, the trickle
+    upsert's broadcast join and the MOR log-key bypass — with the same
+    answers as the default budget."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from hudi_0_10_0_spark import TableType
+    from hudi_0_10_0_spark.sources import read
+
+    written = []
+    save = DataFrameWriter.save
+
+    def recording_save(writer, *args, **kwargs):
+        written.append(_plan_outside_cache(writer._df))
+        return save(writer, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "save", recording_save)
+    upd = orders.filter(F.col("o_orderkey") % 20 == 0).withColumn(
+        "o_orderstatus", F.lit("X")
+    )
+    dels = orders.filter(F.col("o_orderkey") % 30 == 1).select(
+        "o_orderkey", "o_orderpriority"
+    )
+    cow = {}
+    for name, kw in (("default", {}), ("zero", {"broadcast_budget_bytes": 0})):
+        t = _mk(spark, f"{tmp_table_path}/cow_{name}", orders, **kw)
+        written.clear()
+        t.upsert(upd)
+        t.delete(dels)
+        upsert_plan, delete_plan = written
+        cow[name] = (_rows(t), upsert_plan, delete_plan)
+    assert cow["default"][0] == cow["zero"][0]
+    assert "BroadcastHashJoin" in cow["default"][1]
+    assert "BroadcastHashJoin" not in cow["zero"][1]
+    assert "LeftAnti" in cow["default"][2]
+    assert "LeftAnti" not in cow["zero"][2]
+
+    # without the fixed overhead floor the cost model takes the bypass at
+    # this size, so only the budget decides
+    monkeypatch.setattr(read, "_BYPASS_FIXED_OVERHEAD_BYTES", 0)
+    mor = _mk(
+        spark, f"{tmp_table_path}/mor", orders, table_type=TableType.MERGE_ON_READ
+    )
+    mor.upsert(upd)
+    mor.delete(dels)
+    snap = mor.snapshot()
+    assert "LeftSemi" in _plan_outside_cache(snap)
+    bypass = _rows(mor)
+    mor.cfg = dataclasses.replace(mor.cfg, broadcast_budget_bytes=0)
+    assert "LeftSemi" not in _plan_outside_cache(mor.snapshot())
+    assert _rows(mor) == bypass

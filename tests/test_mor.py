@@ -235,7 +235,14 @@ def test_mor_duplicate_updates_last_wins_within_deltacommit(spark, tmp_table_pat
     assert [r.v for r in got] == [11], got  # the LAST duplicate wins
 
 
-def test_mor_log_key_bypass_matches_full_merge(mor, orders):
+def _force_bypass(monkeypatch, on=True):
+    """Pin the MOR log-key bypass decision regardless of its cost model."""
+    from hudi_0_10_0_spark.sources import read
+
+    monkeypatch.setattr(read, "_log_key_bypass_pays", lambda cfg, with_logs: on)
+
+
+def test_log_key_bypass_matches_full_merge(mor, orders, monkeypatch):
     """VERDICT r5 #3: base rows of delta-bearing groups whose key has no
     log record bypass the merge shuffle via a broadcast log-key
     semi/anti split. The bypass read must equal the full-window-merge
@@ -247,9 +254,9 @@ def test_mor_log_key_bypass_matches_full_merge(mor, orders):
     mor.upsert(upd)
     mor.delete(orders.filter(F.col("o_orderkey") % 100 == 7))
 
-    # the min-base-rows gate keeps tiny tables on the plain window merge;
-    # force the bypass here to pin its semantics
-    mor.cfg.mor_log_key_bypass_min_base_rows = 0
+    # the cost gate keeps tiny tables on the plain window merge; force
+    # the bypass here to pin its semantics
+    _force_bypass(monkeypatch)
     snap = mor.snapshot()
     plan = snap._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan and "LeftAnti" in plan, plan[:2000]
@@ -258,7 +265,8 @@ def test_mor_log_key_bypass_matches_full_merge(mor, orders):
         tuple(r) for r in snap.select("o_orderkey", "o_totalprice").collect()
     )
     # force the fallback (full window merge) and compare
-    mor.cfg.mor_log_key_broadcast_max_rows = 0
+    monkeypatch.undo()
+    mor.cfg.broadcast_budget_bytes = 0
     full_df = mor.snapshot()
     full_plan = full_df._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" not in full_plan
@@ -268,7 +276,9 @@ def test_mor_log_key_bypass_matches_full_merge(mor, orders):
     assert bypass == full
 
 
-def test_mor_duplicate_base_keys_consistent_across_merge_paths(spark, tmp_table_path):
+def test_mor_duplicate_base_keys_consistent_across_merge_paths(
+    spark, tmp_table_path, monkeypatch
+):
     """Diff-review r6: duplicate-key BASE rows (bulk_insert writes every
     duplicate) with no log record must read identically through the
     log-key bypass and the full window merge — both stream them through
@@ -288,21 +298,77 @@ def test_mor_duplicate_base_keys_consistent_across_merge_paths(spark, tmp_table_
     ))
     t.upsert(spark.createDataFrame([(2, "p0", 9)], "id long, part string, v long"))
 
-    def rows(min_base, max_log):
-        t.cfg.mor_log_key_bypass_min_base_rows = min_base
-        t.cfg.mor_log_key_broadcast_max_rows = max_log
+    def rows():
         return sorted(tuple(r) for r in t.snapshot().select("id", "v").collect())
 
-    bypass = rows(0, 1_000_000)   # force the semi/anti split
-    full = rows(10**9, 0)         # force the full window merge
+    _force_bypass(monkeypatch)    # force the semi/anti split
+    bypass = rows()
+    monkeypatch.undo()
+    t.cfg.broadcast_budget_bytes = 0  # force the full window merge
+    full = rows()
     assert bypass == full == [(1, 10), (1, 20), (2, 9)]
 
 
+@pytest.mark.parametrize("bypass", [True, False])
+def test_cluster_and_compaction_keep_the_merged_snapshot(
+    spark, tmp_table_path, monkeypatch, bypass
+):
+    """Clustering and compaction run the snapshot's own slice merge, so
+    neither changes what a snapshot returns — with the log-key bypass
+    forced on or off. Group p0 carries logs with an update and a hard
+    delete (plus an untouched duplicate key); group p1 has no logs and
+    duplicate base keys."""
+    _force_bypass(monkeypatch, bypass)
+    schema = "id long, part string, v long"
+
+    def build(name):
+        t = HudiTable.create(
+            spark,
+            f"{tmp_table_path}/{name}",
+            WriteConfig(
+                record_key_field="id", partition_field="part",
+                precombine_field="v", table_type=TableType.MERGE_ON_READ,
+                # one file group per partition, so the duplicate keys
+                # share a group with their neighbours
+                inline_compact=False, write_parallelism=1,
+            ),
+        )
+        t.bulk_insert(spark.createDataFrame(
+            [(1, "p0", 10), (1, "p0", 11), (2, "p0", 10), (3, "p0", 10),
+             (7, "p1", 1), (7, "p1", 2), (8, "p1", 5)],
+            schema,
+        ))
+        t.upsert(spark.createDataFrame([(2, "p0", 20)], schema))
+        t.delete(spark.createDataFrame([(3, "p0")], "id long, part string"))
+        assert [(s.partition, bool(s.logs)) for s in t.file_slices()] == [
+            ("p0", True), ("p1", False)
+        ]
+        return t
+
+    def rows(t):
+        return sorted(tuple(r) for r in t.snapshot().select("id", "part", "v").collect())
+
+    expected = [
+        (1, "p0", 10), (1, "p0", 11), (2, "p0", 20),
+        (7, "p1", 1), (7, "p1", 2), (8, "p1", 5),
+    ]
+    clustered = build("clustered")
+    assert rows(clustered) == expected
+    assert clustered.cluster() is not None
+    assert rows(clustered) == expected
+
+    compacted = build("compacted")
+    assert rows(compacted) == expected
+    compacted.compact(compacted.schedule_compaction())
+    assert not any(s.logs for s in compacted.file_slices())
+    assert rows(compacted) == expected
+
+
 def test_bypass_cost_gate_auto_from_manifests():
-    """Verdict r6 #7: with the row-threshold overrides left None, the
-    bypass decision is cost-based from manifest stats — on at scale
-    (saved shuffle beats the second scan + fixed overhead), off at toy
-    size and off when the key broadcast would not fit."""
+    """Verdict r6 #7: the bypass decision is cost-based from manifest
+    stats — on at scale (saved shuffle beats the second scan + fixed
+    overhead), off at toy size and off when the key broadcast would not
+    fit."""
     from types import SimpleNamespace as NS
 
     from hudi_0_10_0_spark.sources.read import _log_key_bypass_pays
@@ -315,12 +381,7 @@ def test_bypass_cost_gate_auto_from_manifests():
             )
         ]
 
-    auto = NS(
-        mor_log_key_broadcast_max_rows=None,
-        mor_log_key_bypass_min_base_rows=None,
-        mor_bypass_broadcast_budget_bytes=64 << 20,
-        mor_bypass_fixed_overhead_bytes=64 << 20,
-    )
+    auto = NS(broadcast_budget_bytes=64 << 20)
     # sf0.1-shaped: 150k base rows — saved shuffle ~7 MB, under the floor
     assert not _log_key_bypass_pays(auto, slices(150_000, 45, 15_000))
     # third-decade shape: 45.7M base rows, trickle log — clear win
@@ -330,18 +391,6 @@ def test_bypass_cost_gate_auto_from_manifests():
     assert _log_key_bypass_pays(auto, slices(4_000_000, 45, 1_000))
     # broadcast budget: a huge log key set disables the bypass even at scale
     assert not _log_key_bypass_pays(auto, slices(45_700_000, 45, 5_000_000))
-    # overrides pin each side regardless of the cost model
-    forced_on = NS(
-        mor_log_key_broadcast_max_rows=None,
-        mor_log_key_bypass_min_base_rows=0,
-        mor_bypass_broadcast_budget_bytes=64 << 20,
-        mor_bypass_fixed_overhead_bytes=64 << 20,
-    )
-    assert _log_key_bypass_pays(forced_on, slices(100, 45, 10))
-    forced_off = NS(
-        mor_log_key_broadcast_max_rows=0,
-        mor_log_key_bypass_min_base_rows=None,
-        mor_bypass_broadcast_budget_bytes=64 << 20,
-        mor_bypass_fixed_overhead_bytes=64 << 20,
-    )
+    # a zero budget disables the bypass regardless of the cost model
+    forced_off = NS(broadcast_budget_bytes=0)
     assert not _log_key_bypass_pays(forced_off, slices(45_700_000, 45, 500))

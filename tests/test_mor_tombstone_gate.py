@@ -6,6 +6,7 @@ delete — and must keep it (and its semantics) when one does."""
 from pyspark.sql import functions as F
 
 from hudi_0_10_0_spark import HudiTable, TableType, WriteConfig
+from hudi_0_10_0_spark.sources import read
 
 
 def _mor(spark, path):
@@ -82,7 +83,9 @@ def test_delete_deltacommit_keeps_the_window_and_deletes(spark, orders, tmp_tabl
     assert ro.count() == orders.filter(F.col("o_orderkey") % 5 != 0).count()
 
 
-def test_bypass_plus_no_tombstones_runs_a_single_window(spark, orders, tmp_table_path):
+def test_bypass_plus_no_tombstones_runs_a_single_window(
+    spark, orders, tmp_table_path, monkeypatch
+):
     """With the log-key bypass forced AND update-only logs, both extra
     window passes are gated out (r8): only the row_number latest-wins
     window remains in the merge plan."""
@@ -93,7 +96,8 @@ def test_bypass_plus_no_tombstones_runs_a_single_window(spark, orders, tmp_table
             "o_orderstatus", F.lit("A")
         )
     )
-    t.cfg.mor_log_key_bypass_min_base_rows = 0  # force the bypass
+    # force the bypass
+    monkeypatch.setattr(read, "_log_key_bypass_pays", lambda cfg, with_logs: True)
     snap = t.snapshot()
     plan = snap._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan  # the bypass actually fired
