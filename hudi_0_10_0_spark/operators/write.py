@@ -408,7 +408,7 @@ def assign_inserts(
     inserts: DataFrame,
     pack_small_files: bool,
     insert_counts: list[tuple[str, int]] | None = None,
-) -> tuple[DataFrame, set[str]]:
+) -> tuple[DataFrame, set[tuple[str, str]]]:
     """Map each untagged (insert) row to a file group via the bucket
     plan. Row→bucket assignment hashes the record key into the
     partition's cumulative bucket ranges — the same proportional
@@ -420,7 +420,12 @@ def assign_inserts(
 
     ``insert_counts`` lets the caller supply per-partition row counts
     from an already-collected workload profile (one Spark job for the
-    whole write, ``BaseSparkCommitActionExecutor.buildProfile``)."""
+    whole write, ``BaseSparkCommitActionExecutor.buildProfile``).
+
+    Returns the assigned rows and every (partition, file_id) the plan
+    targets: new groups and the small groups being packed (the targets
+    already live in the view). Its size is the write shuffle's exact
+    task count."""
     counts = insert_counts
     if counts is None:
         counts = [
@@ -431,7 +436,7 @@ def assign_inserts(
         return inserts.limit(0).withColumn(FILE_ID_COL, F.lit(None).cast("string")), set()
     buckets = plan_insert_buckets(view, table.cfg, counts, pack_small_files)
     # (partition, fid) — fid alone may name groups in other partitions
-    existing_fids = {(b[0], b[3]) for b in buckets if b[4]}
+    groups = {(b[0], b[3]) for b in buckets}
     totals = {pp: n for pp, n in counts}
     bucket_rows = [(b[0], b[1], b[2], b[3], b[4], totals[b[0]]) for b in buckets]
     bucket_df = local_df(table.spark, bucket_rows, _BUCKET_SCHEMA)
@@ -446,7 +451,7 @@ def assign_inserts(
         .withColumn(FILE_ID_COL, F.col("__bfid"))
         .drop("__idx", "__bstart", "__bend", "__bfid", "__bexisting", "__btotal")
     )
-    return assigned, existing_fids
+    return assigned, groups
 
 
 # --------------------------------------------------------------------------
@@ -642,11 +647,18 @@ def _footer_stats(uri: str, stat_cols: list[str]) -> dict:
 
 
 def collect_write_stats(
-    table, instant: str, log_fids: set[tuple[str, str]] | None = None
+    table,
+    instant: str,
+    log_fids: set[tuple[str, str]] | None = None,
+    schema: T.StructType | None = None,
 ) -> list[WriteStat]:
     """Per-file-group row counts, key ranges, and column min/max/null
     stats — the inputs for index range-pruning and data skipping
     (``ZOrderingIndexHelper.java:86`` builds the same stats table).
+
+    The stats columns come from the table's schema; ``schema`` (the
+    frame the caller just wrote) stands in on the first commit, before
+    any completed instant records one.
 
     Read from parquet footers only (no data I/O, no Spark shuffle);
     footers are fetched on the driver for small commits and fanned out
@@ -684,33 +696,7 @@ def collect_write_stats(
     stat_cols: list[str] = []
     if cfg.collect_column_stats:
         wanted = set(cfg.stats_columns) if cfg.stats_columns else None
-        schema = table.schema()
-        if schema is None:
-            # first commit: no completed instant to read the table schema
-            # from yet — take it from the just-written files (driver-side
-            # footer metadata read, no data I/O); without this the initial
-            # bulk load would never get column stats and data skipping
-            # would silently not apply until the second commit. Honor the
-            # table's base format (ORC too) and drop the _pp/_fg layout
-            # dirs Spark infers as partition columns.
-            from ..sources.read import base_format
-
-            try:
-                inferred = (
-                    table.spark.read.format(base_format(table))
-                    .load(inst_dir)
-                    .schema
-                )
-                schema = T.StructType(
-                    [
-                        f
-                        for f in inferred.fields
-                        if f.name
-                        not in (LAYOUT_PARTITION_COL, LAYOUT_FILEGROUP_COL)
-                    ]
-                )
-            except Exception:
-                schema = None
+        schema = table.schema() or schema
         if schema is not None:
             for f in schema.fields:
                 if f.name in META_COLS or f.name == DELETE_MARKER_COL:
@@ -1277,7 +1263,7 @@ def run_batch_write(
                 out = _bulk_insert_df(table, incoming, data_cols, instant)
                 write_instant_files(table, out, instant, 0, pre_partitioned=True)
                 timer.mark("bulk_write")
-                stats = collect_write_stats(table, instant)
+                stats = collect_write_stats(table, instant, schema=out.schema)
                 timer.mark("stats")
                 if key_index.enabled(cfg):
                     key_index.append_from_written(table, instant)
@@ -1399,7 +1385,7 @@ def run_batch_write(
 
             mor_delta = action == "deltacommit"
             pack = operation in (WriteOperation.UPSERT, WriteOperation.INSERT) and not mor_delta
-            assigned_inserts, packed_fids = assign_inserts(
+            assigned_inserts, insert_groups = assign_inserts(
                 table, view, inserts, pack, insert_counts=insert_counts
             )
             timer.mark("assign")
@@ -1414,16 +1400,21 @@ def run_batch_write(
                     _finalize(base_rows, data_cols)
                 )
                 log_fids = set(update_groups)
-                n_groups = len({fid for _, fid in log_fids}) + 8
-                write_instant_files(table, out, instant, n_groups)
+                write_instant_files(
+                    table, out, instant, len(log_fids | insert_groups)
+                )
             else:
                 # COW: rewrite every affected file group (updates + packed
                 # inserts), merging with stored rows; fresh groups come along
                 # in the same pass with an empty old side.
                 touched = set(update_groups)
                 for sl in view.latest_file_slices():
-                    if (sl.partition, sl.file_id) in packed_fids:
-                        touched.add((sl.partition, sl.file_id))
+                    if (sl.partition, sl.file_id) in insert_groups:
+                        touched.add((sl.partition, sl.file_id))  # packed
+                # one write task per file group the commit writes: the
+                # bucket plan, not the partition count, decides which
+                # group a row lands in
+                n_parts = len(touched | insert_groups)
                 old_slices = [
                     s
                     for s in view.latest_file_slices()
@@ -1436,7 +1427,6 @@ def run_batch_write(
                 )
 
                 if old_slices:
-                    n_parts = max(len(touched), 1) + 8
                     from ..sources.read import merge_slices, slices_to_df
 
                     if any(s.logs for s in old_slices):
@@ -1474,7 +1464,7 @@ def run_batch_write(
                         appended = _project_write_shape(
                             _stamp_meta(live, instant), data_cols, col_types
                         ).repartition(
-                            max(1, len(packed_fids)) + 8,
+                            max(1, len(insert_groups)),
                             F.col(FILE_ID_COL), F.col(PARTITION_PATH_COL),
                         )
                         merged = passthrough.unionByName(appended)
@@ -1584,7 +1574,7 @@ def run_batch_write(
                             appended = _project_write_shape(
                                 _stamp_meta(live, instant), data_cols, col_types
                             ).repartition(
-                                max(1, len(packed_fids)) + 8,
+                                max(1, len(insert_groups)),
                                 F.col(FILE_ID_COL), F.col(PARTITION_PATH_COL),
                             )
                             merged = merged.unionByName(appended)
@@ -1605,10 +1595,10 @@ def run_batch_write(
                     live = _pure_insert_frame(all_new, payload, data_cols, col_types)
                     merged = _stamp_meta(live, instant)
                     out = _finalize(merged, data_cols)
-                    write_instant_files(table, out, instant, max(len(touched), 1) + 8)
+                    write_instant_files(table, out, instant, n_parts)
 
             timer.mark("write")
-            stats = collect_write_stats(table, instant, log_fids)
+            stats = collect_write_stats(table, instant, log_fids, schema=out.schema)
             if mor_delta:
                 # stamp tombstone presence on the log stats from the profile
                 # aggregation (same frame the log rows were written from) —
@@ -1844,10 +1834,10 @@ def run_replace_write(
 
         if incoming is not None:
             inserts = incoming.withColumn(FILE_ID_COL, F.lit(None).cast("string"))
-            assigned, _ = assign_inserts(table, view, inserts, pack_small_files=False)
+            assigned, groups = assign_inserts(table, view, inserts, pack_small_files=False)
             out = _finalize(_stamp_meta(assigned, instant), data_cols)
-            write_instant_files(table, out, instant, 8)
-            stats = collect_write_stats(table, instant)
+            write_instant_files(table, out, instant, len(groups))
+            stats = collect_write_stats(table, instant, schema=out.schema)
             from . import key_index as _ki
 
             if _ki.enabled(cfg) and table.fs.exists(table.instant_data_path(instant)):

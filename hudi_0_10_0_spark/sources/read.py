@@ -10,6 +10,8 @@ scan — and Spark's parquet source handles pushdown/pruning from there.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -49,16 +51,53 @@ def base_format(table) -> str:
     return getattr(table.cfg, "base_file_format", "parquet").lower()
 
 
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_listing_lock = threading.Lock()
+
+
+def _load_listed_on_driver(spark, reader, uris: list[str]) -> DataFrame:
+    """``reader.load(uris)`` with Spark's file listing kept on the driver.
+
+    Past ``parallelPartitionDiscovery.threshold`` paths (32 by default)
+    Spark lists them in a Spark job with one task per path, and each task
+    pays to deserialize the Hadoop configuration. For files the manifest
+    already names on local storage that job only re-runs local ``stat``
+    calls, so the threshold is raised to ``len(uris)`` around the load.
+    ``InMemoryFileIndex`` lists eagerly inside ``load()``, so the raised
+    value never reaches query execution. The session is restored exactly
+    (unset if it was unset), and a value already at least ``len(uris)``
+    is left alone."""
+    conf = spark.conf
+    with _listing_lock:
+        prev = conf.get(_LISTING_THRESHOLD, None)
+        if prev is not None and int(prev) >= len(uris):
+            return reader.load(uris)
+        conf.set(_LISTING_THRESHOLD, str(len(uris)))
+        try:
+            return reader.load(uris)
+        finally:
+            if prev is None:
+                conf.unset(_LISTING_THRESHOLD)
+            else:
+                conf.set(_LISTING_THRESHOLD, prev)
+
+
 def _read_paths(table, paths: list[str]) -> DataFrame:
     """Read with the table's latest schema pinned: stable column set
-    across commits and add-column evolution (old files yield nulls)."""
+    across commits and add-column evolution (old files yield nulls).
+
+    On local storage the listing of more than 32 files stays on the
+    driver (:func:`_load_listed_on_driver`); remote file systems keep
+    Spark's parallel listing, which pays for itself when every ``stat``
+    is a network round trip."""
     if not paths:
         return _empty(table)
-    df = (
-        table.spark.read.schema(table.read_schema())
-        .format(base_format(table))
-        .load([table.abs_path(p) for p in paths])
-    )
+    reader = table.spark.read.schema(table.read_schema()).format(base_format(table))
+    uris = [table.abs_path(p) for p in paths]
+    if table.fs._is_local and len(uris) > 32:
+        df = _load_listed_on_driver(table.spark, reader, uris)
+    else:
+        df = reader.load(uris)
     if not table.cfg.populate_meta_fields:
         # virtual keys: the pinned schema surfaced the absent meta
         # columns as nulls — fill them before anything keys on them

@@ -1,0 +1,293 @@
+"""The COW write path launches only Spark tasks that do work.
+
+- Listing: base files the manifest names on local storage are listed on
+  the driver, not by a Spark job with one task per path (Spark starts
+  that job past ``parallelPartitionDiscovery.threshold`` = 32 paths). The
+  session's threshold is left exactly as found.
+- Shuffle size: every write shuffle has exactly one partition per file
+  group the bucket plan targets, no padding.
+"""
+
+from __future__ import annotations
+
+import re
+import sys
+import threading
+import uuid
+from contextlib import contextmanager
+
+import pytest
+from pyspark.sql import functions as F
+
+from hudi_0_10_0_spark import HudiTable, TableType, WriteConfig
+from hudi_0_10_0_spark.sources import read
+
+THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+N_ROWS = 2000
+N_GROUPS = 40
+
+
+def rows(spark, lo: int, hi: int, salt: int = 0):
+    return spark.range(lo, hi).select(
+        F.col("id"),
+        F.concat(F.lit("p"), (F.col("id") % 2).cast("string")).alias("part"),
+        (F.col("id") + F.lit(salt)).alias("ts"),
+        F.concat(F.lit("v"), F.col("id").cast("string"), F.lit(f"_{salt}")).alias("val"),
+    )
+
+
+def make_table(spark, path: str, groups: int = N_GROUPS, **cfg) -> HudiTable:
+    """A bulk-loaded table of about ``groups`` base files, one per bulk
+    output partition."""
+    base = dict(
+        record_key_field="id",
+        partition_field="part",
+        precombine_field="ts",
+        write_parallelism=groups,
+        auto_clean=False,
+        auto_archive=False,
+        inline_compact=False,
+    )
+    t = HudiTable.create(spark, path, WriteConfig(**{**base, **cfg}))
+    t.bulk_insert(rows(spark, 0, N_ROWS))
+    return t
+
+
+@pytest.fixture(scope="module")
+def wide(spark, tmp_path_factory):
+    t = make_table(spark, str(tmp_path_factory.mktemp("wide") / "t"))
+    assert len(t.file_slices()) >= N_GROUPS
+    return t
+
+
+def answer(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.select("id", "part", "ts", "val").collect())
+
+
+@contextmanager
+def job_group(spark):
+    """Yields a list that, after the block, holds (name, description) of
+    every Spark job the block started."""
+    sc = spark.sparkContext
+    group = f"task-economy-{uuid.uuid4().hex[:8]}"
+    jobs: list[tuple[str, str]] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        store = sc._jsc.sc().statusStore()
+        for jid in sc.statusTracker().getJobIdsForGroup(group):
+            jd = store.job(int(jid))
+            desc = jd.description()
+            jobs.append((jd.name(), desc.get() if desc.isDefined() else ""))
+
+
+def listing_jobs(jobs) -> list[tuple[str, str]]:
+    return [
+        j for j in jobs
+        if j[0].startswith("load at") or j[1].startswith("Listing leaf files")
+    ]
+
+
+@contextmanager
+def captured_saves():
+    """Yields a list that collects the formatted physical plan of every
+    DataFrame written through ``DataFrameWriter.save`` in the block."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans, orig = [], DataFrameWriter.save
+
+    def save(writer, *args, **kwargs):
+        df = writer._df
+        jvm = df.sparkSession.sparkContext._jvm
+        plans.append(
+            jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        )
+        return orig(writer, *args, **kwargs)
+
+    DataFrameWriter.save = save
+    try:
+        yield plans
+    finally:
+        DataFrameWriter.save = orig
+
+
+def exchange_counts(plan: str, cols: str) -> list[int]:
+    """Partition counts of the plan's ``repartition(n, cols...)``
+    exchanges over exactly the columns in ``cols`` (comma-separated)."""
+    args = r", ".join(rf"{re.escape(c)}#\d+L?" for c in cols.split(","))
+    return [
+        int(n) for n in re.findall(rf"hashpartitioning\({args}, (\d+)\), REPARTITION_BY_NUM", plan)
+    ]
+
+
+def last_commit(t) -> dict:
+    tl = t.timeline
+    return tl.read_metadata(tl.latest_completed())
+
+
+# -- listing -------------------------------------------------------------------------
+def test_snapshot_starts_no_listing_job(spark, wide):
+    with job_group(spark) as jobs:
+        n = wide.snapshot().count()
+    assert n == N_ROWS
+    assert jobs, "the count ran no job at all: the job group was not seen"
+    assert listing_jobs(jobs) == [], jobs
+
+
+def test_upsert_tag_read_starts_no_listing_job(spark, tmp_path):
+    t = make_table(spark, str(tmp_path / "t"))
+    assert len(t.file_slices()) >= N_GROUPS
+    with job_group(spark) as jobs:
+        t.upsert(rows(spark, 0, N_ROWS, salt=10).filter("id % 40 = 0"))
+    assert jobs
+    assert listing_jobs(jobs) == [], jobs
+    assert t.snapshot().filter("val LIKE '%_10'").count() == N_ROWS // 40
+
+
+def test_threshold_left_exactly_as_found(spark, wide):
+    paths = [p for s in wide.file_slices() for p in s.base.paths]
+    assert len(paths) > 32
+    conf = spark.conf
+    assert conf.get(THRESHOLD, None) is None
+    read._read_paths(wide, paths).count()
+    assert conf.get(THRESHOLD, None) is None, "an unset threshold must stay unset"
+    # a load that raises (a missing path) restores it too, and frees the lock
+    missing = paths + [paths[0].rsplit("/", 1)[0] + "/missing.parquet"]
+    with pytest.raises(Exception, match="(?i)path does not exist|PATH_NOT_FOUND"):
+        read._read_paths(wide, missing)
+    assert conf.get(THRESHOLD, None) is None
+    try:
+        for user in ("5", "1000"):  # lower than len(paths), and higher
+            conf.set(THRESHOLD, user)
+            with job_group(spark) as jobs:
+                assert read._read_paths(wide, paths).count() == N_ROWS
+            assert conf.get(THRESHOLD, None) == user
+            assert listing_jobs(jobs) == [], (user, jobs)
+    finally:
+        conf.unset(THRESHOLD)
+
+
+def test_concurrent_loads_restore_the_threshold(spark, wide):
+    """More loading threads than cores, each loading a different number
+    of paths (so each raises to its own value): after every round the
+    session is as it began (unset), so no raise outlived its load."""
+    paths = [p for s in wide.file_slices() for p in s.base.paths]
+    errors: list[BaseException] = []
+
+    def load(n: int):
+        try:
+            read._read_paths(wide, paths[:n])
+        except BaseException as e:  # reported by the assertion below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for rnd in range(5):
+            threads = [threading.Thread(target=load, args=(33 + i,)) for i in range(8)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+            assert not any(t.is_alive() for t in threads)
+            assert errors == []
+            assert spark.conf.get(THRESHOLD, None) is None, rnd
+    finally:
+        sys.setswitchinterval(old)
+        spark.conf.unset(THRESHOLD)
+
+
+def test_rows_match_parallel_listing(spark, wide):
+    local = answer(wide.snapshot())
+    # a remote file system keeps Spark's parallel listing; forced here
+    # on the same files with the threshold at 0
+    spark.conf.set(THRESHOLD, "0")
+    wide.fs._is_local = False
+    try:
+        with job_group(spark) as jobs:
+            parallel = answer(wide.snapshot())
+    finally:
+        wide.fs._is_local = True
+        spark.conf.unset(THRESHOLD)
+    assert listing_jobs(jobs), "the parallel listing job did not run"
+    assert parallel == local
+    assert len(local) == N_ROWS
+
+
+# -- shuffle size --------------------------------------------------------------------
+def _new_groups(t, before: set) -> set:
+    return {
+        (s["partition"], s["file_id"]) for s in last_commit(t)["write_stats"]
+    } - before
+
+
+def _groups(t) -> set:
+    return {(s.partition, s.file_id) for s in t.file_slices()}
+
+
+def _split_upsert(spark, t):
+    """Upsert 50 existing keys and 600 new ones. Small-file packing is
+    off and new groups hold ~40 rows, so the inserts open many groups."""
+    before = _groups(t)
+    batch = rows(spark, 0, N_ROWS, salt=10).filter("id % 40 = 0").unionByName(
+        rows(spark, N_ROWS, N_ROWS + 600, salt=10)
+    )
+    with captured_saves() as plans:
+        t.upsert(batch)
+    return plans[-1], _new_groups(t, before)
+
+
+def test_trickle_upsert_insert_exchange_has_one_partition_per_group(spark, tmp_path):
+    t = make_table(
+        spark, str(tmp_path / "t"), 4, small_file_limit_bytes=0, max_file_size_bytes=2000
+    )
+    plan, new = _split_upsert(spark, t)
+    k = len(new)
+    assert k > 9, k  # more groups than the old padded count
+    assert exchange_counts(plan, "_hoodie_file_id,_hoodie_partition_path") == [k], plan
+    assert t.snapshot().count() == N_ROWS + 600
+
+
+def test_kernel_upsert_exchange_has_one_partition_per_group(spark, tmp_path):
+    t = make_table(
+        spark, str(tmp_path / "t"), 4, small_file_limit_bytes=0,
+        max_file_size_bytes=2000, broadcast_budget_bytes=0,
+    )
+    plan, new = _split_upsert(spark, t)
+    written = len(last_commit(t)["write_stats"])
+    assert written > len(new) > 9
+    assert exchange_counts(plan, "_hoodie_file_id,_hoodie_partition_path") == [written], plan
+    assert t.snapshot().count() == N_ROWS + 600
+
+
+def test_mor_deltacommit_exchange_has_one_partition_per_group(spark, tmp_path):
+    t = make_table(
+        spark, str(tmp_path / "t"), 4, table_type=TableType.MERGE_ON_READ,
+        max_file_size_bytes=2000,
+    )
+    plan, _ = _split_upsert(spark, t)
+    md = last_commit(t)
+    assert md.get("operation") == "upsert"
+    written = len(md["write_stats"])
+    assert written > 9
+    assert exchange_counts(plan, "_fg") == [written], plan
+    assert t.snapshot().count() == N_ROWS + 600
+
+
+def test_insert_overwrite_writes_one_file_per_group(spark, tmp_path):
+    """An overwrite into more than 8 new groups: one writer task and one
+    file per group, and the rows of the overwritten partition replaced."""
+    t = make_table(spark, str(tmp_path / "t"), 4, max_file_size_bytes=2000)
+    src = rows(spark, 0, N_ROWS, salt=7).filter("part = 'p0'")
+    with captured_saves() as plans:
+        t.insert_overwrite(src)
+    stats = last_commit(t)["write_stats"]
+    assert len(stats) > 8
+    assert all(len(s["paths"]) == 1 for s in stats), stats
+    assert exchange_counts(plans[-1], "_fg") == [len(stats)], plans[-1]
+    want = answer(src.unionByName(rows(spark, 0, N_ROWS).filter("part = 'p1'")))
+    assert answer(t.snapshot()) == want

@@ -10,9 +10,12 @@ Builds small deterministic tables in a temporary directory and writes one
 
 - ``cow_snapshot``: COW snapshot read;
 - ``cow_upsert``: COW upsert write (a trickle batch);
+- ``cow_upsert_mixed``: COW upsert write of a batch that updates some
+  keys and inserts new ones (packed into the existing small groups);
 - ``cow_delete``: COW delete write;
 - ``mor_snapshot_bypass_on`` / ``mor_snapshot_bypass_off``: MOR snapshot
   with the log-key bypass forced on and off;
+- ``mor_upsert``: MOR deltacommit write of the same mixed batch;
 - ``mor_compaction``: the write plan of a MOR compaction;
 - ``mor_clustering``: the write plan of clustering a MOR table whose
   groups are partly log-bearing, partly log-free.
@@ -38,9 +41,11 @@ import tempfile
 SHAPES = (
     "cow_snapshot",
     "cow_upsert",
+    "cow_upsert_mixed",
     "cow_delete",
     "mor_snapshot_bypass_on",
     "mor_snapshot_bypass_off",
+    "mor_upsert",
     "mor_compaction",
     "mor_clustering",
 )
@@ -125,6 +130,13 @@ def add_logs(spark, t) -> None:
     t.delete(rows(spark, N_ROWS).filter(F.col("id") % 8 == 4).select("id", "part"))
 
 
+def mixed(spark):
+    """Updates of every 40th key plus N_ROWS // 4 new keys."""
+    return rows(spark, N_ROWS, salt=10).filter("id % 40 = 0").unionByName(
+        rows(spark, N_ROWS + N_ROWS // 4, salt=10).filter(f"id >= {N_ROWS}")
+    )
+
+
 def dump(spark, tmp: str) -> dict[str, str]:
     from pyspark.sql import functions as F
 
@@ -139,6 +151,14 @@ def dump(spark, tmp: str) -> dict[str, str]:
     with captured_saves() as plans:
         cow.delete(rows(spark, N_ROWS).filter(F.col("id") % 50 == 1).select("id", "part"))
     out["cow_delete"] = plans[-1]
+    with captured_saves() as plans:
+        cow.upsert(mixed(spark))
+    out["cow_upsert_mixed"] = plans[-1]
+
+    mor_w = make_table(spark, f"{tmp}/mor_w", mor=True)
+    with captured_saves() as plans:
+        mor_w.upsert(mixed(spark))
+    out["mor_upsert"] = plans[-1]
 
     mor = make_table(spark, f"{tmp}/mor", mor=True)
     add_logs(spark, mor)
