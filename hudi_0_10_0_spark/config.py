@@ -179,26 +179,23 @@ class WriteConfig:
     # HoodieBloomIndex.java explode/lookup, a shape we avoid entirely
     # for the trickle batches where filters pay off)
     bloom_prune_max_keys: int = 2_000_000
-    # One broadcast budget for the three cost-gated broadcast paths; each
+    # One broadcast budget for the two cost-gated broadcast paths; each
     # path estimates its own row width and takes the broadcast only when
-    # rows x width fit (operators/merge.fits_broadcast). 0 disables all
-    # three, sending each to its general shuffle path:
-    # - COW pure delete (optimization r8): tombstone keys (~120 B/key
-    #   framed) rewrite the touched groups via a broadcast LEFT ANTI
-    #   join instead of the merge kernel.
-    # - COW trickle upsert (optimization r9): incoming update rows
-    #   (profile counts x a schema-derived row width) reconcile via
-    #   stored LEFT OUTER JOIN broadcast(incoming winners) — the
-    #   reference merge-handle's stream-base/probe-map algorithm; the
-    #   union+window kernel is its sort-merge analogue.
+    # rows x width fit (operators/merge.fits_broadcast). 0 disables both,
+    # sending each to its general shuffle path:
+    # - COW broadcast merge (upsert, delete and MERGE INTO): tagged
+    #   incoming rows (profile counts x a schema-derived row width)
+    #   reconcile via stored LEFT OUTER JOIN broadcast(incoming winners)
+    #   — the reference merge-handle's stream-base/probe-map algorithm;
+    #   the union+window kernel is its sort-merge analogue. Either way
+    #   every rewritten file group comes out as one file.
     # - MOR snapshot log-key bypass: the distinct log keys (~96 B each)
     #   are broadcast so base rows with no log record skip the merge
     #   shuffle (reference scanner semantics — only log keys merge).
     #   This path is further COST-gated from manifest stats (verdict
     #   r6 #7, sources/read._log_key_bypass_pays): it runs only when the
     #   saved shuffle beats a second base scan plus a fixed overhead.
-    # In all three the stored side streams from the scan without a
-    # shuffle.
+    # In both the stored side streams from the scan without a shuffle.
     broadcast_budget_bytes: int = 64 << 20
     # Virtual keys (hoodie.populate.meta.fields,
     # HoodieTableConfig.java:159-163): when False, data files carry NO

@@ -11,10 +11,10 @@ reconciles each (file_id, partition, record_key) with one window; the
 payload's Column expressions decide survivor + values
 (``finish_merge_frame``). Tungsten codegens the expressions and Spark's
 shuffle spill replaces ``ExternalSpillableMap``. Batches within the
-broadcast budget run ``stored LEFT JOIN broadcast(incoming)`` instead
-(``broadcast_merge_stored``), so the stored side never shuffles; both
-share the same tail. MOR snapshot reads and compaction merge base ∪
-logs with ``mor_merge_window``.
+broadcast budget (upserts, deletes and MERGE INTO alike) run ``stored
+LEFT JOIN broadcast(incoming)`` instead (``broadcast_merge_stored``), so
+the stored side never shuffles; both share the same tail. MOR snapshot
+reads and compaction merge base ∪ logs with ``mor_merge_window``.
 """
 
 from __future__ import annotations
@@ -160,9 +160,9 @@ def merge_stored_and_incoming(
     # Reference per-row stored semantics (HoodieMergeHandle.write,
     # client/io/HoodieMergeHandle.java:315-360): EVERY stored row probes
     # the incoming map independently — duplicate STORED keys each merge
-    # with the incoming winner and each emit (the r8 delete anti-join
-    # matched this; since r9 the kernel does too, so fast path and
-    # kernel agree on every shape regardless of broadcast budgets).
+    # with the incoming winner and each emit, as on the broadcast merge
+    # (upsert, delete and MERGE INTO), so both agree on every shape
+    # regardless of broadcast budgets.
     # Expressed as ONE window over the same single exchange the old
     # groupBy formulation used (HashPartitioning on (fid, partition)
     # satisfies the window's ClusteredDistribution on (fid, partition,
@@ -222,7 +222,7 @@ def finish_merge_frame(
     fast path): evaluate the payload's take_new/is_delete/value
     expressions over the merge-frame columns and project the final
     written shape. Keeping this in ONE place is the equivalence
-    contract between the kernel and the broadcast trickle path."""
+    contract between the kernel and the broadcast merge."""
     take_new = payload.take_new()
     is_delete = payload.is_delete()
     out_cols = [
@@ -246,10 +246,11 @@ def finish_merge_frame(
 
 
 def fits_broadcast(cfg, rows: int, row_bytes: float) -> bool:
-    """The one broadcast gate shared by the delete anti-join, the
-    trickle upsert and the MOR log-key bypass: ``rows`` framed rows of
-    about ``row_bytes`` each (the caller's own width estimate) fit
-    ``cfg.broadcast_budget_bytes``. A budget of 0 never broadcasts."""
+    """The one broadcast gate shared by the COW broadcast merge
+    (upsert, delete and MERGE INTO) and the MOR log-key bypass: ``rows``
+    framed rows of about ``row_bytes`` each (the caller's own width
+    estimate) fit ``cfg.broadcast_budget_bytes``. A budget of 0 never
+    broadcasts."""
     budget = cfg.broadcast_budget_bytes
     return budget > 0 and rows * row_bytes <= budget
 
@@ -262,8 +263,8 @@ def broadcast_merge_stored(
     payload: Payload,
     instant: str,
 ) -> DataFrame:
-    """Trickle-upsert fast path (optimization r9, guide §3.1): the
-    reference merge-handle's actual algorithm — stream the stored base
+    """COW broadcast merge for upserts, deletes and MERGE INTO within
+    the broadcast budget: the reference merge-handle's actual algorithm — stream the stored base
     rows, probe a hash map of the incoming batch
     (``HoodieMergeHandle.write``: keyToNewRecords probe per old record)
     — said directly as ``stored LEFT OUTER JOIN broadcast(incoming)``.

@@ -15,6 +15,7 @@ rows.
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 import uuid
@@ -849,8 +850,9 @@ def _pure_insert_frame(
     over the full merge-frame column shape (typed-null old__<c> side
     included) so conditions referencing the target alias — 'WHEN NOT
     MATCHED AND t.v IS NULL' — resolve exactly like in the kernel, then
-    drop delete-marked rows. Shared by the no-touched-groups bypass and
-    the r9 trickle fast path's insert part."""
+    drop delete-marked rows. Feeds the one insert exchange of
+    ``plan_cow_rewrite`` (passthrough, broadcast and no-stored-side
+    writes alike)."""
     gate = payload.pure_insert_gate()
     if gate is not None:
         from ..payloads import HAS_NEW, HAS_OLD, NEW, OLD
@@ -904,8 +906,8 @@ def _project_write_shape(
 ) -> DataFrame:
     """Project to the written column shape (meta cols then data cols,
     typed NULLs for absent columns) as ONE selectExpr — shared by the
-    insert-rewrite passthrough/append and the trickle insert append
-    (optimization r9, guide §4: one py4j call for the whole width)."""
+    passthrough reconcile's stored rows and the insert exchange of
+    ``plan_cow_rewrite`` (one py4j call for the whole width)."""
     have = set(df.columns)
     return df.selectExpr(
         bq(COMMIT_TIME_COL), bq(SEQNO_COL), bq(RECORD_KEY_COL),
@@ -922,11 +924,11 @@ def _project_write_shape(
 
 
 def _est_merge_row_bytes(data_cols: list[str], col_types: dict[str, str]) -> int:
-    """Framed-row estimate for the trickle-upsert broadcast gate: fixed
-    UnsafeRow/key overhead + a per-column width guess (variable-width
-    types at 32 B, fixed-width at 8 B). Deliberately rough — the budget
-    only has to keep the broadcast orders of magnitude under executor
-    memory, exactly like the delete path's flat 120 B/key."""
+    """Framed-row estimate for the COW broadcast merge's gate (upsert,
+    delete and MERGE INTO alike): fixed UnsafeRow/key overhead + a
+    per-column width guess (variable-width types at 32 B, fixed-width at
+    8 B). Deliberately rough — the budget only has to keep the broadcast
+    orders of magnitude under executor memory."""
     var_width = ("string", "binary", "array", "map", "struct", "decimal")
     est = 48
     for c in data_cols:
@@ -1135,7 +1137,11 @@ class WriteInstant:
             elif self.hooks.pending_only:
                 self._drop_pending()
             else:
-                table.timeline.delete_instant_files(instant, self.action)
+                # a caller-supplied instant's claim is a rival's (see
+                # _drop_pending): it stays, as in the early abort
+                table.timeline.delete_instant_files(
+                    instant, self.action, claim=self.owns_claim
+                )
             if self.hooks.owns_data:
                 from . import key_index
 
@@ -1149,6 +1155,134 @@ class WriteInstant:
                 )
         finally:
             self._stop_heartbeat()
+
+
+def _read_stored(table, slices) -> DataFrame:
+    """The stored rows of the slices a COW commit rewrites. A MOR table
+    routed through the COW rewrite (MERGE INTO / ``requires_stored_merge``
+    payloads) must merge its logs first: reading base files alone would
+    drop uncompacted updates and deletes once the new base supersedes
+    the slice and its logs detach."""
+    from ..sources.read import merge_slices, slices_to_df
+
+    if any(s.logs for s in slices):
+        return merge_slices(table, slices)
+    return slices_to_df(table, slices)
+
+
+def _arrival_winners(df: DataFrame) -> DataFrame:
+    """One row per (group, key): the last arrival, the kernel's
+    ``max_by(__ord)`` map-put-last pick. Also collapses the identical
+    copies a duplicate-stored-key tag join multiplies out."""
+    from pyspark.sql import Window
+
+    order = (
+        F.col(ARRIVAL_ORDER_COL).desc_nulls_last()
+        if ARRIVAL_ORDER_COL in df.columns
+        else F.lit(1)
+    )
+    w = Window.partitionBy(FILE_ID_COL, PARTITION_PATH_COL, RECORD_KEY_COL).orderBy(order)
+    return (
+        df.withColumn("__rnk", F.row_number().over(w))
+        .filter(F.col("__rnk") == 1)
+        .drop("__rnk")
+    )
+
+
+def plan_cow_rewrite(
+    table, view, operation, payload, updates, inserts, update_groups,
+    insert_groups, n_updates, needs_combine, global_idx, data_cols, col_types,
+    instant,
+) -> tuple[set[tuple[str, str]], DataFrame]:
+    """The COW rewrite of one commit: every file group the batch touches
+    (updated groups and small groups packed with inserts) comes out as
+    ONE new file version, like the reference's ``HoodieMergeHandle``
+    (``client/io/HoodieMergeHandle.java:93-118,315-330``). Returns the
+    touched groups and the rows to write, already grouped by file group.
+
+    Stored rows reconcile one of three ways:
+
+    - **passthrough** (INSERT, or nothing stored): nothing reconciles;
+      stored rows are copied through byte-identical (original commit
+      time and seqno) and the incoming rows are appended;
+    - **broadcast**: ``stored LEFT JOIN broadcast(incoming winners)``
+      (``broadcast_merge_stored``), so the stored side never shuffles.
+      Upserts, deletes and MERGE INTO take it when the tagged rows fit
+      the broadcast budget and no touched slice has logs: a log
+      tombstone can remove a tagged key from the merged stored view, and
+      that incoming row must then re-insert through the kernel. Index
+      tagging against live base files otherwise makes every update key
+      present in the stored rows and every insert key absent;
+    - **kernel**: stored ∪ incoming in one exchange on (file_id,
+      partition) with one task per written group
+      (``merge_stored_and_incoming``), inserts included.
+
+    Outside the kernel, inserts go through ONE insert exchange on
+    (file_id, partition) with one task per insert group. The stored rows
+    of a packed group join that exchange, so one task writes the group;
+    the other touched groups stream from their scan. The exchange output
+    then reconciles like stored rows: insert keys are absent from the
+    incoming winners, so the broadcast merge passes them through
+    unchanged, and that merge keeps a single broadcast consumer (Spark
+    does not reuse a broadcast whose build side reads a cached frame).
+    With no stored side the whole batch is the insert exchange."""
+    slices = [
+        s for s in view.latest_file_slices()
+        if (s.partition, s.file_id) in update_groups
+        or (s.partition, s.file_id) in insert_groups
+    ]
+    touched = set(update_groups) | {(s.partition, s.file_id) for s in slices}
+    passthrough = operation == WriteOperation.INSERT or not slices
+    fresh = inserts
+    if not passthrough:
+        if not needs_combine:
+            # the reference's HoodieMergeHandle collapses duplicate update
+            # keys via its keyToNewRecords map even with preCombine
+            # disabled; inserts keep duplicates (the create handle writes
+            # every row) except where noted below
+            updates = precombine_dedup(updates, payload, global_idx)
+        if any(s.logs for s in slices) or not fits_broadcast(
+            table.cfg, n_updates, _est_merge_row_bytes(data_cols, col_types)
+        ):
+            merged = merge_stored_and_incoming(
+                _read_stored(table, slices),
+                updates.unionByName(inserts, allowMissingColumns=True),
+                data_cols, col_types, payload, instant,
+                num_partitions=len(touched | insert_groups),
+            )
+            return touched, merged
+        winners = _arrival_winners(updates)
+        if not needs_combine:
+            # kernel parity: duplicate insert keys headed to one group
+            # collapse by arrival order
+            fresh = _arrival_winners(inserts)
+    elif operation != WriteOperation.INSERT:
+        # nothing stored: a tagged row has no stored row to merge with,
+        # so it is written like an insert
+        fresh = updates.unionByName(inserts, allowMissingColumns=True)
+    streamed = [s for s in slices if (s.partition, s.file_id) not in insert_groups]
+    packed = [s for s in slices if (s.partition, s.file_id) in insert_groups]
+    stored = [_read_stored(table, streamed)] if streamed else []
+    if insert_groups or not slices:
+        live = _pure_insert_frame(fresh, payload, data_cols, col_types)
+        appended = _project_write_shape(_stamp_meta(live, instant), data_cols, col_types)
+        if packed:
+            appended = _project_write_shape(
+                _read_stored(table, packed), data_cols, col_types
+            ).unionByName(appended)
+        stored.append(
+            appended.repartition(
+                max(1, len(insert_groups)), F.col(FILE_ID_COL), F.col(PARTITION_PATH_COL)
+            )
+        )
+    stored = functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), stored
+    )
+    if passthrough:
+        return touched, _project_write_shape(stored, data_cols, col_types)
+    return touched, broadcast_merge_stored(
+        stored, winners, data_cols, col_types, payload, instant
+    )
 
 
 def run_batch_write(
@@ -1175,7 +1309,6 @@ def run_batch_write(
     validate_precommit_config(cfg)
     validate_metrics_config(cfg)
     _write_t0 = time.time()
-    spark = table.spark
     is_delete = operation == WriteOperation.DELETE
     payload = payload or get_payload(
         "empty" if is_delete else cfg.payload, cfg.precombine_field
@@ -1404,198 +1537,15 @@ def run_batch_write(
                     table, out, instant, len(log_fids | insert_groups)
                 )
             else:
-                # COW: rewrite every affected file group (updates + packed
-                # inserts), merging with stored rows; fresh groups come along
-                # in the same pass with an empty old side.
-                touched = set(update_groups)
-                for sl in view.latest_file_slices():
-                    if (sl.partition, sl.file_id) in insert_groups:
-                        touched.add((sl.partition, sl.file_id))  # packed
-                # one write task per file group the commit writes: the
-                # bucket plan, not the partition count, decides which
-                # group a row lands in
-                n_parts = len(touched | insert_groups)
-                old_slices = [
-                    s
-                    for s in view.latest_file_slices()
-                    if (s.partition, s.file_id) in touched
-                ]
-                all_new = (
-                    assigned_inserts
-                    if operation in (WriteOperation.INSERT, WriteOperation.BULK_INSERT)
-                    else updates.unionByName(assigned_inserts, allowMissingColumns=True)
+                touched, merged = plan_cow_rewrite(
+                    table, view, operation, payload, updates, assigned_inserts,
+                    update_groups, insert_groups,
+                    sum(r[2] for r in profile if r[1] is not None),
+                    needs_combine, global_idx, data_cols, col_types, instant,
                 )
-
-                if old_slices:
-                    from ..sources.read import merge_slices, slices_to_df
-
-                    if any(s.logs for s in old_slices):
-                        # a MOR table routed through the COW rewrite path
-                        # (MERGE INTO / requires_stored_merge payloads): the
-                        # stored side must be the MERGED view of the touched
-                        # slices — reading base files alone would silently
-                        # drop uncompacted deltacommit updates/deletes when
-                        # the new base supersedes the slice (the logs detach)
-                        old = merge_slices(table, old_slices)
-                    else:
-                        old = slices_to_df(table, old_slices)
-                    if operation in (WriteOperation.INSERT, WriteOperation.BULK_INSERT):
-                        # insert never consults the index: duplicates of
-                        # existing keys are APPENDED, not merged — i.e. the
-                        # rewrite needs NO reconciliation at all (reference
-                        # create-handle writes every row; stored rows are
-                        # copied over unchanged). Say that directly
-                        # (optimization r9): stored rows of the touched
-                        # groups stream through from the scan byte-identical
-                        # (original commit time / seqno) and incoming rows
-                        # are stamped and appended. Replaces the r8 shape
-                        # that salted keys through the merge kernel purely
-                        # to defeat its per-key reconcile — the union +
-                        # repartition + per-key window over every stored row
-                        # of the touched groups, plus the uuid salt/strip,
-                        # all disappear (guide §2.4: remove shuffles
-                        # outright).
-                        passthrough = _project_write_shape(
-                            old, data_cols, col_types
-                        )
-                        live = _pure_insert_frame(
-                            all_new, payload, data_cols, col_types
-                        )
-                        appended = _project_write_shape(
-                            _stamp_meta(live, instant), data_cols, col_types
-                        ).repartition(
-                            max(1, len(insert_groups)),
-                            F.col(FILE_ID_COL), F.col(PARTITION_PATH_COL),
-                        )
-                        merged = passthrough.unionByName(appended)
-                    elif (
-                        is_delete
-                        and payload.name == "empty"
-                        and fits_broadcast(
-                            cfg, sum(r[2] for r in profile if r[1] is not None), 120
-                        )
-                    ):
-                        # Pure COW delete (EmptyPayload: every incoming row a
-                        # tombstone, kernel output = stored rows with no
-                        # incoming match): say that directly as a broadcast
-                        # LEFT ANTI join instead of routing (old ∪ keys)
-                        # through the kernel's union + repartition + sort-
-                        # aggregate. Survivors stream straight from the base-
-                        # file scan, byte-identical (original commit time /
-                        # seqno — the kernel's take_new=false path), and the
-                        # stored side never shuffles at all (guide §3.1).
-                        # Gated on the delete-key count from the profile we
-                        # already hold (~120 B/key framed) so a huge delete
-                        # batch keeps the shuffle kernel rather than building
-                        # an oversized broadcast; at 100 TB the delete batch
-                        # is the small side by construction. Scan tasks are
-                        # file-aligned, so the output stays grouped by file
-                        # group for the pre-partitioned writer.
-                        jk = [FILE_ID_COL, PARTITION_PATH_COL, RECORD_KEY_COL]
-                        merged = old.join(
-                            F.broadcast(updates.select(*jk)), jk, "left_anti"
-                        )
-                    else:
-                        upd_for_merge = updates
-                        if not needs_combine:
-                            # the reference's HoodieMergeHandle collapses
-                            # duplicate update keys via its keyToNewRecords
-                            # hash map even with preCombine disabled — mirror
-                            # that so the merge groups hold ≤1 incoming row.
-                            # Inserts keep duplicates (create-handle path
-                            # writes every row).
-                            upd_for_merge = precombine_dedup(
-                                updates, payload, global_idx
-                            )
-                            all_new = upd_for_merge.unionByName(
-                                assigned_inserts, allowMissingColumns=True
-                            )
-                        n_upd = sum(r[2] for r in profile if r[1] is not None)
-                        if (
-                            not any(s.logs for s in old_slices)
-                            and fits_broadcast(
-                                cfg, n_upd, _est_merge_row_bytes(data_cols, col_types)
-                            )
-                        ):
-                            # Trickle-upsert fast path (optimization r9,
-                            # guide §3.1): the incoming batch fits the
-                            # broadcast budget, so reconcile via stored LEFT
-                            # JOIN broadcast(incoming winners) — the stored
-                            # side streams from the base-file scan with ZERO
-                            # shuffle (see broadcast_merge_stored for the
-                            # equivalence contract). Gated off when the
-                            # touched slices carry logs: a log tombstone can
-                            # remove a tagged key from the merged stored
-                            # view, and such an unmatched incoming row must
-                            # re-insert via the kernel's new-only path.
-                            # Index tagging against live base files makes
-                            # every update key provably present in `old`
-                            # otherwise, and inserts provably absent — so
-                            # updates reconcile in the join and inserts
-                            # append without one.
-                            from pyspark.sql import Window
-
-                            jk = [FILE_ID_COL, PARTITION_PATH_COL, RECORD_KEY_COL]
-                            ord_col = (
-                                F.col(ARRIVAL_ORDER_COL).desc_nulls_last()
-                                if ARRIVAL_ORDER_COL in upd_for_merge.columns
-                                else F.lit(1)
-                            )
-                            # one winner per (group, key) — the kernel's
-                            # max_by(__ord) map-put-last pick (also collapses
-                            # the identical copies a duplicate-stored-key tag
-                            # join multiplies out)
-                            wk = Window.partitionBy(*jk).orderBy(ord_col)
-                            bc = (
-                                upd_for_merge.withColumn(
-                                    "__rnk", F.row_number().over(wk)
-                                )
-                                .filter(F.col("__rnk") == 1)
-                                .drop("__rnk")
-                            )
-                            merged = broadcast_merge_stored(
-                                old, bc, data_cols, col_types, payload, instant
-                            )
-                            ins_src = assigned_inserts
-                            if not needs_combine:
-                                # kernel parity: duplicate insert keys headed
-                                # to the same group collapse by arrival order
-                                w_rank = Window.partitionBy(*jk).orderBy(ord_col)
-                                ins_src = (
-                                    assigned_inserts.withColumn(
-                                        "__rnk", F.row_number().over(w_rank)
-                                    )
-                                    .filter(F.col("__rnk") == 1)
-                                    .drop("__rnk")
-                                )
-                            live = _pure_insert_frame(
-                                ins_src, payload, data_cols, col_types
-                            )
-                            appended = _project_write_shape(
-                                _stamp_meta(live, instant), data_cols, col_types
-                            ).repartition(
-                                max(1, len(insert_groups)),
-                                F.col(FILE_ID_COL), F.col(PARTITION_PATH_COL),
-                            )
-                            merged = merged.unionByName(appended)
-                        else:
-                            merged = merge_stored_and_incoming(
-                                old, all_new, data_cols, col_types, payload, instant,
-                                num_partitions=n_parts,
-                            )
-                    out = _finalize(merged, data_cols)
-                    timer.mark("merge_plan")
-                    write_instant_files(
-                        table, out, instant, n_parts, pre_partitioned=True,
-                    )
-                else:
-                    # merge-kernel bypass (no stored side): the payload
-                    # must still veto pure inserts — e.g. MERGE INTO with
-                    # no WHEN NOT MATCHED drops unmatched source rows.
-                    live = _pure_insert_frame(all_new, payload, data_cols, col_types)
-                    merged = _stamp_meta(live, instant)
-                    out = _finalize(merged, data_cols)
-                    write_instant_files(table, out, instant, n_parts)
+                out = _finalize(merged, data_cols)
+                timer.mark("merge_plan")
+                write_instant_files(table, out, instant, 0, pre_partitioned=True)
 
             timer.mark("write")
             stats = collect_write_stats(table, instant, log_fids, schema=out.schema)

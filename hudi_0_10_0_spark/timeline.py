@@ -304,10 +304,13 @@ class Timeline:
         self.fs.delete(f"{self.dir}/{timestamp}.claim")
         return inst
 
-    def delete_instant_files(self, timestamp: str, action: str) -> None:
+    def delete_instant_files(self, timestamp: str, action: str, claim: bool = True) -> None:
+        """Remove every state file of the instant and, unless
+        ``claim=False`` (the claim belongs to a rival), its claim."""
         for state in (REQUESTED, INFLIGHT, COMPLETED):
             self.fs.delete(f"{self.dir}/{Instant(timestamp, action, state).filename()}")
-        self.fs.delete(f"{self.dir}/{timestamp}.claim")
+        if claim:
+            self.fs.delete(f"{self.dir}/{timestamp}.claim")
 
     def delete_pending_instant_files(self, timestamp: str, action: str) -> None:
         """Remove only the requested/inflight state files — the

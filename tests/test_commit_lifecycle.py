@@ -11,7 +11,10 @@ either commits it or aborts it. Two things are pinned here:
   post-commit hook (``:833,1002``);
 - early-abort hygiene: a write that fails at ``transition_to_inflight``
   or at ``guarded_commit`` leaves no claim, no heartbeat, no pending
-  instant, no ``data/<instant>/`` and an unchanged snapshot.
+  instant, no ``data/<instant>/`` and an unchanged snapshot;
+- claim ownership: an abort deletes ``<ts>.claim`` only when the write
+  claimed the instant itself, never a rival's claim on a caller-supplied
+  instant.
 """
 
 from __future__ import annotations
@@ -142,4 +145,35 @@ def test_early_abort_leaves_nothing_behind(
     assert not h.fs.list_names(f"{h.meta_path}/heartbeat"), "heartbeat left behind"
     assert list(h.timeline.pending()) == [], "pending instant left behind"
     assert not h.fs.exists(h.instant_data_path(seen[0])), "data dir left behind"
+    assert _state(spark, t.base_path) == before
+
+
+@pytest.mark.parametrize("rival", [True, False])
+def test_late_abort_deletes_only_its_own_claim(
+    spark, pristine, tmp_path, monkeypatch, rival
+):
+    """A write that fails at the precommit validators (after its instant
+    is inflight) removes its claim only if it made it: a caller-supplied
+    instant never claimed the millisecond, so a ``<ts>.claim`` there is
+    a rival's and must survive the abort."""
+    t = _table(spark, pristine, tmp_path, "upsert")
+    before = _state(spark, t.base_path)
+    ts = t.new_instant()
+    kw = {}
+    if rival:
+        assert t.fs.create_exclusive(f"{t.timeline.dir}/{ts}.claim", "")
+        kw["instant_time"] = ts
+
+    def fail(*a):
+        raise RuntimeError("injected validator failure")
+
+    monkeypatch.setattr(W, "run_precommit_validators", fail)
+    with pytest.raises(RuntimeError, match="injected validator failure"):
+        t.upsert(_df(spark, UPD), **kw)
+    monkeypatch.undo()
+
+    h = HudiTable.load(spark, t.base_path)
+    claims = [n for n in h.fs.list_names(h.timeline.dir) if n.endswith(".claim")]
+    assert claims == ([f"{ts}.claim"] if rival else []), claims
+    assert list(h.timeline.pending()) == [], "pending instant left behind"
     assert _state(spark, t.base_path) == before

@@ -1,8 +1,11 @@
-"""COW delete via broadcast anti-join (optimization r8): the fast path
-must answer exactly like the merge-kernel path it bypasses, across the
-edge shapes that could distinguish them — duplicate delete keys, absent
-keys, a fully-emptied file group — and survivors must keep their
-ORIGINAL commit time (incremental-query correctness)."""
+"""COW delete through the broadcast merge (``stored LEFT JOIN
+broadcast(tombstones)``, the path upserts take within the broadcast
+budget): it must answer exactly like the merge-kernel path a zero budget
+forces, across the edge shapes that could distinguish them — duplicate
+delete keys, absent keys, a fully-emptied file group — and survivors
+must keep their ORIGINAL commit time (incremental-query correctness).
+The test names keep the name of the broadcast anti-join this path
+replaced."""
 
 import dataclasses
 
@@ -118,7 +121,7 @@ def test_delete_preserves_untouched_duplicate_stored_keys(
 ):
     """ENGINE-WIDE contract (r9, resolving the r8 pinned divergence):
     duplicate STORED keys of a rewritten group stream through per-row on
-    BOTH the broadcast anti-join fast path and the merge kernel — the
+    BOTH the broadcast merge and the merge kernel — the
     reference merge-handle writes each stored record independently
     (HoodieMergeHandle.write probes the incoming map per old record).
     Deleting key 2 must not silently dedup key 1's duplicates, and the
@@ -171,10 +174,10 @@ def _plan_outside_cache(df) -> str:
 def test_zero_broadcast_budget_takes_every_general_path(
     spark, orders, tmp_table_path, monkeypatch
 ):
-    """``broadcast_budget_bytes=0`` sends all three budget-gated paths to
-    their general shuffle paths — the delete anti-join, the trickle
-    upsert's broadcast join and the MOR log-key bypass — with the same
-    answers as the default budget."""
+    """``broadcast_budget_bytes=0`` sends both budget-gated paths to
+    their general shuffle paths — the COW broadcast merge (upsert and
+    delete) and the MOR log-key bypass — with the same answers as the
+    default budget."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from hudi_0_10_0_spark import TableType
@@ -205,8 +208,8 @@ def test_zero_broadcast_budget_takes_every_general_path(
     assert cow["default"][0] == cow["zero"][0]
     assert "BroadcastHashJoin" in cow["default"][1]
     assert "BroadcastHashJoin" not in cow["zero"][1]
-    assert "LeftAnti" in cow["default"][2]
-    assert "LeftAnti" not in cow["zero"][2]
+    assert "BroadcastHashJoin" in cow["default"][2]
+    assert "BroadcastHashJoin" not in cow["zero"][2]
 
     # without the fixed overhead floor the cost model takes the bypass at
     # this size, so only the budget decides

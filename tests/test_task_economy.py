@@ -6,6 +6,8 @@
   session's threshold is left exactly as found.
 - Shuffle size: every write shuffle has exactly one partition per file
   group the bucket plan targets, no padding.
+- One file per group: a COW rewrite writes each group it touches,
+  packed with inserts or not, as exactly one file.
 """
 
 from __future__ import annotations
@@ -291,3 +293,31 @@ def test_insert_overwrite_writes_one_file_per_group(spark, tmp_path):
     assert exchange_counts(plans[-1], "_fg") == [len(stats)], plans[-1]
     want = answer(src.unionByName(rows(spark, 0, N_ROWS).filter("part = 'p1'")))
     assert answer(t.snapshot()) == want
+
+
+# -- one file per rewritten group ----------------------------------------------------
+@pytest.mark.parametrize(
+    "op,budget",
+    [("upsert", None), ("insert", None), ("upsert", 0)],
+    ids=["upsert-broadcast", "insert-passthrough", "upsert-kernel"],
+)
+def test_packed_groups_are_written_as_one_file(spark, tmp_path, op, budget):
+    """Inserts packed into existing small groups: each rewritten group,
+    packed or not, comes out as exactly one file, whichever way the
+    stored rows reconcile (broadcast merge, insert passthrough, kernel)."""
+    kw = {} if budget is None else {"broadcast_budget_bytes": budget}
+    t = make_table(spark, str(tmp_path / "t"), 8, **kw)
+    before = _groups(t)
+    new = rows(spark, N_ROWS, N_ROWS + 300, salt=10)
+    if op == "upsert":
+        batch = rows(spark, 0, N_ROWS, salt=10).filter("id % 40 = 0").unionByName(new)
+        kept = rows(spark, 0, N_ROWS).filter("id % 40 != 0")
+        t.upsert(batch)
+    else:
+        batch, kept = new, rows(spark, 0, N_ROWS)
+        t.insert(batch)
+    assert _new_groups(t, before) == set(), "the inserts were not packed"
+    stats = [s for s in last_commit(t)["write_stats"] if s["rows"]]
+    assert stats
+    assert all(len(s["paths"]) == 1 for s in stats), stats
+    assert answer(t.snapshot()) == answer(kept.unionByName(batch))
