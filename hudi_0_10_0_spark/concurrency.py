@@ -21,6 +21,7 @@ providers plug in through the same interface.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import threading
 import time
@@ -28,6 +29,19 @@ import time
 
 class ConcurrentWriteConflictError(Exception):
     """A concurrent commit touched the same file groups."""
+
+
+class ServiceGuardedError(ValueError):
+    """A pending service plan is mid-execution under a live rival's
+    heartbeat — refusing concurrent execution. Subclasses ValueError so
+    pre-existing callers that caught ValueError keep working; typed so
+    the inline drain paths can back off on exactly this condition
+    without masking real execution failures (code-review r8)."""
+
+
+def is_occ(cfg) -> bool:
+    """True in multi-writer (optimistic concurrency control) mode."""
+    return cfg.concurrency_mode.upper() == "OPTIMISTIC_CONCURRENCY_CONTROL"
 
 
 class Heartbeat:
@@ -81,6 +95,8 @@ class Heartbeat:
         guard and expose its in-flight write to the lazy sweep
         (code-review r7). The rival's own refresher keeps it fresh; a
         dead rival's file ages out naturally."""
+        if self._stop_evt.is_set():
+            return  # already stopped: the file may be a new owner's now
         self._stop_evt.set()
         # JOIN before deleting: an in-flight refresh write racing the
         # delete would resurrect the file with a fresh mtime, delaying
@@ -98,7 +114,7 @@ class Heartbeat:
 def start_heartbeat(table, instant: str) -> Heartbeat | None:
     """Heartbeat for a write instant — OCC mode only (single-writer has
     no rivals, and its eager sweep of pending instants stays valid)."""
-    if table.cfg.concurrency_mode.upper() != "OPTIMISTIC_CONCURRENCY_CONTROL":
+    if not is_occ(table.cfg):
         return None
     return Heartbeat(table, instant).start()
 
@@ -132,6 +148,13 @@ def heartbeat_live(table, instant: str) -> bool:
 
 class LockTimeoutError(Exception):
     pass
+
+
+class LockBusyError(LockTimeoutError):
+    """The table lock could not be ACQUIRED in time (``table_lock``).
+    Housekeeping callers skip their round on exactly this error; a
+    ``LockTimeoutError`` raised inside the locked body is not one and
+    propagates."""
 
 
 class CommitUndoneError(LockTimeoutError):
@@ -558,6 +581,54 @@ def get_lock_provider(table) -> LockProvider:
     raise ValueError(f"unknown lock provider: {name}")
 
 
+@contextlib.contextmanager
+def table_lock(table, owner: str):
+    """Hold the table lock for the block in OCC mode, yielding the
+    provider (so the holder can ``validate(owner)``); a no-op yielding
+    None in single-writer mode. A failed acquisition raises
+    ``LockBusyError``."""
+    if not is_occ(table.cfg):
+        yield None
+        return
+    lock = get_lock_provider(table)
+    try:
+        lock.lock(owner, wait_seconds=table.cfg.lock_wait_seconds)
+    except LockTimeoutError as e:
+        raise LockBusyError(str(e)) from e
+    try:
+        yield lock
+    finally:
+        lock.unlock(owner)
+
+
+@contextlib.contextmanager
+def claim_execution(table, instant: str):
+    """Execution fence for a scheduled plan (compaction, clustering) in
+    OCC mode: a pending plan with a LIVE heartbeat is a rival
+    mid-execution, and running it here would race its output under the
+    shared ``data/<instant>/`` dir (advice r6 #2). The liveness read and
+    our first heartbeat write are ONE step under the table lock
+    (code-review r7), so two executors cannot both pass the fence. A
+    crashed owner's heartbeat ages past the expiry window and reads
+    not-live, keeping the plan retryable. Yields the heartbeat, which
+    beats for the whole block and stops on exit; yields None in
+    single-writer mode."""
+    if not is_occ(table.cfg):
+        yield None
+        return
+    with table_lock(table, f"executor-{instant}"):
+        if heartbeat_live(table, instant):
+            raise ServiceGuardedError(
+                f"pending plan {instant} is guarded by a live executor's "
+                "heartbeat — refusing concurrent execution"
+            )
+        hb = Heartbeat(table, instant).start()
+    try:
+        yield hb
+    finally:
+        hb.stop()
+
+
 def txn_start_marker(table, view=None) -> str | None:
     """Latest completed write instant at transaction start — the
     reference's ``lastSuccessfulInstant`` captured when the transaction
@@ -571,7 +642,7 @@ def txn_start_marker(table, view=None) -> str | None:
     commit landing between the view read and a later timeline re-list
     still counts as concurrent (it post-dates the planning state).
     None in single-writer mode (no OCC check)."""
-    if table.cfg.concurrency_mode.upper() != "OPTIMISTIC_CONCURRENCY_CONTROL":
+    if not is_occ(table.cfg):
         return None
     if view is not None:
         return max((ts for ts, _, _ in view.commits), default="")
@@ -648,16 +719,14 @@ def guarded_commit(
     Single-writer mode commits directly."""
     from .metadata import reconcile_commit_schema
 
-    if table.cfg.concurrency_mode.upper() != "OPTIMISTIC_CONCURRENCY_CONTROL":
+    if not is_occ(table.cfg):
         # no reconcile needed: single-writer mode means no concurrent
         # DDL can complete between a write's schema capture and its
         # commit (concurrent writers without OCC is a misconfiguration)
         table.timeline.transition_to_completed(instant, action, metadata)
         return
-    lock = get_lock_provider(table)
     owner = f"writer-{instant}"
-    lock.lock(owner, wait_seconds=table.cfg.lock_wait_seconds)
-    try:
+    with table_lock(table, owner) as lock:
         written = {
             (s.get("partition", ""), s["file_id"])
             for s in metadata.get("write_stats", [])
@@ -799,5 +868,3 @@ def guarded_commit(
                         "the lock TTL) and a conflicting rival "
                         "committed unseen — commit undone and aborted"
                     )
-    finally:
-        lock.unlock(owner)

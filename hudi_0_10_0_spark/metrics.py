@@ -90,13 +90,11 @@ class Metrics:
             sum(len(s.get("paths", [])) for s in stats),
         )
 
-    def update_clean_metrics(self, duration_s: float, files_deleted: int):
-        self.gauge("clean", "duration", round(duration_s * 1000.0, 3))
-        self.gauge("clean", "numFilesDeleted", files_deleted)
-
-    def update_rollback_metrics(self, duration_s: float, files_deleted: int):
-        self.gauge("rollback", "duration", round(duration_s * 1000.0, 3))
-        self.gauge("rollback", "numFilesDeleted", files_deleted)
+    def update_service_metrics(self, action: str, duration_s: float, files_deleted: int):
+        """``updateCleanMetrics`` / ``updateRollbackMetrics``: one hook,
+        keyed by the service's timeline action."""
+        self.gauge(action, "duration", round(duration_s * 1000.0, 3))
+        self.gauge(action, "numFilesDeleted", files_deleted)
 
 
 class _NoopMetrics:
@@ -106,10 +104,7 @@ class _NoopMetrics:
     def update_commit_metrics(self, *a, **kw):
         pass
 
-    def update_clean_metrics(self, *a, **kw):
-        pass
-
-    def update_rollback_metrics(self, *a, **kw):
+    def update_service_metrics(self, *a, **kw):
         pass
 
 

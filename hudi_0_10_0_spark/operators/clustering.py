@@ -16,6 +16,7 @@ import uuid
 
 from pyspark.sql import functions as F
 
+from ..concurrency import ServiceGuardedError, claim_execution, table_lock
 from ..config import (
     EMPTY_PARTITION_DIR,
     FILE_ID_COL,
@@ -75,9 +76,7 @@ def schedule_cluster(
     # exclusion-read + plan-claim as ONE step under the table lock in
     # OCC mode (same TOCTOU rationale as schedule_compaction —
     # code-review r8); metadata-only work, no Spark job under the lock
-    from .services import _admin_lock
-
-    with _admin_lock(table, f"schedule-cluster-{uuid.uuid4().hex}"):
+    with table_lock(table, f"schedule-cluster-{uuid.uuid4().hex}"):
         return _schedule_cluster_locked(
             table, partitions, sort_cols, layout, curve_method, curve_bits,
             target_file_size, small_files_only, target_file_groups,
@@ -142,42 +141,53 @@ def run_cluster(
     failed EXECUTION reverts the instant to REQUESTED so the scheduled
     plan — and its update-REJECT protection on the pinned groups — stays
     retryable instead of being silently cancelled (diff-review r5).
-    Inline ``cluster()`` passes False to restore its pre-call state."""
+    Inline ``cluster()`` passes False to restore its pre-call state.
+
+    Execution runs inside the OCC execution fence
+    (``concurrency.claim_execution``), like compaction: a plan whose
+    heartbeat is live belongs to a rival executor and raises
+    ``ServiceGuardedError``; otherwise the fence starts this executor's
+    heartbeat, which the replacecommit's ``WriteInstant`` stops at
+    commit or abort. A plan a rival already completed returns its
+    instant untouched."""
+    tl = table.timeline
     pending = [
         i
-        for i in table.timeline.pending()
+        for i in tl.pending()
         if i.action == REPLACE_COMMIT
-        and table.timeline.read_requested_metadata(i.timestamp, i.action).get(
-            "operation"
-        )
+        and tl.read_requested_metadata(i.timestamp, i.action).get("operation")
         == "cluster"
         and (instant is None or i.timestamp == instant)
     ]
     if not pending:
         return None
-    inst = pending[0]
-    md = table.timeline.read_requested_metadata(inst.timestamp, inst.action)
-    params = md.get("params", {})
-    plan = {(pp, fid) for pp, fid in md.get("plan_groups", [])}
-    view = table.view()
-    slices = [
-        s for s in view.latest_file_slices() if (s.partition, s.file_id) in plan
-    ]
-    if not slices:
-        table.timeline.delete_instant_files(inst.timestamp, REPLACE_COMMIT)
-        return None
-    return _execute_cluster(
-        table,
-        slices,
-        instant=inst.timestamp,
-        sort_cols=params.get("sort_cols"),
-        layout=params.get("layout", "sort"),
-        curve_method=params.get("curve_method", "sample"),
-        curve_bits=params.get("curve_bits", 16),
-        target_file_size=params.get("target_file_size"),
-        target_file_groups=params.get("target_file_groups"),
-        keep_plan_on_failure=keep_plan_on_failure,
-    )
+    ts = pending[0].timestamp
+    with claim_execution(table, ts) as hb:
+        if tl.is_completed(ts, REPLACE_COMMIT):
+            return ts  # a rival executor finished the plan first
+        md = tl.read_requested_metadata(ts, REPLACE_COMMIT)
+        params = md.get("params", {})
+        plan = {(pp, fid) for pp, fid in md.get("plan_groups", [])}
+        view = table.view()
+        slices = [
+            s for s in view.latest_file_slices() if (s.partition, s.file_id) in plan
+        ]
+        if not slices:
+            tl.delete_instant_files(ts, REPLACE_COMMIT)
+            return None
+        return _execute_cluster(
+            table,
+            slices,
+            instant=ts,
+            sort_cols=params.get("sort_cols"),
+            layout=params.get("layout", "sort"),
+            curve_method=params.get("curve_method", "sample"),
+            curve_bits=params.get("curve_bits", 16),
+            target_file_size=params.get("target_file_size"),
+            target_file_groups=params.get("target_file_groups"),
+            keep_plan_on_failure=keep_plan_on_failure,
+            hb=hb,
+        )
 
 
 def cluster(
@@ -211,8 +221,12 @@ def cluster(
         # forever (code-review r8). run_cluster(None) executes the
         # earliest pending plan and is a no-op when none exists; the
         # async retry contract (keep plan on failure) applies since the
-        # plan was scheduled separately.
-        return run_cluster(table, None)
+        # plan was scheduled separately. A plan under a rival's live
+        # execution fence is not ours to drain: nothing to do.
+        try:
+            return run_cluster(table, None)
+        except ServiceGuardedError:
+            return None
     # inline schedule+run: a failure discards the just-created plan,
     # restoring the pre-call state (the async retry contract applies
     # only to plans scheduled separately)
@@ -230,6 +244,7 @@ def _execute_cluster(
     target_file_size: int | None,
     target_file_groups: int | None,
     keep_plan_on_failure: bool = False,
+    hb=None,
 ) -> str:
     cfg = table.cfg
     view = table.view()
@@ -239,7 +254,9 @@ def _execute_cluster(
     # EXECUTION returns the plan to REQUESTED when keep_plan_on_failure:
     # cancelling it would silently drop both the scheduled work and the
     # pending-clustering update-REJECT protection on its file groups
-    with WriteInstant(table, "cluster", REPLACE_COMMIT, instant, keep_plan=keep_plan_on_failure) as wi:
+    with WriteInstant(
+        table, "cluster", REPLACE_COMMIT, instant, hb=hb, keep_plan=keep_plan_on_failure
+    ) as wi:
         from ..sources.read import merge_slices
 
         # fold MOR deltas; the range repartition below sets the layout

@@ -639,20 +639,13 @@ def compact_if_due(table) -> bool:
                     table.fs.delete(f"{root}/{d}", recursive=True)
             return True
 
-        if table.cfg.concurrency_mode.upper() == "OPTIMISTIC_CONCURRENCY_CONTROL":
-            from ..concurrency import LockTimeoutError, get_lock_provider
+        from ..concurrency import LockBusyError, table_lock
 
-            lock = get_lock_provider(table)
-            owner = f"key-index-completer-{_uuid.uuid4().hex[:8]}"
-            try:
-                lock.lock(owner, wait_seconds=table.cfg.lock_wait_seconds)
-            except LockTimeoutError:
-                return False
-            try:
+        try:
+            with table_lock(table, f"key-index-completer-{_uuid.uuid4().hex[:8]}"):
                 return _finish()
-            finally:
-                lock.unlock(owner)
-        return _finish()
+        except LockBusyError:
+            return False
     live = read_index(table, dirs=dirs)  # fold EXACTLY the snapshot
     if live is None:
         return False
@@ -686,18 +679,11 @@ def compact_if_due(table) -> bool:
     # never visible without its bucket count / file ranges
     _write_bucket_marker(table, tmp, n_new)
     _write_ranges_sidecar(table, tmp)
-    cfg = table.cfg
-    if cfg.concurrency_mode.upper() == "OPTIMISTIC_CONCURRENCY_CONTROL":
-        from ..concurrency import LockTimeoutError, get_lock_provider
+    from ..concurrency import LockBusyError, table_lock
 
-        lock = get_lock_provider(table)
-        owner = f"key-index-compactor-{_uuid.uuid4().hex[:8]}"
-        try:
-            lock.lock(owner, wait_seconds=cfg.lock_wait_seconds)
-        except LockTimeoutError:
-            table.fs.delete(tmp, recursive=True)
-            return False
-        try:
+    owner = f"key-index-compactor-{_uuid.uuid4().hex[:8]}"
+    try:
+        with table_lock(table, owner) as lock:
             # fencing: if this holder outlived the lock TTL while the
             # expensive rewrite ran lock-free, a recovery may have
             # displaced the acquisition — re-validate before the swap
@@ -705,9 +691,9 @@ def compact_if_due(table) -> bool:
                 table.fs.delete(tmp, recursive=True)
                 return False
             return _swap_compacted(table, tmp, latest, dirs)
-        finally:
-            lock.unlock(owner)
-    return _swap_compacted(table, tmp, latest, dirs)
+    except LockBusyError:
+        table.fs.delete(tmp, recursive=True)
+        return False
 
 
 def _swap_compacted(table, tmp: str, latest: str, dirs: list[str]) -> bool:

@@ -3,15 +3,48 @@
 Reference: ``client/table/action/compact|clean|rollback|savepoint/``.
 All of these are manifest/timeline manipulations plus (for compaction)
 one DataFrame merge job — no row-level driver work.
+
+Clean, rollback, restore and savepoint share one plan-first lifecycle:
+
+- **plan**: ``run_service`` claims a fresh instant whose ``.requested``
+  file pins the plan (the paths a clean deletes, the instants a
+  rollback or restore unwinds, the commit a savepoint pins) before
+  anything is touched;
+- **step**: ``finish_service`` reads the plan strictly and runs the
+  action's step (``_service_step``), which does the work and returns
+  the completed metadata, or None when there is nothing to finish (a
+  legacy marker, a stale rollback, a replayed savepoint) and the
+  pending files are dropped;
+- **complete once**: the completion is create-once, and a rival's
+  completion of the same instant counts as success
+  (``Timeline.is_completed``);
+- **replay**: a pending plan left by a crash is finished from its plan
+  by ``replay_pending_services`` — ``clean()`` replays CLEAN, the
+  write-start sweep replays ROLLBACK, RESTORE and SAVEPOINT. Under OCC
+  only a plan older than the heartbeat-expiry window is replayed
+  (``_plan_stale``); a young one may be a live rival's.
+
+Compaction keeps its own two-action swap (``compaction.requested`` →
+``commit``), ordered for crash recovery. Both scheduled-plan executors,
+compaction here and clustering, run inside the OCC execution fence
+(``concurrency.claim_execution``): a plan whose heartbeat is live
+belongs to a rival executor and is refused with ``ServiceGuardedError``.
 """
 
 from __future__ import annotations
 
+import time
 import uuid
 
-from pyspark.sql import functions as F
-
-from ..config import DELETE_MARKER_COL, TableType
+from ..concurrency import (
+    LockBusyError,
+    ServiceGuardedError,  # noqa: F401 - re-exported for callers
+    claim_execution,
+    heartbeat_live,
+    is_occ,
+    table_lock,
+)
+from ..config import TableType
 from ..metadata import FileSystemView, WriteStat, make_commit_metadata
 from ..timeline import (
     CLEAN,
@@ -29,14 +62,6 @@ from ..timeline import (
     WRITE_ACTIONS,
 )
 from .write import collect_write_stats, write_instant_files
-
-
-class ServiceGuardedError(ValueError):
-    """A pending service plan is mid-execution under a live rival's
-    heartbeat — refusing concurrent execution. Subclasses ValueError so
-    pre-existing callers that caught ValueError keep working; typed so
-    the inline drain path can back off on exactly this condition
-    without masking real execution failures (code-review r8)."""
 
 # --------------------------------------------------------------------------
 # Compaction (client/table/action/compact/HoodieCompactor.java:99-201)
@@ -110,7 +135,7 @@ def schedule_compaction(
     # landed and pin the same groups). Pure metadata work, no Spark
     # job, so holding the lock is cheap; the reference takes the same
     # lock for scheduleTableServiceInternal under multi-writer.
-    with _admin_lock(table, f"schedule-compaction-{uuid.uuid4().hex}"):
+    with table_lock(table, f"schedule-compaction-{uuid.uuid4().hex}"):
         return _schedule_compaction_locked(
             table, strategy, max_slices, io_budget_bytes, day_partitions
         )
@@ -194,10 +219,7 @@ def run_compaction(table, instant: str | None = None) -> str | None:
     # already COMPLETED (crash between the commit point and the plan-file
     # cleanup), re-executing would rewrite — and with the leftover-dir
     # clear, DELETE — committed data. Finish the cleanup and return.
-    if any(
-        i.timestamp == instant and i.action == COMMIT and i.state == "completed"
-        for i in timeline.instants()
-    ):
+    if timeline.is_completed(instant, COMMIT):
         timeline.delete_pending_instant_files(instant, COMPACTION)
         return instant
     req = [
@@ -205,41 +227,14 @@ def run_compaction(table, instant: str | None = None) -> str | None:
         for i in timeline.instants()
         if i.timestamp == instant and i.action == COMPACTION and i.state == "requested"
     ]
-    # Multi-writer execution fence (advice r6 #2): a pre-existing pending
-    # plan with a LIVE heartbeat is a rival mid-execution — running it
-    # here would race its output under the shared data/<instant>/ dir
-    # (the leftover clear below would delete the rival's in-progress
-    # files). The liveness read and our first heartbeat write are ONE
-    # step under the table lock (code-review r7): an advisory read
-    # followed by an unsynchronized start let two executors both pass
-    # the fence before either started beating. A crashed owner's
-    # heartbeat has aged past the expiry window and reads not-live,
-    # keeping the plan retryable.
-    occ = table.cfg.concurrency_mode.upper() == "OPTIMISTIC_CONCURRENCY_CONTROL"
-    hb = None
-    if occ:
-        from ..concurrency import Heartbeat, get_lock_provider, heartbeat_live
-
-        lock = get_lock_provider(table)
-        owner = f"compactor-{instant}"
-        lock.lock(owner, wait_seconds=table.cfg.lock_wait_seconds)
-        try:
-            if heartbeat_live(table, instant):
-                raise ServiceGuardedError(
-                    f"pending compaction {instant} is guarded by a live "
-                    "writer's heartbeat — refusing concurrent execution"
-                )
-            hb = Heartbeat(table, instant).start()  # claim, atomically
-        finally:
-            lock.unlock(owner)
-    try:
-        return _run_compaction_claimed(table, instant, req, hb)
-    finally:
-        if hb is not None:
-            hb.stop()
+    # the execution fence: a live rival executor's plan raises
+    # ServiceGuardedError; its leftover clear below would otherwise
+    # delete the rival's in-progress files
+    with claim_execution(table, instant):
+        return _run_compaction_claimed(table, instant, req)
 
 
-def _run_compaction_claimed(table, instant, req, hb):
+def _run_compaction_claimed(table, instant, req):
     """Body of run_compaction, entered holding the execution claim (the
     instant's heartbeat) in OCC mode."""
     timeline = table.timeline
@@ -256,12 +251,7 @@ def _run_compaction_claimed(table, instant, req, hb):
             # the plan between the guard above and this listing — its
             # lingering inflight marker must not cost committed data
             # (diff-review r6)
-            if any(
-                i.timestamp == instant
-                and i.action == COMMIT
-                and i.state == "completed"
-                for i in timeline.instants()
-            ):
+            if timeline.is_completed(instant, COMMIT):
                 timeline.delete_pending_instant_files(instant, COMPACTION)
                 return instant
             timeline.delete_pending_instant_files(instant, COMPACTION)
@@ -283,14 +273,14 @@ def _run_compaction_claimed(table, instant, req, hb):
         timeline.delete_instant_files(instant, COMPACTION)
         return None
 
-    # The claim heartbeat (``hb``, started under the lock by the caller
-    # in OCC mode) also covers the COMPLETION swap below: between
-    # create_requested(COMMIT) and transition_to_completed(COMMIT) there
-    # is a pending COMMIT on the timeline; a rival's lazy failed-write
-    # sweep treats any heartbeat-less pending WRITE_ACTION as crashed and
-    # would delete the compacted data dir out from under the completion
-    # write (advice r5). It spans the whole run so the window is covered
-    # no matter how slow the swap.
+    # The fence's heartbeat (started under the lock by the caller in OCC
+    # mode) also covers the COMPLETION swap below: between the COMMIT's
+    # requested and completed files there is a pending COMMIT on the
+    # timeline; a rival's lazy failed-write sweep treats any
+    # heartbeat-less pending WRITE_ACTION as crashed and would delete the
+    # compacted data dir out from under the completion write (advice
+    # r5). It spans the whole run so the window is covered no matter how
+    # slow the swap.
     timeline.transition_to_inflight(instant, COMPACTION)
     committed = False
     created_commit = False
@@ -350,12 +340,9 @@ def _run_compaction_claimed(table, instant, req, hb):
         # compactor committed this instant — its completed commit file
         # and the shared data/<instant>/ dir hold committed data. The
         # completion is create-once, so completed + not-committed-by-us
-        # can only be a rival's success: mirror the _finish_clean /
-        # _finish_rollback loser handling and report success.
-        if any(
-            i.timestamp == instant and i.action == COMMIT and i.state == "completed"
-            for i in timeline.instants()
-        ):
+        # can only be a rival's success: mirror finish_service's loser
+        # handling and report success.
+        if timeline.is_completed(instant, COMMIT):
             timeline.delete_pending_instant_files(instant, COMPACTION)
             return instant
         # a pending COMMIT we did NOT create is a rival mid-swap
@@ -455,10 +442,7 @@ def _guard_compaction_admin(table, instant: str) -> None:
             f"compaction {instant} has a COMMIT on the timeline — "
             "already executed (or mid-completion); admin ops refused"
         )
-    from ..concurrency import heartbeat_live
-
-    occ = table.cfg.concurrency_mode.upper() == "OPTIMISTIC_CONCURRENCY_CONTROL"
-    if occ:
+    if is_occ(table.cfg):
         if heartbeat_live(table, instant):
             raise ValueError(
                 f"compaction {instant} is being executed by a live writer "
@@ -518,8 +502,7 @@ def unschedule_compaction(table, instant: str) -> bool:
     here (no log renames — see the section comment); leftover partial
     output of a crashed execution is cleared with it. Runs under the
     table lock in OCC mode so it cannot race a compactor's claim."""
-    lock_ctx = _admin_lock(table, f"unschedule-{instant}")
-    with lock_ctx:
+    with table_lock(table, f"unschedule-{instant}"):
         if _pending_compaction_plan(table, instant) is None:
             return False
         _guard_compaction_admin(table, instant)
@@ -538,8 +521,7 @@ def unschedule_compaction_file_id(
     """``unscheduleCompactionFileId``: remove ONE file group from a
     pending plan (plan rewritten in place; dropping the last slice
     drops the plan)."""
-    lock_ctx = _admin_lock(table, f"unschedule-fid-{instant}")
-    with lock_ctx:
+    with table_lock(table, f"unschedule-fid-{instant}"):
         plan = _pending_compaction_plan(table, instant)
         if plan is None:
             raise ValueError(f"no pending compaction plan at {instant}")
@@ -580,8 +562,7 @@ def repair_compaction(table, instant: str) -> dict:
     including the validation report — runs under the admin lock so the
     report describes the state the repair acted on
     (code-review r7 part 3)."""
-    lock_ctx = _admin_lock(table, f"repair-{instant}")
-    with lock_ctx:
+    with table_lock(table, f"repair-{instant}"):
         if _compaction_committed(table, instant) and _pending_compaction_plan(
             table, instant
         ) is not None:
@@ -607,25 +588,99 @@ def repair_compaction(table, instant: str) -> dict:
             "cleared_partial_output": cleared, "validation": report}
 
 
-def _admin_lock(table, owner: str):
-    """Table lock in OCC mode; no-op context otherwise."""
-    import contextlib
+# --------------------------------------------------------------------------
+# Service lifecycle: plan → step → complete once → replay
+# --------------------------------------------------------------------------
 
-    if table.cfg.concurrency_mode.upper() != "OPTIMISTIC_CONCURRENCY_CONTROL":
-        return contextlib.nullcontext()
 
-    from ..concurrency import get_lock_provider
+def run_service(table, action: str, plan: dict) -> str:
+    """Pin ``plan`` in a fresh ``<action>.requested`` instant, then
+    execute it (``finish_service``). Returns the instant."""
+    from ..timeline import claim_new_instant
 
-    @contextlib.contextmanager
-    def _ctx():
-        lock = get_lock_provider(table)
-        lock.lock(owner, wait_seconds=table.cfg.lock_wait_seconds)
-        try:
-            yield
-        finally:
-            lock.unlock(owner)
+    instant = claim_new_instant(table, action, plan)
+    finish_service(table, action, instant)
+    return instant
 
-    return _ctx()
+
+def finish_service(table, action: str, instant: str, replay: bool = False) -> None:
+    """Execute the plan pinned at ``instant`` — or, with ``replay``,
+    re-execute a pending plan a crash left behind. Every step tolerates
+    already-done work, so a replay converges.
+
+    The plan read is STRICT: completing with an empty record because the
+    plan was transiently unreadable would permanently lose the work a
+    crashed attempt already did (diff-review r6). Completion happens
+    once: a replay that finds the instant completed returns, and a
+    create-once completion lost to a rival replaying the same plan is
+    success (same content — both derive from the pinned plan)."""
+    tl = table.timeline
+    if replay and tl.is_completed(instant, action):
+        return
+    plan = tl.read_metadata(Instant(instant, action, REQUESTED))
+    md = _service_step(action)(table, plan, replay)
+    if md is None:
+        tl.delete_pending_instant_files(instant, action)
+        return
+    try:
+        tl.transition_to_completed(instant, action, md)
+    except Exception:
+        if not tl.is_completed(instant, action):
+            raise
+
+
+def _service_step(action: str):
+    """``step(table, plan, replay)`` for ``action``, resolved at call
+    time: it does the plan's work and returns the completed metadata, or
+    None when there is nothing to finish."""
+    return {
+        CLEAN: _clean_step,
+        ROLLBACK: _rollback_step,
+        RESTORE: _restore_step,
+        SAVEPOINT: _savepoint_step,
+    }[action]
+
+
+def replay_pending_services(table, actions: tuple[str, ...]) -> None:
+    """Finish every pending plan of ``actions`` from its pinned plan
+    (crash-matrix r6): its work may be half-done, and discarding the plan
+    would strand a partially applied service. Eager in single-writer
+    mode; under OCC only a stale plan (``_plan_stale``) is replayed —
+    a young one may be a live rival's, whose window between plan and
+    completion is milliseconds."""
+    occ = is_occ(table.cfg)
+    for inst in table.timeline.pending():
+        if inst.action not in actions:
+            continue
+        if occ and not _plan_stale(table, inst.timestamp, inst.action):
+            if inst.action == RESTORE:
+                # restore is EXCLUSIVE: writing against a mid-unwind
+                # timeline would build commits on rows the replay is
+                # about to delete (diff-review r6). Block until the
+                # restorer finishes or its plan goes stale and is
+                # replayed here.
+                raise RuntimeError(
+                    f"a restore ({inst.timestamp}) is in progress on "
+                    "this table; writes are blocked until it "
+                    "completes or its stale plan is replayed"
+                )
+            continue
+        finish_service(table, inst.action, inst.timestamp, replay=True)
+
+
+def _plan_stale(table, instant: str, action: str) -> bool:
+    """A pending service plan is replay-safe once its requested file is
+    older than the heartbeat-expiry window — its owner would have
+    completed it by then. Unknown mtime counts as NOT stale (replay is
+    destructive). The one replay rule of every service action."""
+    from ..concurrency import heartbeat_expiry_seconds
+
+    path = f"{table.timeline.dir}/{Instant(instant, action, REQUESTED).filename()}"
+    expiry = heartbeat_expiry_seconds(table.cfg)
+    try:
+        return (time.time() - table.fs.mtime(path)) > expiry
+    except Exception:
+        return False
 
 
 # --------------------------------------------------------------------------
@@ -648,23 +703,11 @@ def clean(table) -> str | None:
     clean found at entry is re-executed from its plan first — file
     deletions are therefore always recorded, never inferred, and a
     crashed clean finishes instead of leaving unrecorded deletions."""
-    import time as _time
-
     from ..metrics import table_metrics
 
-    _t0 = _time.time()
+    _t0 = time.time()
     cfg = table.cfg
-    occ = cfg.concurrency_mode.upper() == "OPTIMISTIC_CONCURRENCY_CONTROL"
-    for inst in table.timeline.pending():
-        if inst.action != CLEAN:
-            continue
-        if occ and not _clean_plan_stale(table, inst.timestamp):
-            # multi-writer: a YOUNG pending clean may be a live rival
-            # mid-execution — replaying it would race its completion.
-            # Only a plan older than the heartbeat-expiry window (its
-            # owner is gone) is finished here (diff-review r6).
-            continue
-        _finish_clean(table, inst.timestamp, replay=True)
+    replay_pending_services(table, (CLEAN,))
     view = table.view()
     commits = [ts for ts, _, _ in view.commits]
     if not commits:
@@ -728,10 +771,8 @@ def clean(table) -> str | None:
     # dataset: drop them from the view (recorded as deleted) but never
     # remove them from disk
     external = view.raw_paths()
-    from ..timeline import claim_new_instant
-
     physical = sorted(p for p in deletable if p not in external)
-    instant = claim_new_instant(
+    instant = run_service(
         table,
         CLEAN,
         {
@@ -740,7 +781,6 @@ def clean(table) -> str | None:
             "policy": cfg.cleaner_policy,
         },
     )
-    _finish_clean(table, instant)
     from .bloom import enabled as _bloom_on, gc_sidecars
 
     if _bloom_on(cfg):
@@ -749,56 +789,23 @@ def clean(table) -> str | None:
         # (unbounded growth otherwise; pruning never reads an instant a
         # live base doesn't reference, so this is pure space GC)
         gc_sidecars(table, table.view())
-    table_metrics(table).update_clean_metrics(_time.time() - _t0, len(physical))
+    table_metrics(table).update_service_metrics(
+        CLEAN, time.time() - _t0, len(physical)
+    )
     return instant
 
 
-def _plan_stale(table, instant: str, action: str) -> bool:
-    """A pending service plan is replay-safe once its requested file is
-    older than the heartbeat-expiry window — its owner would have
-    completed it by then. Unknown mtime counts as NOT stale (replay is
-    destructive). One policy shared by clean replay, the service-marker
-    sweep, and the orphan-heartbeat sweep so they cannot drift."""
-    import time as _time
+def _clean_step(table, plan: dict, replay: bool) -> dict:
+    """Delete the planned physical paths (missing files are fine — a
+    crashed attempt may have removed some already) and record exactly
+    the planned list.
 
-    from ..concurrency import heartbeat_expiry_seconds
-    from ..timeline import Instant as _Instant
-
-    path = f"{table.timeline.dir}/{_Instant(instant, action, 'requested').filename()}"
-    expiry = heartbeat_expiry_seconds(table.cfg)
-    try:
-        return (_time.time() - table.fs.mtime(path)) > expiry
-    except Exception:
-        return False
-
-
-def _clean_plan_stale(table, instant: str) -> bool:
-    return _plan_stale(table, instant, CLEAN)
-
-
-def _finish_clean(table, instant: str, replay: bool = False) -> None:
-    """Execute a clean plan pinned in its ``clean.requested`` file:
-    delete the planned physical paths (missing files are fine — a
-    crashed attempt may have removed some already) and complete the
-    instant recording exactly the planned list.
-
-    The plan read is STRICT: completing a clean with an empty record
-    because the plan was transiently unreadable would permanently lose
-    the deletions already performed (diff-review r6).
-
-    ``replay=True`` (a pending plan found at entry) RE-VALIDATES the
-    stale plan against savepoints created AFTER the plan was pinned
-    (advice r6 #3, mirroring ``_finish_rollback``'s replay
-    re-validation): paths a current savepoint pins are dropped from
+    ``replay`` RE-VALIDATES the stale plan against savepoints created
+    AFTER the plan was pinned (advice r6 #3, like the rollback step's
+    replay re-check): paths a current savepoint pins are dropped from
     both the physical-delete list and the recorded ``deleted`` list, so
     a savepoint taken while a crashed clean sat pending keeps its
     files."""
-    import json as _json
-
-    from ..timeline import Instant as _Instant
-
-    req = f"{table.timeline.dir}/{_Instant(instant, CLEAN, 'requested').filename()}"
-    plan = _json.loads(table.fs.read_text(req))  # raise loudly, never {}
     if replay:
         sps = table.savepoint_instants()
         pinned: set[str] = set()
@@ -829,22 +836,10 @@ def _finish_clean(table, instant: str, replay: bool = False) -> None:
                 ]
     for p in plan.get("physical", []):
         table.fs.delete(table.abs_path(p))
-    try:
-        table.timeline.transition_to_completed(
-            instant,
-            CLEAN,
-            {
-                "deleted": sorted(plan.get("deletable", [])),
-                "policy": plan.get("policy", table.cfg.cleaner_policy),
-            },
-        )
-    except Exception:
-        # two writers replaying the same stale plan race the completion
-        # rename; the loser is fine iff the winner's completed file is
-        # there (identical content — both derive from the pinned plan)
-        done = _Instant(instant, CLEAN, "completed").filename()
-        if not table.fs.exists(f"{table.timeline.dir}/{done}"):
-            raise
+    return {
+        "deleted": sorted(plan.get("deletable", [])),
+        "policy": plan.get("policy", table.cfg.cleaner_policy),
+    }
 
 
 # --------------------------------------------------------------------------
@@ -858,7 +853,10 @@ def rollback_instant(table, timestamp: str) -> str:
     directory of the reference's marker-based rollback
     (``client/table/marker/WriteMarkers.java``) is our layout itself.
     Only the latest completed write (or a pending one) may be rolled
-    back, like the reference's sequential-rollback constraint."""
+    back, like the reference's sequential-rollback constraint. The
+    target is pinned in a ``rollback.requested`` plan before anything is
+    deleted, so a crash mid-unwind leaves a plan the write-start sweep
+    replays to completion (crash-matrix r6)."""
     completed = table.timeline.completed_write_instants()
     target = [i for i in completed if i.timestamp == timestamp]
     if target and completed[-1].timestamp != timestamp:
@@ -870,18 +868,9 @@ def rollback_instant(table, timestamp: str) -> str:
                 action = i.action
         if action is None:
             raise ValueError(f"no such instant {timestamp}")
-    # PLAN-FIRST protocol (crash-matrix r6): pin the target in a
-    # rollback.requested plan, THEN unwind — timeline files before data
-    # files, so no crash point leaves a completed commit referencing
-    # deleted data. A crash mid-unwind leaves the pending plan, which
-    # the failed-write sweep REPLAYS to completion (never discards).
-    from ..timeline import claim_new_instant
-
-    import time as _time
-
     from ..metrics import metrics_enabled, table_metrics
 
-    _t0 = _time.time()
+    _t0 = time.time()
     # the recursive listing exists ONLY to feed the gauge — never pay
     # it on the (metrics-off) failure-recovery path (code-review r7)
     n_files = (
@@ -889,60 +878,51 @@ def rollback_instant(table, timestamp: str) -> str:
         if metrics_enabled(table)
         else 0
     )
-    inst = claim_new_instant(
-        table, ROLLBACK, {"rolled_back": timestamp, "action": action}
-    )
-    _finish_rollback(table, inst)
-    table_metrics(table).update_rollback_metrics(_time.time() - _t0, n_files)
+    inst = run_service(table, ROLLBACK, {"rolled_back": timestamp, "action": action})
+    table_metrics(table).update_service_metrics(ROLLBACK, time.time() - _t0, n_files)
     return inst
 
 
-def _finish_rollback(table, instant: str, replay: bool = False) -> None:
-    """Execute (or re-execute after a crash) a pinned rollback plan.
-    Idempotent: every step tolerates already-deleted targets.
+def _unwind(table, targets) -> None:
+    """Undo write instants in the given order: timeline files first (from
+    then on no reader references the data), then the data dir, then the
+    key-index delta, so no crash point leaves a completed commit
+    referencing deleted data. Every step tolerates already-deleted
+    targets."""
+    from .key_index import drop_instant
 
-    ``replay=True`` (the failed-write sweep) RE-VALIDATES the stale plan
+    for ts, action in targets:
+        table.timeline.delete_instant_files(ts, action)
+        table.fs.delete(table.instant_data_path(ts), recursive=True)
+        drop_instant(table, ts)
+
+
+def _rollback_step(table, plan: dict, replay: bool) -> dict | None:
+    """A rollback is a restore of one target.
+
+    ``replay`` (the write-start sweep) RE-VALIDATES the stale plan
     against the CURRENT timeline before touching anything (diff-review
     r6): if the target commit still exists (its completed file is
     deleted first, so 'still exists' = nothing irreversible happened
     yet) but is no longer the latest write — or has been savepointed —
     the world moved on while the plan sat pending; executing it now
-    would delete a commit newer state was built on. The plan is ABORTED
-    (marker dropped) instead. A target already gone from the timeline
-    means the unwind passed its point of no return — FINISH it."""
-    import json as _json
-
-    from ..timeline import Instant as _Instant
-
-    req = f"{table.timeline.dir}/{_Instant(instant, ROLLBACK, 'requested').filename()}"
-    plan = _json.loads(table.fs.read_text(req))  # strict, like clean
+    would delete a commit newer state was built on, so the plan is
+    dropped instead. A target already gone from the timeline means the
+    unwind passed its point of no return — it is finished."""
     if "rolled_back" not in plan:
         # legacy pre-plan marker ({} requested from the old protocol,
-        # which deleted everything BEFORE creating it) — nothing to
-        # finish, just drop the stranded marker
-        table.timeline.delete_pending_instant_files(instant, ROLLBACK)
-        return
-    ts, action = plan["rolled_back"], plan["action"]
+        # which deleted everything BEFORE creating it) — nothing to finish
+        return None
+    ts = plan["rolled_back"]
     if replay:
         completed = table.timeline.completed_write_instants()
         if any(i.timestamp == ts for i in completed) and (
             completed[-1].timestamp != ts
             or ts in set(table.savepoint_instants())
         ):
-            table.timeline.delete_pending_instant_files(instant, ROLLBACK)
-            return
-    # timeline first: from this point no reader references the data
-    table.timeline.delete_instant_files(ts, action)
-    table.fs.delete(table.instant_data_path(ts), recursive=True)
-    from .key_index import drop_instant as _ki_drop
-
-    _ki_drop(table, ts)
-    try:
-        table.timeline.transition_to_completed(instant, ROLLBACK, plan)
-    except Exception:
-        done = _Instant(instant, ROLLBACK, "completed").filename()
-        if not table.fs.exists(f"{table.timeline.dir}/{done}"):
-            raise
+            return None
+    _unwind(table, [(ts, plan["action"])])
+    return plan
 
 
 def rollback_pending_writes(table) -> list[str]:
@@ -957,153 +937,119 @@ def rollback_pending_writes(table) -> list[str]:
     and only heartbeat-expired (crashed) writers are swept. Scheduled
     clustering plans are pending replacecommits too but are NOT failed
     writes — the reference skips them the same way (``ClusteringUtils``
-    identifies clustering instants by the plan in the requested file)."""
-    from ..concurrency import LockTimeoutError, get_lock_provider, heartbeat_live
-
-    occ = table.cfg.concurrency_mode.upper() == "OPTIMISTIC_CONCURRENCY_CONTROL"
-
-    def _sweep() -> list[str]:
-        rolled = []
-        # listed INSIDE the critical section in OCC mode: a rival's
-        # transition-to-completed holds the same table lock, so an
-        # instant listed as pending here cannot concurrently commit
-        # while we sweep it (a commit-then-hb.stop between a stale
-        # listing and the delete would otherwise look like a crash and
-        # erase COMMITTED data — diff-review r5)
-        for inst in table.timeline.pending():
-            if inst.action not in WRITE_ACTIONS:
-                continue
-            if (
-                inst.action == REPLACE_COMMIT
-                and table.timeline.read_requested_metadata(
-                    inst.timestamp, inst.action
-                ).get("operation")
-                == "cluster"
-            ):
-                continue
-            if occ and heartbeat_live(table, inst.timestamp):
-                continue  # a live rival is still writing this instant
-            table.fs.delete(table.instant_data_path(inst.timestamp), recursive=True)
-            # pending states ONLY — even a wrong staleness judgement must
-            # never erase a completed instant
-            table.timeline.delete_pending_instant_files(inst.timestamp, inst.action)
-            # the crashed writer's timestamp claim dies with its instant
-            # (owner confirmed dead: heartbeat expired / single-writer)
-            table.fs.delete(f"{table.timeline.dir}/{inst.timestamp}.claim")
-            table.fs.delete(f"{table.meta_path}/heartbeat/{inst.timestamp}")
-            from .key_index import drop_instant as _ki_drop
-
-            # never completed -> never folded into an index base
-            _ki_drop(table, inst.timestamp, folded_possible=False)
-            rolled.append(inst.timestamp)
-        # crashed SERVICE MARKERS (crash-matrix r6): a pending ROLLBACK
-        # or RESTORE carries a pinned unwind plan — REPLAY it to
-        # completion (its deletions may be half-done; discarding the
-        # plan would strand a partially-unwound timeline). A pending
-        # SAVEPOINT did no destructive work before completing, so its
-        # stranded marker is simply removed. Eager in single-writer
-        # mode; mtime-stale-gated under OCC (a live rival's window
-        # between the two steps is milliseconds). NEVER a pending CLEAN
-        # — clean() itself finishes those from their plan.
-        for inst in table.timeline.pending():
-            if inst.action not in (ROLLBACK, RESTORE, SAVEPOINT):
-                continue
-            if occ and not _plan_stale(table, inst.timestamp, inst.action):
-                if inst.action == RESTORE:
-                    # restore is EXCLUSIVE: writing against a mid-unwind
-                    # timeline would build commits on rows the replay is
-                    # about to delete (diff-review r6). Block until the
-                    # restorer finishes or its plan goes stale and is
-                    # replayed here.
-                    raise RuntimeError(
-                        f"a restore ({inst.timestamp}) is in progress on "
-                        "this table; writes are blocked until it "
-                        "completes or its stale plan is replayed"
-                    )
-                continue  # young rollback/savepoint: live owner, skip
-            if inst.action == ROLLBACK:
-                _finish_rollback(table, inst.timestamp, replay=True)
-            elif inst.action == RESTORE:
-                _finish_restore(table, inst.timestamp)
-            else:
-                table.timeline.delete_pending_instant_files(inst.timestamp, inst.action)
-        # orphan heartbeats (writer died between heartbeat start and
-        # create_requested, or crashed after commit before stop): no
-        # pending instant will ever sweep them, so collect any EXPIRED
-        # heartbeat whose instant is no longer pending
-        import time as _time
-
-        from ..concurrency import heartbeat_expiry_seconds
-
-        expiry = heartbeat_expiry_seconds(table.cfg)
-        # ONE pending() listing shared by the orphan-heartbeat and
-        # orphan-claim sweeps below (both run after the destructive
-        # loops above, so the listing is current — code-review r7)
-        still_pending = {i.timestamp for i in table.timeline.pending()}
-        if occ:
-            hb_dir = f"{table.meta_path}/heartbeat"
-            for name in table.fs.list_names(hb_dir):
-                if name in still_pending:
-                    continue
-                try:
-                    stale = (
-                        _time.time() - table.fs.mtime(f"{hb_dir}/{name}")
-                    ) > expiry
-                except Exception:
-                    stale = False
-                if stale:
-                    table.fs.delete(f"{hb_dir}/{name}")
-        # orphan instant-claims (timeline.claim_timestamp): a crash
-        # between the claim and create_requested, or between the
-        # completed-file write and the claim retirement, strands a
-        # <ts>.claim that nothing else ever collects — the timeline
-        # listing would grow O(crashes) for the table's lifetime.
-        # Eager in single-writer mode (any claim without an owning
-        # pending instant at write start is garbage, like the pending
-        # instants themselves); under OCC a completed instant at the
-        # timestamp means the retirement crashed (safe to collect:
-        # completion itself deletes the claim), otherwise the owner may
-        # be INSIDE the milliseconds-wide claim→create_requested window
-        # — collect only when the claim has aged past heartbeat expiry
-        # AND no live heartbeat guards the timestamp.
-        completed_ts = (
-            {
-                i.timestamp
-                for i in table.timeline.instants()
-                if i.state == COMPLETED
-            }
-            if occ
-            else set()  # only consulted under OCC (code-review r7)
-        )
-        for name in table.fs.list_names(table.timeline.dir):
-            if not name.endswith(".claim"):
-                continue
-            ts = name[: -len(".claim")]
-            if ts in still_pending:
-                continue  # instant files own the claim's lifecycle
-            path = f"{table.timeline.dir}/{name}"
-            if occ and ts not in completed_ts:
-                try:
-                    young = (_time.time() - table.fs.mtime(path)) <= expiry
-                except Exception:
-                    young = True  # confirm-absent rule, like heartbeats
-                if young or heartbeat_live(table, ts):
-                    continue
-            table.fs.delete(path)
-        return rolled
-
-    if not occ:
-        return _sweep()
-    lock = get_lock_provider(table)
-    owner = f"failed-write-sweep-{uuid.uuid4().hex}"
+    identifies clustering instants by the plan in the requested file).
+    Under OCC the sweep holds the table lock; a busy lock skips this
+    round (housekeeping)."""
     try:
-        lock.lock(owner, wait_seconds=table.cfg.lock_wait_seconds)
-    except LockTimeoutError:
-        return []  # housekeeping: a busy lock just skips this round
-    try:
-        return _sweep()
-    finally:
-        lock.unlock(owner)
+        with table_lock(table, f"failed-write-sweep-{uuid.uuid4().hex}"):
+            return _sweep_failed_writes(table, is_occ(table.cfg))
+    except LockBusyError:
+        return []
+
+
+def _sweep_failed_writes(table, occ: bool) -> list[str]:
+    rolled = []
+    # listed INSIDE the critical section in OCC mode: a rival's
+    # transition-to-completed holds the same table lock, so an
+    # instant listed as pending here cannot concurrently commit
+    # while we sweep it (a commit-then-hb.stop between a stale
+    # listing and the delete would otherwise look like a crash and
+    # erase COMMITTED data — diff-review r5)
+    for inst in table.timeline.pending():
+        if inst.action not in WRITE_ACTIONS:
+            continue
+        if (
+            inst.action == REPLACE_COMMIT
+            and table.timeline.read_requested_metadata(
+                inst.timestamp, inst.action
+            ).get("operation")
+            == "cluster"
+        ):
+            continue
+        if occ and heartbeat_live(table, inst.timestamp):
+            continue  # a live rival is still writing this instant
+        table.fs.delete(table.instant_data_path(inst.timestamp), recursive=True)
+        # pending states ONLY — even a wrong staleness judgement must
+        # never erase a completed instant
+        table.timeline.delete_pending_instant_files(inst.timestamp, inst.action)
+        # the crashed writer's timestamp claim dies with its instant
+        # (owner confirmed dead: heartbeat expired / single-writer)
+        table.fs.delete(f"{table.timeline.dir}/{inst.timestamp}.claim")
+        table.fs.delete(f"{table.meta_path}/heartbeat/{inst.timestamp}")
+        from .key_index import drop_instant as _ki_drop
+
+        # never completed -> never folded into an index base
+        _ki_drop(table, inst.timestamp, folded_possible=False)
+        rolled.append(inst.timestamp)
+    # crashed SERVICE plans (crash-matrix r6): a pending ROLLBACK or
+    # RESTORE carries a pinned unwind plan and is REPLAYED to completion
+    # (its deletions may be half-done); a pending SAVEPOINT did no
+    # destructive work, so its replay just drops the marker. A young
+    # pending RESTORE under OCC blocks the write. NEVER a pending CLEAN
+    # — clean() itself replays those.
+    replay_pending_services(table, (ROLLBACK, RESTORE, SAVEPOINT))
+    # orphan heartbeats (writer died between heartbeat start and
+    # create_requested, or crashed after commit before stop): no
+    # pending instant will ever sweep them, so collect any EXPIRED
+    # heartbeat whose instant is no longer pending
+    from ..concurrency import heartbeat_expiry_seconds
+
+    expiry = heartbeat_expiry_seconds(table.cfg)
+    # ONE pending() listing shared by the orphan-heartbeat and
+    # orphan-claim sweeps below (both run after the destructive
+    # loops above, so the listing is current — code-review r7)
+    still_pending = {i.timestamp for i in table.timeline.pending()}
+    if occ:
+        hb_dir = f"{table.meta_path}/heartbeat"
+        for name in table.fs.list_names(hb_dir):
+            if name in still_pending:
+                continue
+            try:
+                stale = (
+                    time.time() - table.fs.mtime(f"{hb_dir}/{name}")
+                ) > expiry
+            except Exception:
+                stale = False
+            if stale:
+                table.fs.delete(f"{hb_dir}/{name}")
+    # orphan instant-claims (timeline.claim_timestamp): a crash
+    # between the claim and create_requested, or between the
+    # completed-file write and the claim retirement, strands a
+    # <ts>.claim that nothing else ever collects — the timeline
+    # listing would grow O(crashes) for the table's lifetime.
+    # Eager in single-writer mode (any claim without an owning
+    # pending instant at write start is garbage, like the pending
+    # instants themselves); under OCC a completed instant at the
+    # timestamp means the retirement crashed (safe to collect:
+    # completion itself deletes the claim), otherwise the owner may
+    # be INSIDE the milliseconds-wide claim→create_requested window
+    # — collect only when the claim has aged past heartbeat expiry
+    # AND no live heartbeat guards the timestamp.
+    completed_ts = (
+        {
+            i.timestamp
+            for i in table.timeline.instants()
+            if i.state == COMPLETED
+        }
+        if occ
+        else set()  # only consulted under OCC (code-review r7)
+    )
+    for name in table.fs.list_names(table.timeline.dir):
+        if not name.endswith(".claim"):
+            continue
+        ts = name[: -len(".claim")]
+        if ts in still_pending:
+            continue  # instant files own the claim's lifecycle
+        path = f"{table.timeline.dir}/{name}"
+        if occ and ts not in completed_ts:
+            try:
+                young = (time.time() - table.fs.mtime(path)) <= expiry
+            except Exception:
+                young = True  # confirm-absent rule, like heartbeats
+            if young or heartbeat_live(table, ts):
+                continue
+        table.fs.delete(path)
+    return rolled
 
 
 def savepoint(table, timestamp: str | None = None) -> str:
@@ -1115,11 +1061,13 @@ def savepoint(table, timestamp: str | None = None) -> str:
     timestamp = timestamp or completed[-1].timestamp
     if timestamp not in {i.timestamp for i in completed}:
         raise ValueError(f"no completed write instant {timestamp}")
-    from ..timeline import claim_new_instant
+    return run_service(table, SAVEPOINT, {"savepoint_at": timestamp})
 
-    inst = claim_new_instant(table, SAVEPOINT, {})
-    table.timeline.transition_to_completed(inst, SAVEPOINT, {"savepoint_at": timestamp})
-    return inst
+
+def _savepoint_step(table, plan: dict, replay: bool) -> dict | None:
+    """A savepoint does no destructive work before completing, so a
+    replayed (stranded) one is simply dropped."""
+    return None if replay else plan
 
 
 def restore(table, savepoint_ts: str) -> str:
@@ -1136,41 +1084,19 @@ def restore(table, savepoint_ts: str) -> str:
         for i in reversed(table.timeline.completed_write_instants())
         if i.timestamp > savepoint_ts
     ]
-    from ..timeline import claim_new_instant
-
-    inst = claim_new_instant(
+    return run_service(
         table, RESTORE, {"restored_to": savepoint_ts, "targets": targets}
     )
-    _finish_restore(table, inst)
-    return inst
 
 
-def _finish_restore(table, instant: str) -> None:
-    """Execute (or replay) a pinned restore plan — idempotent. The
-    pinned target list stays authoritative at replay because writers are
-    BLOCKED while a pending restore exists (the write-start sweep either
-    replays it or raises), so no commit can land between the plan and
-    its execution."""
-    import json as _json
-
-    from ..timeline import Instant as _Instant
-
-    req = f"{table.timeline.dir}/{_Instant(instant, RESTORE, 'requested').filename()}"
-    plan = _json.loads(table.fs.read_text(req))
+def _restore_step(table, plan: dict, replay: bool) -> dict | None:
+    """The pinned target list stays authoritative at replay because
+    writers are BLOCKED while a pending restore exists (the write-start
+    sweep either replays it or raises), so no commit can land between
+    the plan and its execution."""
     if "restored_to" not in plan:
         # legacy pre-plan marker — the old protocol finished its work
-        # before creating it; drop the stranded marker
-        table.timeline.delete_pending_instant_files(instant, RESTORE)
-        return
-    from .key_index import drop_instant as _ki_drop
-
-    for ts, action in plan.get("targets", []):
-        table.timeline.delete_instant_files(ts, action)
-        table.fs.delete(table.instant_data_path(ts), recursive=True)
-        _ki_drop(table, ts)
-    try:
-        table.timeline.transition_to_completed(instant, RESTORE, plan)
-    except Exception:
-        done = _Instant(instant, RESTORE, "completed").filename()
-        if not table.fs.exists(f"{table.timeline.dir}/{done}"):
-            raise
+        # before creating it
+        return None
+    _unwind(table, plan.get("targets", []))
+    return plan

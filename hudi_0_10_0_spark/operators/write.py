@@ -1021,15 +1021,14 @@ def _claim_write_instant(table, action, operation, instant_time=None):
 class CommitHooks:
     """Which lifecycle steps fire for one kind of data-writing commit.
     ``owns_data``: the abort removes ``data/<instant>/`` and the key-index
-    delta. ``pending_only``: the abort keeps a COMPLETED file, so catching
-    ``BaseException`` never erases a commit an interrupt landed after."""
+    delta. ``catch``: the failures the abort undoes; any other (a crash)
+    only stops the heartbeat."""
 
     validators: bool
     callback: bool
     metrics: bool
     services: bool
     owns_data: bool
-    pending_only: bool = False
     catch: type = Exception
 
 
@@ -1037,11 +1036,11 @@ class CommitHooks:
 # only (``commitStats``, ``AbstractHoodieWriteClient.java:209-213``) and
 # runs inline services from its post-commit hook (``:833,1002``).
 COMMIT_HOOKS = {
-    #       validators callback metrics services owns_data pending_only catch
+    #       validators callback metrics services owns_data catch
     "write": CommitHooks(True, True, True, True, True),
     "replace": CommitHooks(True, True, True, True, True),
     "bootstrap": CommitHooks(False, True, False, False, False),
-    "ddl": CommitHooks(False, False, False, False, False, True, BaseException),
+    "ddl": CommitHooks(False, False, False, False, False, BaseException),
     "cluster": CommitHooks(False, False, False, False, True),
 }
 
@@ -1121,27 +1120,27 @@ class WriteInstant:
         return instant
 
     def abort(self, exc: BaseException | None) -> None:
-        """Undo a write that failed before its commit point: its instant
-        files, ``data/<instant>/`` and key-index delta go, and the
+        """Undo a write that failed before its commit point: its pending
+        instant files, ``data/<instant>/`` and key-index delta go, and the
         heartbeat stops. A failure outside the kind's ``catch`` class (a
-        crash) only stops the heartbeat. No-op once committed."""
+        crash) only stops the heartbeat, and so does a failure once the
+        instant's completed file exists: a rival executor of the same
+        plan (or an interrupt after our own completion) committed it, and
+        the shared ``data/<instant>/`` holds committed files. No-op once
+        committed."""
         if not self._pending:
             return
         self._pending = False
         try:
-            if not isinstance(exc, self.hooks.catch):
-                return
             table, instant = self.table, self.instant
+            if not isinstance(exc, self.hooks.catch) or table.timeline.is_completed(
+                instant, self.action
+            ):
+                return
             if self.keep_plan:
                 table.timeline.revert_to_requested(instant, self.action)
-            elif self.hooks.pending_only:
-                self._drop_pending()
             else:
-                # a caller-supplied instant's claim is a rival's (see
-                # _drop_pending): it stays, as in the early abort
-                table.timeline.delete_instant_files(
-                    instant, self.action, claim=self.owns_claim
-                )
+                self._drop_pending()
             if self.hooks.owns_data:
                 from . import key_index
 

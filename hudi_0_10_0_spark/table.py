@@ -294,32 +294,24 @@ class HudiTable:
         post-commit archivers cannot interleave batch-write/delete; a
         busy lock just skips this round (archiving is housekeeping — the
         next commit retries)."""
-        from .concurrency import LockTimeoutError, get_lock_provider
+        import uuid
 
-        def _run() -> int:
-            n = self.timeline.archive(
-                self.cfg.keep_min_commits,
-                self.cfg.keep_max_commits,
-                protected_ts=set(self.savepoint_instants()),
-            )
-            # bound the batch-file count a fresh reader's view fold pays
-            self.timeline.consolidate_archive(
-                getattr(self.cfg, "archive_merge_batches", 16)
-            )
-            return n
+        from .concurrency import LockBusyError, table_lock
 
-        if self.cfg.concurrency_mode.upper() != "OPTIMISTIC_CONCURRENCY_CONTROL":
-            return _run()
-        lock = get_lock_provider(self)
-        owner = f"archiver-{self.new_instant()}"
         try:
-            lock.lock(owner, wait_seconds=self.cfg.lock_wait_seconds)
-        except LockTimeoutError:
+            with table_lock(self, f"archiver-{uuid.uuid4().hex}"):
+                n = self.timeline.archive(
+                    self.cfg.keep_min_commits,
+                    self.cfg.keep_max_commits,
+                    protected_ts=set(self.savepoint_instants()),
+                )
+                # bound the batch-file count a fresh reader's view fold pays
+                self.timeline.consolidate_archive(
+                    getattr(self.cfg, "archive_merge_batches", 16)
+                )
+                return n
+        except LockBusyError:
             return 0
-        try:
-            return _run()
-        finally:
-            lock.unlock(owner)
 
     def rollback(self, instant: str) -> str:
         from .operators.services import rollback_instant

@@ -253,6 +253,13 @@ class Timeline:
         comp = self.completed(actions)
         return comp[-1] if comp else None
 
+    def is_completed(self, timestamp: str, action: str) -> bool:
+        """One ``exists`` on the completed file: the rival check of every
+        create-once completion (a rival that finished the same instant)."""
+        return self.fs.exists(
+            f"{self.dir}/{Instant(timestamp, action, COMPLETED).filename()}"
+        )
+
     def read_metadata(self, instant: Instant) -> dict:
         return json.loads(self.fs.read_text(f"{self.dir}/{instant.filename()}"))
 

@@ -9,6 +9,10 @@
 4. guarded_commit's post-write undo raises CommitUndoneError and the
    write abort path passes folded_possible=True to drop_instant
    (advice r6 #4).
+5. run_cluster shares compaction's execution fence, and a losing
+   clustering executor's abort keeps the rival's completed
+   replacecommit and the shared data dir.
+6. A service plan replayed after a rival completed it completes once.
 
 Reference analogue: ``TestHoodieClientMultiWriter.java`` rival-service
 interleavings.
@@ -24,11 +28,7 @@ import hudi_0_10_0_spark.operators.write as write_mod
 from hudi_0_10_0_spark import HudiTable, WriteConfig
 from hudi_0_10_0_spark.concurrency import CommitUndoneError
 from hudi_0_10_0_spark.config import TableType
-from hudi_0_10_0_spark.timeline import COMMIT, Instant
-
-# soak/crash-matrix profile: deselected by the default (driver) fast
-# profile, run with HUDI_FULL_SUITE=1 (see tests/conftest.py)
-pytestmark = pytest.mark.soak
+from hudi_0_10_0_spark.timeline import COMMIT, REPLACE_COMMIT, Instant
 
 
 def _df(spark, rows):
@@ -53,6 +53,9 @@ def _mor_cfg(**kw):
     return WriteConfig(**base)
 
 
+# the two slow tests run in the soak profile (HUDI_FULL_SUITE=1, see
+# tests/conftest.py); the rest run in the default profile
+@pytest.mark.soak
 def test_compaction_abort_preserves_rival_completed_commit(spark, tmp_table_path):
     """Writer A loses the create-once COMMIT race to rival B mid-swap:
     A's abort must keep B's completed commit and the shared data dir,
@@ -146,17 +149,17 @@ def test_clean_replay_respects_new_savepoint(spark, tmp_table_path):
         tuple(r) for r in t.time_travel(c1).select("id", "part", "v").collect()
     )
 
-    orig = services._finish_clean
+    orig = services._clean_step
 
-    def crash(table, instant, replay=False):
+    def crash(table, plan, replay=False):
         raise RuntimeError("simulated crash after plan pinned")
 
-    services._finish_clean = crash
+    services._clean_step = crash
     try:
         with pytest.raises(RuntimeError):
             t.clean()
     finally:
-        services._finish_clean = orig
+        services._clean_step = orig
     pending = [i for i in t.timeline.pending() if i.action == "clean"]
     assert pending, "clean plan was not pinned before execution"
 
@@ -173,6 +176,7 @@ def test_clean_replay_respects_new_savepoint(spark, tmp_table_path):
     assert post_c1 == pre_c1, "savepointed files were deleted by the replayed plan"
 
 
+@pytest.mark.soak
 def test_commit_undone_error_wires_folded_possible(spark, tmp_table_path):
     """The write abort path must call drop_instant(folded_possible=True)
     iff the failure was guarded_commit's post-write undo — the instant
@@ -254,10 +258,7 @@ def test_clean_replay_records_pinned_paths_already_deleted(
     """Code-review r7: a savepoint cannot resurrect a file the crashed
     clean already removed — such paths must STAY in the recorded
     ``deleted`` list so the view stops serving the vanished version."""
-    import json as _json
-
     import hudi_0_10_0_spark.operators.services as services
-    from hudi_0_10_0_spark.timeline import CLEAN, Instant as _I
 
     cfg = WriteConfig(
         record_key_field="id",
@@ -274,25 +275,23 @@ def test_clean_replay_records_pinned_paths_already_deleted(
     t.upsert(_df(spark, UPD))
     t.upsert(_df(spark, [(i, f"p{i % 2}", i + 2000) for i in range(0, 60, 7)]))
 
-    # crash mid-_finish_clean: ONE physical delete lands, then the crash
-    orig_finish = services._finish_clean
+    # crash mid clean step: ONE physical delete lands, then the crash
+    orig_step = services._clean_step
     deleted_one = []
 
-    def crash_after_one(table, instant, replay=False):
-        req = f"{table.timeline.dir}/{_I(instant, CLEAN, 'requested').filename()}"
-        plan = _json.loads(table.fs.read_text(req))
+    def crash_after_one(table, plan, replay=False):
         phys = plan.get("physical", [])
         assert len(phys) >= 2, "need at least two deletable files"
         table.fs.delete(table.abs_path(phys[0]))
         deleted_one.append(phys[0])
         raise RuntimeError("crash after first physical delete")
 
-    services._finish_clean = crash_after_one
+    services._clean_step = crash_after_one
     try:
         with pytest.raises(RuntimeError):
             t.clean()
     finally:
-        services._finish_clean = orig_finish
+        services._clean_step = orig_step
 
     h = HudiTable.load(spark, tmp_table_path)
     h.savepoint(c1)  # pins slices including the just-deleted path
@@ -598,3 +597,138 @@ def test_abort_with_caller_instant_keeps_rival_claim(spark, tmp_table_path):
     assert _claims(t) == [f"{ts}.claim"], (
         "abort with caller-supplied instant deleted the rival's claim"
     )
+
+
+def _expected_rows(*batches):
+    exp = {(i, p): v for i, p, v in SEED}
+    for batch in batches:
+        exp.update({(i, p): v for i, p, v in batch})
+    return sorted((i, p, v) for (i, p), v in exp.items())
+
+
+def _snapshot_rows(t):
+    return sorted(tuple(r) for r in t.snapshot().select("id", "part", "v").collect())
+
+
+def test_clustering_refuses_live_rival_heartbeat(spark, tmp_table_path):
+    """OCC mode: run_cluster shares compaction's execution fence. A
+    scheduled clustering plan guarded by a fresh heartbeat is a live
+    rival mid-execution — run_cluster must refuse and leave the plan and
+    the rival's data/<ts>/ output untouched, then run once the heartbeat
+    is gone."""
+    from hudi_0_10_0_spark.operators.services import ServiceGuardedError
+
+    t = HudiTable.create(
+        spark,
+        tmp_table_path,
+        _mor_cfg(
+            concurrency_mode="OPTIMISTIC_CONCURRENCY_CONTROL",
+            lock_wait_seconds=30.0,
+        ),
+    )
+    t.bulk_insert(_df(spark, SEED))
+    t.upsert(_df(spark, UPD))
+    ts = t.schedule_cluster(sort_cols=["id"])
+    assert ts is not None
+    hb = f"{t.meta_path}/heartbeat/{ts}"
+    t.fs.mkdirs(f"{t.meta_path}/heartbeat")
+    t.fs.write_text(hb, "")  # fresh → live rival
+    rival_out = f"{t.instant_data_path(ts)}/rival-in-progress"
+    t.fs.mkdirs(t.instant_data_path(ts))
+    t.fs.write_text(rival_out, "")
+
+    with pytest.raises(ServiceGuardedError, match="live"):
+        t.run_cluster(ts)
+    assert any(
+        i.timestamp == ts and i.action == REPLACE_COMMIT and i.state == "requested"
+        for i in t.timeline.pending()
+    ), "the guarded plan did not stay requested"
+    assert t.fs.exists(rival_out), "the rival's in-progress output was deleted"
+
+    t.fs.delete(hb)  # owner gone
+    assert t.run_cluster(ts) == ts
+    assert _snapshot_rows(HudiTable.load(spark, tmp_table_path)) == _expected_rows(UPD)
+
+
+def test_clustering_loser_keeps_rival_completed_commit(spark, tmp_table_path):
+    """Two executors run one clustering plan and the rival completes it
+    first: the loser fails at the create-once completion, and its abort
+    must keep the rival's completed replacecommit and the shared
+    data/<ts>/ dir (the rule compaction's abort follows)."""
+    t = HudiTable.create(spark, tmp_table_path, _mor_cfg())
+    t.bulk_insert(_df(spark, SEED))
+    t.upsert(_df(spark, UPD))
+    ts = t.schedule_cluster(sort_cols=["id"])
+    assert ts is not None
+
+    a = HudiTable.load(spark, tmp_table_path)
+    b = HudiTable.load(spark, tmp_table_path)
+    orig = a.timeline.transition_to_completed
+    fired = []
+
+    def hijack(timestamp, action, metadata):
+        if action == REPLACE_COMMIT and timestamp == ts and not fired:
+            fired.append(True)
+            assert b.run_cluster(ts) == ts  # rival completes first
+        return orig(timestamp, action, metadata)
+
+    a.timeline.transition_to_completed = hijack
+    with pytest.raises(IOError):
+        a.run_cluster(ts)
+    assert fired
+
+    h = HudiTable.load(spark, tmp_table_path)
+    done = f"{h.timeline.dir}/{Instant(ts, REPLACE_COMMIT, 'completed').filename()}"
+    assert h.fs.exists(done), "rival's completed replacecommit was erased"
+    assert h.fs.exists(h.instant_data_path(ts)), "shared data dir was erased"
+    assert _snapshot_rows(h) == _expected_rows(UPD)
+
+
+def test_replayed_rollback_and_restore_complete_once(spark, tmp_table_path):
+    """A pending rollback plan and a pending restore plan, each replayed
+    twice (two sweeps that listed the same stale plan): the first replay
+    unwinds and completes, the second finds the instant completed and
+    returns without touching anything."""
+    from hudi_0_10_0_spark.operators.services import finish_service
+    from hudi_0_10_0_spark.timeline import RESTORE, ROLLBACK, claim_new_instant
+
+    cfg = WriteConfig(
+        record_key_field="id",
+        partition_field="part",
+        precombine_field="v",
+        auto_clean=False,
+        auto_archive=False,
+    )
+    t = HudiTable.create(spark, tmp_table_path, cfg)
+    c1 = t.bulk_insert(_df(spark, SEED))
+    t.savepoint(c1)
+    upd2 = [(i, f"p{i % 2}", i + 2000) for i in range(0, 60, 7)]
+
+    c2 = t.upsert(_df(spark, UPD))
+    rb = claim_new_instant(t, ROLLBACK, {"rolled_back": c2, "action": COMMIT})
+
+    def replay_twice(action, instant):
+        finish_service(t, action, instant, replay=True)
+        deletes = []
+        orig_delete = t.fs.delete
+        t.fs.delete = lambda *a, **kw: deletes.append(a)
+        try:
+            finish_service(t, action, instant, replay=True)
+        finally:
+            t.fs.delete = orig_delete
+        assert deletes == [], "the second replay redid the unwind"
+        assert t.timeline.is_completed(instant, action)
+        assert not any(i.timestamp == instant for i in t.timeline.pending())
+
+    replay_twice(ROLLBACK, rb)
+    assert c2 not in t.commits()
+    assert _snapshot_rows(t) == _expected_rows()
+
+    c2 = t.upsert(_df(spark, UPD))
+    c3 = t.upsert(_df(spark, upd2))
+    rs = claim_new_instant(
+        t, RESTORE, {"restored_to": c1, "targets": [[c3, COMMIT], [c2, COMMIT]]}
+    )
+    replay_twice(RESTORE, rs)
+    assert t.commits() == [c1]
+    assert _snapshot_rows(HudiTable.load(spark, tmp_table_path)) == _expected_rows()
