@@ -109,9 +109,13 @@ class WriteConfig:
     insert_drop_dups: bool = False
     combine_before_insert: bool = False
     combine_before_upsert: bool = True
-    # SIMPLE | GLOBAL_SIMPLE | BLOOM (range-pruned simple) | INMEMORY
-    # (driver map, testing) | RECORD_INDEX (persisted global key index —
-    # log-structured bucketed parquet under _hoodie_meta/key_index/)
+    # Where operators/write.tag_location looks keys up:
+    # SIMPLE | GLOBAL_SIMPLE (a scan of the live base files) | BLOOM |
+    # GLOBAL_BLOOM (the same scan after key-range and bloom-filter
+    # pruning) | INMEMORY (driver map, testing) | RECORD_INDEX (persisted
+    # global key index — log-structured bucketed parquet under
+    # _hoodie_meta/key_index/). GLOBAL_* and RECORD_INDEX are global
+    # (is_global_index): a key is unique across partitions.
     index_type: str = "SIMPLE"
     update_partition_path: bool = False  # global index: move record across partitions
     # RECORD_INDEX buckets: the INITIAL count (pre-first-compaction
@@ -159,14 +163,11 @@ class WriteConfig:
     clustering_updates_strategy: str = "REJECT"
     collect_column_stats: bool = True
     stats_columns: list[str] | None = None  # None = all leaf primitive columns
-    # BLOOM / GLOBAL_BLOOM index: key-range pruning
-    # (hoodie.bloom.index.prune.by.ranges, HoodieBloomIndex.java:143-155)
-    # and real per-file-group bloom filters (operators/bloom.py — the
-    # membership half of HoodieBloomIndex: range-pruned candidates are
-    # pair-tested against per-group bloom sidecars before any data scan).
-    # fpp mirrors hoodie.index.bloom.fpp's default.
-    bloom_index_prune_by_ranges: bool = True
-    bloom_index_use_filters: bool = True
+    # BLOOM / GLOBAL_BLOOM index: candidate files are pruned by key range
+    # (HoodieBloomIndex.java:143-155), then pair-tested against real
+    # per-file-group bloom filters (operators/bloom.py — the membership
+    # half of HoodieBloomIndex) before any data scan. fpp mirrors
+    # hoodie.index.bloom.fpp's default.
     bloom_index_fpp: float = 0.000000001
     # below this total candidate-base size the plain scan is cheaper
     # than the pair-test jobs — skip the bloom step (cost gate, ours)
@@ -301,6 +302,14 @@ SEQNO_COL = "_hoodie_commit_seqno"
 # canonical spelling let 'RECORD'/'GLOBAL_RECORD' + virtual keys
 # through to a late AnalysisException after a full data write)
 RECORD_INDEX_TYPES = ("RECORD_INDEX", "RECORD", "GLOBAL_RECORD")
+BLOOM_INDEX_TYPES = ("BLOOM", "GLOBAL_BLOOM")
+
+
+def is_global_index(cfg) -> bool:
+    """True when a record key is unique across partitions: tagging
+    looks it up in every partition (GLOBAL_* and the record index)."""
+    kind = cfg.index_type.upper()
+    return kind.startswith("GLOBAL") or kind in RECORD_INDEX_TYPES
 
 RECORD_KEY_COL = "_hoodie_record_key"
 PARTITION_PATH_COL = "_hoodie_partition_path"

@@ -136,12 +136,6 @@ def options_to_kwargs(options: dict) -> dict:
     take("hoodie.copyonwrite.record.size.estimate", "record_size_estimate", int)
     take("hoodie.index.type", "index_type", lambda v: str(v).upper())
     take("hoodie.index.bloom.fpp", "bloom_index_fpp", float)
-    take(
-        "hoodie.bloom.index.prune.by.ranges", "bloom_index_prune_by_ranges", _bool
-    )
-    # ours (the reference always embeds filters in the parquet footer;
-    # our sidecar build is gateable because it costs one extra pass)
-    take("hoodie.bloom.index.use.filters", "bloom_index_use_filters", _bool)
     take("hoodie.bloom.index.prune.min.bytes", "bloom_prune_min_bytes", int)
     take("hoodie.bloom.index.prune.max.keys", "bloom_prune_max_keys", int)
     for k in (

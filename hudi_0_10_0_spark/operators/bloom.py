@@ -45,7 +45,7 @@ import math
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from ..config import FILE_ID_COL, PARTITION_PATH_COL, RECORD_KEY_COL
+from ..config import BLOOM_INDEX_TYPES, FILE_ID_COL, PARTITION_PATH_COL, RECORD_KEY_COL
 
 log = logging.getLogger(__name__)
 
@@ -103,10 +103,7 @@ def _size_filter(n: int, fpp: float) -> tuple[int, int]:
 
 
 def enabled(cfg) -> bool:
-    return (
-        cfg.index_type.upper() in ("BLOOM", "GLOBAL_BLOOM")
-        and cfg.bloom_index_use_filters
-    )
+    return cfg.index_type.upper() in BLOOM_INDEX_TYPES
 
 
 def build_sidecar(table, instant: str, log_fids: set | None = None) -> None:
@@ -191,20 +188,18 @@ def build_sidecar(table, instant: str, log_fids: set | None = None) -> None:
 
 
 def prune_slices(
-    table,
-    incoming: DataFrame,
-    slices: list,
-    global_idx: bool,
-    n_keys: int | None = None,
+    table, incoming: DataFrame, slices: list, global_idx: bool, n_keys: int
 ) -> list:
     """Drop candidate slices no incoming key can live in, per the bloom
     sidecars. Exact keys are resolved by the tag join afterwards — this
-    only bounds WHICH file groups that join has to scan."""
+    only bounds WHICH file groups that join has to scan. ``n_keys`` is
+    the sum of the batch's per-partition (approximate) distinct key
+    counts, from the tag planner's incoming-key summary. For a global
+    index a key that arrives in several partitions of the batch counts
+    once per partition, so a batch near ``bloom_prune_max_keys`` may
+    skip this stage where a batch-wide count would not; results are
+    unchanged, only pruning is lost."""
     cfg = table.cfg
-    if n_keys is None:
-        n_keys = (
-            incoming.agg(F.approx_count_distinct(RECORD_KEY_COL)).first()[0] or 0
-        )
     if n_keys > cfg.bloom_prune_max_keys:
         # a batch this large hits nearly every filter, and the
         # one-row-per-group hash aggregation below would materialize

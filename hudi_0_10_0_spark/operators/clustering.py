@@ -250,12 +250,14 @@ def _execute_cluster(
     view = table.view()
     target = target_file_size or cfg.max_file_size_bytes
     table.timeline.transition_to_inflight(instant, REPLACE_COMMIT)
-    # no claim step: the plan already owns the instant. A failed
-    # EXECUTION returns the plan to REQUESTED when keep_plan_on_failure:
-    # cancelling it would silently drop both the scheduled work and the
-    # pending-clustering update-REJECT protection on its file groups
+    # no claim step: the plan already owns the instant and its claim. A
+    # failed EXECUTION returns the plan to REQUESTED when
+    # keep_plan_on_failure: cancelling it would silently drop both the
+    # scheduled work and the pending-clustering update-REJECT protection
+    # on its file groups. Otherwise the plan goes, and its claim with it.
     with WriteInstant(
-        table, "cluster", REPLACE_COMMIT, instant, hb=hb, keep_plan=keep_plan_on_failure
+        table, "cluster", REPLACE_COMMIT, instant, hb=hb,
+        keep_plan=keep_plan_on_failure, owns_claim=True,
     ) as wi:
         from ..sources.read import merge_slices
 

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import (
+    BLOOM_INDEX_TYPES,
     COMMIT_TIME_COL,
     DEFAULT_PARTITION,
     EMPTY_PARTITION_DIR,
@@ -41,6 +42,7 @@ from ..config import (
     TableType,
     WriteConfig,
     WriteOperation,
+    is_global_index,
 )
 from ..callbacks import fire_commit_callback, validate_callback_config
 from ..metrics import table_metrics, validate_metrics_config
@@ -160,6 +162,11 @@ def _align_to_table_schema(
 # --------------------------------------------------------------------------
 
 _INMEMORY_CACHE: dict[str, tuple] = {}  # base_path -> (fingerprint, entries)
+# HoodieInMemoryHashIndex parity (testing only,
+# ``client/index/inmemory/HoodieInMemoryHashIndex.java``): the whole
+# key→location map lives on the driver, rebuilt whenever the timeline
+# changes, broadcast into the tag join
+_INMEMORY_TYPES = ("INMEMORY", "IN_MEMORY")
 
 
 def _inmemory_index_entries(table, view: FileSystemView) -> list[tuple[str, str, str]]:
@@ -182,145 +189,157 @@ def _inmemory_index_entries(table, view: FileSystemView) -> list[tuple[str, str,
     return entries
 
 
-def tag_location(
-    table, view: FileSystemView, incoming: DataFrame, all_partitions: bool = False
-) -> DataFrame:
-    """SIMPLE index (``client/index/simple/HoodieSimpleIndex.java:94-151``):
-    left-join incoming keys against (key, partition, file_id) projected
-    from the latest base files of affected partitions — Catalyst prunes
-    the scan to exactly the 3 meta columns. BLOOM mode adds the
-    reference's key-range pruning (``HoodieBloomIndex.java:143-155``):
-    files whose [min_key, max_key] cannot contain any incoming key are
-    dropped from the index scan before the join.
+# Below this many table partitions a local index skips the incoming-key
+# summary job (unless BLOOM needs it): the manifest already bounds the
+# index scan, so discovering the batch's partitions would save nothing.
+SUMMARY_MIN_PARTITIONS = 64
 
-    ``all_partitions=True`` skips the affected-partitions discovery job:
-    for tables with few partitions the driver-side manifest already
-    bounds the index scan, so collecting ``incoming``'s distinct
-    partitions would cost a Spark job to save nothing."""
+
+def persist_tag_frame(df: DataFrame) -> DataFrame:
+    """Persist ``incoming`` or ``tagged``. Spark plans a cached frame with
+    AQE's final-stage coalescing off, so its output keeps
+    ``spark.sql.shuffle.partitions`` partitions — 200 by default, for a
+    10-row batch — and every reader of the cache runs that many tasks.
+    When that width is above two tasks per core (the Spark tuning
+    guide's rule), the frame is cached with coalescing on, so AQE sizes
+    the final stage by the data; the write plans then read it through an
+    ``AQEShuffleRead`` and add no exchange. Narrower sessions keep
+    Spark's plan."""
+    from pyspark import StorageLevel
+
+    from ..sources.read import session_conf
+
+    spark = df.sparkSession
+    level = StorageLevel.MEMORY_AND_DISK
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if width <= 2 * spark.sparkContext.defaultParallelism:
+        return df.persist(level)
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    with session_conf(spark, key, "true"):
+        return df.persist(level)
+
+
+def tag_location(table, view: FileSystemView, incoming: DataFrame) -> DataFrame:
+    """Tag each incoming row with the file group holding its key
+    (``_hoodie_file_id``, null for a new key): source → candidate stages
+    → one join, the shape of ``HoodieBloomIndex.java:143-155`` and
+    ``HoodieSimpleIndex.java:94-151``.
+
+    Source (``_index_source``) of (key, partition, file_id) entries: the
+    base files of the candidate slices (SIMPLE, BLOOM, GLOBAL_*; Catalyst
+    prunes the scan to the three meta columns), the driver map (INMEMORY)
+    or the key index's buckets for the batch (RECORD_INDEX).
+
+    Candidate stages only DROP candidates, so none can change a result:
+    live slices, or only the batch's partitions; the key range — a base
+    whose commit-stat [min_key, max_key] misses the batch's keys (in its
+    partition, or anywhere for a global index) goes, a null bound stays;
+    bloom membership (BLOOM); live groups (RECORD_INDEX). The partition
+    and range stages read one incoming-key summary job, run only for
+    BLOOM or past ``SUMMARY_MIN_PARTITIONS`` partitions.
+
+    Join (``_tag_join``): on (key, partition), or on key for a global
+    index. ``incoming`` is persisted exactly when a stage reads it
+    before the join; the caller unpersists it."""
     cfg = table.cfg
-    spark = table.spark
-    global_idx = cfg.index_type.upper().startswith("GLOBAL")
+    is_global = is_global_index(cfg)
+    index = _index_source(table, view, incoming, is_global)
+    if index is None:
+        return incoming.withColumn(FILE_ID_COL, F.lit(None).cast("string"))
+    return _tag_join(incoming, index, is_global, cfg)
+
+
+def _index_source(table, view: FileSystemView, incoming: DataFrame, is_global: bool):
+    """The (key, ``__idx_pp``, ``__idx_fid``) frame the tag join reads,
+    or None when no candidate can hold an incoming key."""
+    cfg = table.cfg
     from . import key_index
 
     if key_index.enabled(cfg):
-        # persisted record-level index: tag I/O is bounded by the index's
-        # touched buckets, not the table's base files (key_index.py)
-        idx = key_index.read_index(
+        persist_tag_frame(incoming)  # read by the bucket lookup and key semi-join
+        source = key_index.read_index(
             table, key_index.tag_buckets_of(table, incoming), keys=incoming
         )
-        if idx is None:
+        if source is None:
             key_index.build_full(table, view)
-            idx = key_index.read_index(table, keys=incoming)
-        if idx is None:
-            return incoming.withColumn(FILE_ID_COL, F.lit(None).cast("string"))
-        # entries can point at file groups since REPLACED (clustering /
-        # insert_overwrite / delete_partition): drop them from the index
-        # frame BEFORE tagging, matching what a live-file scan would have
-        # produced. Demoting after _global_tag is wrong: by then the
-        # index's (stale) partition has already overwritten the incoming
-        # row's partition, so the re-insert would land in the dropped
-        # partition even when the incoming row names another one.
+            source = key_index.read_index(table, keys=incoming)
+        if source is None:
+            return None
+        # entries can point at groups since REPLACED (clustering,
+        # insert_overwrite, delete_partition); left to the global join, one
+        # would move the incoming row into the dropped group's partition
         if any(fg.replaced_at is not None for fg in view.groups.values()):
-            live = sorted(
-                {(s.partition, s.file_id) for s in view.latest_file_slices()}
-            )
+            live = sorted({(s.partition, s.file_id) for s in view.latest_file_slices()})
             live_df = local_df(
-                spark, live, f"{PARTITION_PATH_COL} string, {FILE_ID_COL} string"
+                table.spark, live, f"{PARTITION_PATH_COL} string, {FILE_ID_COL} string"
             )
-            idx = idx.join(
-                F.broadcast(live_df),
-                [PARTITION_PATH_COL, FILE_ID_COL],
-                "left_semi",
+            source = source.join(
+                F.broadcast(live_df), [PARTITION_PATH_COL, FILE_ID_COL], "left_semi"
             )
-        idx = idx.select(
-            F.col(RECORD_KEY_COL),
-            F.col(PARTITION_PATH_COL).alias("__idx_pp"),
-            F.col(FILE_ID_COL).alias("__idx_fid"),
-        )
-        return _global_tag(incoming, idx, cfg)
-    if cfg.index_type.upper() in ("INMEMORY", "IN_MEMORY"):
-        # HoodieInMemoryHashIndex parity (testing only,
-        # ``client/index/inmemory/HoodieInMemoryHashIndex.java``): the
-        # whole key→location map lives on the driver, rebuilt whenever
-        # the timeline changes, broadcast into the tag join.
+    elif cfg.index_type.upper() in _INMEMORY_TYPES:
         entries = _inmemory_index_entries(table, view)
-        if not entries:
-            return incoming.withColumn(FILE_ID_COL, F.lit(None).cast("string"))
-        index = local_df(
-            spark, entries,
-            f"{RECORD_KEY_COL} string, {PARTITION_PATH_COL} string, __idx_fid string",
-        )
-        tagged = incoming.join(
-            F.broadcast(index), [RECORD_KEY_COL, PARTITION_PATH_COL], "left"
-        )
-        return tagged.withColumn(FILE_ID_COL, F.col("__idx_fid")).drop("__idx_fid")
-    if global_idx or all_partitions:
-        slices = view.latest_file_slices()
+        schema = f"{RECORD_KEY_COL} string, __idx_pp string, __idx_fid string"
+        return F.broadcast(local_df(table.spark, entries, schema)) if entries else None
     else:
-        parts = [
-            r[0]
-            for r in incoming.select(PARTITION_PATH_COL).distinct().collect()
-        ]
-        slices = view.latest_file_slices(partitions=parts)
+        slices = _candidate_slices(table, view, incoming, is_global)
+        if not any(s.base.paths for s in slices):
+            return None  # no candidate, or only zero-row (fully deleted) groups
+        from ..sources.read import slices_to_df
 
-    if cfg.index_type.upper() in ("BLOOM", "GLOBAL_BLOOM") and slices:
-        n_keys = None
-        if cfg.bloom_index_prune_by_ranges:
-            rng = incoming.agg(
-                F.min(RECORD_KEY_COL).alias("mn"),
-                F.max(RECORD_KEY_COL).alias("mx"),
-                F.approx_count_distinct(RECORD_KEY_COL).alias("nk"),
-            ).first()
-            if rng and rng["mn"] is not None:
-                n_keys = rng["nk"]
-                slices = [
-                    s
-                    for s in slices
-                    if s.base.min_key is None
-                    or not (s.base.max_key < rng["mn"] or s.base.min_key > rng["mx"])
-                ]
-        if cfg.bloom_index_use_filters and slices:
-            # membership half of HoodieBloomIndex: pair-test incoming
-            # keys against per-group bloom sidecars; only groups some
-            # key actually hits stay in the index scan (operators/bloom.py)
-            from . import bloom as bloom_index
-
-            slices = bloom_index.prune_slices(
-                table, incoming, slices, global_idx, n_keys=n_keys
-            )
-
-    if not slices:
-        return incoming.withColumn(FILE_ID_COL, F.lit(None).cast("string"))
-
-    if not any(s.base.paths for s in slices):
-        # only zero-row slices remain (fully-deleted groups)
-        return incoming.withColumn(FILE_ID_COL, F.lit(None).cast("string"))
-    from ..sources.read import slices_to_df
-
-    index = slices_to_df(table, slices).select(
+        source = slices_to_df(table, slices)
+    return source.select(
         F.col(RECORD_KEY_COL),
         F.col(PARTITION_PATH_COL).alias("__idx_pp"),
         F.col(FILE_ID_COL).alias("__idx_fid"),
     )
-    if global_idx:
-        return _global_tag(incoming, index, cfg)
-    tagged = incoming.join(
-        index.withColumnRenamed("__idx_pp", PARTITION_PATH_COL),
-        [RECORD_KEY_COL, PARTITION_PATH_COL],
-        "left",
-    )
-    return tagged.withColumn(FILE_ID_COL, F.col("__idx_fid")).drop("__idx_fid")
 
 
-def _global_tag(incoming: DataFrame, index: DataFrame, cfg) -> DataFrame:
-    """Join incoming rows against a global (record_key → partition,
-    file_id) index frame; handle cross-partition moves per
-    ``update_partition_path`` (``HoodieGlobalBloomIndex`` semantics)."""
+def _in_range(s, lo, hi) -> bool:
+    b = s.base
+    if lo is None or b.min_key is None or b.max_key is None:
+        return True
+    return not (b.max_key < lo or b.min_key > hi)
+
+
+def _candidate_slices(table, view: FileSystemView, incoming: DataFrame, is_global: bool) -> list:
+    """The live slices that may hold an incoming key, after the
+    partition, key-range and bloom stages."""
+    bloom = table.cfg.index_type.upper() in BLOOM_INDEX_TYPES
+    if not bloom and (is_global or len(view.partitions()) <= SUMMARY_MIN_PARTITIONS):
+        return view.latest_file_slices()
+    persist_tag_frame(incoming)
+    # the incoming-key summary: partition → (min, max[, ~distinct keys])
+    aggs = [F.min(RECORD_KEY_COL), F.max(RECORD_KEY_COL)]
+    aggs += [F.approx_count_distinct(RECORD_KEY_COL)] if bloom else []
+    summary = {r[0]: r[1:] for r in incoming.groupBy(PARTITION_PATH_COL).agg(*aggs).collect()}
+    if is_global:  # a key may live in any partition: the batch's whole range
+        lo = min((v[0] for v in summary.values() if v[0] is not None), default=None)
+        hi = max((v[1] for v in summary.values() if v[1] is not None), default=None)
+        slices = [s for s in view.latest_file_slices() if _in_range(s, lo, hi)]
+    else:
+        slices = view.latest_file_slices(partitions=list(summary))
+        slices = [s for s in slices if _in_range(s, *summary[s.partition][:2])]
+    if bloom and slices:
+        from . import bloom as bloom_index
+
+        n_keys = sum(v[2] for v in summary.values())
+        slices = bloom_index.prune_slices(table, incoming, slices, is_global, n_keys)
+    return slices
+
+
+def _tag_join(incoming: DataFrame, index: DataFrame, is_global: bool, cfg) -> DataFrame:
+    """The one incoming ⋈ index join. A local index joins on (key,
+    partition). A global index joins on the key alone and handles a key
+    that arrives in a new partition per ``update_partition_path``
+    (``HoodieGlobalBloomIndex`` semantics)."""
+    if not is_global:
+        index = index.withColumnRenamed("__idx_pp", PARTITION_PATH_COL)
+        tagged = incoming.join(index, [RECORD_KEY_COL, PARTITION_PATH_COL], "left")
+        return tagged.withColumn(FILE_ID_COL, F.col("__idx_fid")).drop("__idx_fid")
     tagged = incoming.join(index, [RECORD_KEY_COL], "left")
     if cfg.update_partition_path:
-        # GLOBAL index + updatePartitionPath: a key arriving with a new
-        # partition is deleted from the old file group and inserted
-        # into the new partition (HoodieGlobalBloomIndex semantics).
+        # a key arriving with a new partition is deleted from the old
+        # file group and inserted into the new partition
         moved = F.col("__idx_fid").isNotNull() & (
             F.col("__idx_pp") != F.col(PARTITION_PATH_COL)
         )
@@ -1314,7 +1333,7 @@ def run_batch_write(
     )
     from . import key_index
 
-    global_idx = cfg.index_type.upper().startswith("GLOBAL") or key_index.enabled(cfg)
+    global_idx = is_global_index(cfg)
 
     timer = _StageTimer(operation.value)
     table.rollback_pending_writes()
@@ -1404,37 +1423,13 @@ def run_batch_write(
                 )
                 return wi.commit(md, txn_start)
 
-            from pyspark import StorageLevel
-
             # ---- index tagging ------------------------------------------------
             if pre_tagged:
                 tagged = incoming
             elif operation in (WriteOperation.UPSERT, WriteOperation.DELETE) or (
                 operation == WriteOperation.INSERT and cfg.insert_drop_dups
             ):
-                # A table with few partitions gains nothing from discovering
-                # the incoming batch's affected partitions (a Spark job + a
-                # cache pass over `incoming` to avoid re-evaluating keygen +
-                # preCombine): index over every partition and let only the
-                # `tagged` cache materialize the pipeline, once. Tables with
-                # many partitions (the 100 TB shape) keep the pruning join.
-                few_parts = len(view.partitions()) <= 64
-                from .bloom import enabled as _bloom_filters_on
-
-                if (
-                    not few_parts
-                    or key_index.enabled(cfg)
-                    or _bloom_filters_on(cfg)
-                ):
-                    # the incoming pipeline (keygen + align + preCombine
-                    # window) is evaluated more than once downstream: by the
-                    # affected-partitions collect (many-partition tables),
-                    # by the RECORD_INDEX tag's key semi-join + tag join
-                    # (code-review r7), or by the bloom membership stage's
-                    # range agg + distinct-keys pair job (review r8) — cache
-                    # it so that evaluation isn't repeated
-                    incoming = incoming.persist(StorageLevel.MEMORY_AND_DISK)
-                tagged = tag_location(table, view, incoming, all_partitions=few_parts)
+                tagged = tag_location(table, view, incoming)
                 if operation == WriteOperation.INSERT and cfg.insert_drop_dups:
                     # INSERT_DROP_DUPS: drop records whose key already exists
                     tagged = tagged.filter(F.col(FILE_ID_COL).isNull())
@@ -1444,7 +1439,7 @@ def run_batch_write(
             # the tagged frame feeds ≥3 actions (profile collects + the write);
             # persist it like the reference persists its input RDD
             # (BaseSparkCommitActionExecutor.java:150-151)
-            tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
+            tagged = persist_tag_frame(tagged)
             updates = tagged.filter(F.col(FILE_ID_COL).isNotNull())
             inserts = tagged.filter(F.col(FILE_ID_COL).isNull())
             timer.mark("tag_plan")

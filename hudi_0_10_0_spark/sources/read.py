@@ -10,6 +10,7 @@ scan — and Spark's parquet source handles pushdown/pruning from there.
 
 from __future__ import annotations
 
+import contextlib
 import threading
 
 from pyspark.sql import DataFrame
@@ -52,7 +53,31 @@ def base_format(table) -> str:
 
 
 _LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-_listing_lock = threading.Lock()
+_conf_lock = threading.Lock()
+
+
+@contextlib.contextmanager
+def session_conf(spark, key: str, value: str):
+    """Run the block with the SQL conf ``key`` set to ``value`` on the
+    shared session, restored exactly afterwards (unset if it was unset).
+    One lock serializes these blocks, so they never restore each other's
+    values. The session is shared, though: another thread planning in
+    the window sees ``value``, and a ``conf.set`` of ``key`` made by
+    another thread in the window is lost to the restore."""
+    conf = spark.conf
+    with _conf_lock:
+        prev = conf.get(key, None)
+        if prev == value:
+            yield
+            return
+        conf.set(key, value)
+        try:
+            yield
+        finally:
+            if prev is None:
+                conf.unset(key)
+            else:
+                conf.set(key, prev)
 
 
 def _load_listed_on_driver(spark, reader, uris: list[str]) -> DataFrame:
@@ -64,22 +89,11 @@ def _load_listed_on_driver(spark, reader, uris: list[str]) -> DataFrame:
     already names on local storage that job only re-runs local ``stat``
     calls, so the threshold is raised to ``len(uris)`` around the load.
     ``InMemoryFileIndex`` lists eagerly inside ``load()``, so the raised
-    value never reaches query execution. The session is restored exactly
-    (unset if it was unset), and a value already at least ``len(uris)``
-    is left alone."""
-    conf = spark.conf
-    with _listing_lock:
-        prev = conf.get(_LISTING_THRESHOLD, None)
-        if prev is not None and int(prev) >= len(uris):
-            return reader.load(uris)
-        conf.set(_LISTING_THRESHOLD, str(len(uris)))
-        try:
-            return reader.load(uris)
-        finally:
-            if prev is None:
-                conf.unset(_LISTING_THRESHOLD)
-            else:
-                conf.set(_LISTING_THRESHOLD, prev)
+    value never reaches query execution; a value already at least
+    ``len(uris)`` is left alone."""
+    value = max(len(uris), int(spark.conf.get(_LISTING_THRESHOLD)))
+    with session_conf(spark, _LISTING_THRESHOLD, str(value)):
+        return reader.load(uris)
 
 
 def _read_paths(table, paths: list[str]) -> DataFrame:

@@ -41,6 +41,12 @@ def _cfg(**kw):
     return WriteConfig(**base)
 
 
+def _prune(t, incoming, slices) -> list:
+    """``prune_slices`` on a global index, given the batch's key count as
+    the tag planner's incoming-key summary gives it."""
+    return B.prune_slices(t, incoming, slices, global_idx=True, n_keys=incoming.count())
+
+
 def test_size_filter_sane():
     m, k = B._size_filter(1000, 0.01)
     assert m % 8 == 0 and m >= 9000 and 5 <= k <= 9
@@ -59,20 +65,15 @@ def test_sidecar_written_and_prunes_interleaved_groups(spark, tmp_table_path):
     incoming = spark.createDataFrame(
         [("51", "p1")], f"{RECORD_KEY_COL} string, {PARTITION_PATH_COL} string"
     )
-    pruned = B.prune_slices(t, incoming, slices, global_idx=True)
+    pruned = _prune(t, incoming, slices)
     # id 51 is odd → lives in p1's group only; p0's group bloom-misses
     assert {s.partition for s in pruned} == {"p1"}
     assert len(pruned) < len(slices)
     # an absent key prunes everything (pure insert: no index scan at all)
-    nothing = B.prune_slices(
-        t,
-        spark.createDataFrame(
-            [("zzz-not-there", "p0")],
-            f"{RECORD_KEY_COL} string, {PARTITION_PATH_COL} string",
-        ),
-        slices,
-        global_idx=True,
+    absent_key = spark.createDataFrame(
+        [("zzz-not-there", "p0")], f"{RECORD_KEY_COL} string, {PARTITION_PATH_COL} string"
     )
+    nothing = _prune(t, absent_key, slices)
     assert nothing == []
 
 
@@ -123,7 +124,7 @@ def test_missing_sidecar_disables_pruning_not_correctness(spark, tmp_table_path)
         [("51", "p1")], f"{RECORD_KEY_COL} string, {PARTITION_PATH_COL} string"
     )
     # nothing prunable → everything kept
-    assert len(B.prune_slices(t, incoming, slices, global_idx=True)) == len(slices)
+    assert len(_prune(t, incoming, slices)) == len(slices)
     # and the write path still works end-to-end
     t.upsert(_df(spark, [(51, "p1", 9999)]))
     got = {r["id"]: r["v"] for r in t.snapshot().select("id", "v").collect()}
@@ -154,12 +155,12 @@ def test_max_keys_gate_skips_membership_stage(spark, tmp_table_path):
         [(str(i), f"p{i % 2}") for i in range(40)],
         f"{RECORD_KEY_COL} string, {PARTITION_PATH_COL} string",
     )
-    assert B.prune_slices(t, incoming, slices, global_idx=True) == slices
+    assert _prune(t, incoming, slices) == slices
     # and below the cap the stage still prunes
     one = spark.createDataFrame(
         [("absent-xyz", "p0")], f"{RECORD_KEY_COL} string, {PARTITION_PATH_COL} string"
     )
-    assert B.prune_slices(t, one, slices, global_idx=True) == []
+    assert _prune(t, one, slices) == []
     t.upsert(_df(spark, [(i, f"p{i % 2}", i + 5000) for i in range(40)]))
     got = {r["id"]: r["v"] for r in t.snapshot().select("id", "v").collect()}
     assert got[39] == 5039 and len(got) == len(SEED)
@@ -197,20 +198,15 @@ def test_fp_rate_bounded(spark, tmp_table_path):
         [(f"absent-{j}", "p0") for j in range(200)],
         f"{RECORD_KEY_COL} string, {PARTITION_PATH_COL} string",
     )
-    pruned = B.prune_slices(t, absent, slices, global_idx=True)
+    pruned = _prune(t, absent, slices)
     # 200 absent keys × 100-key filters at 1% fpp: expected ~2 false
     # hits per group; allow every group a hit but require the PAIR mass
     # to be tiny is unobservable here — instead require that a SINGLE
     # absent key prunes everything
-    one = B.prune_slices(
-        t,
-        spark.createDataFrame(
-            [("absent-xyz", "p0")],
-            f"{RECORD_KEY_COL} string, {PARTITION_PATH_COL} string",
-        ),
-        slices,
-        global_idx=True,
+    absent_key = spark.createDataFrame(
+        [("absent-xyz", "p0")], f"{RECORD_KEY_COL} string, {PARTITION_PATH_COL} string"
     )
+    one = _prune(t, absent_key, slices)
     assert one == []
     assert len(pruned) <= len(slices)
 
@@ -230,7 +226,7 @@ def test_stale_sidecar_row_does_not_resurrect_rewritten_group(spark, tmp_table_p
     incoming = spark.createDataFrame(
         [("51", "p1")], f"{RECORD_KEY_COL} string, {PARTITION_PATH_COL} string"
     )
-    pruned = B.prune_slices(t, incoming, slices, global_idx=True)
+    pruned = _prune(t, incoming, slices)
     # 51 was deleted: no current filter contains it → nothing to scan
     # (with the stale I0 row matched by file_id alone, p1's group would
     # wrongly survive here)
@@ -258,7 +254,7 @@ def test_corrupt_sidecar_degrades_to_unpruned(spark, tmp_table_path):
         f"{RECORD_KEY_COL} string, {PARTITION_PATH_COL} string",
     )
     # absent key would normally prune everything; corruption → keep all
-    assert B.prune_slices(t, incoming, slices, global_idx=True) == slices
+    assert _prune(t, incoming, slices) == slices
     # and the write path end-to-end still works
     t.upsert(_df(spark, [(51, "p1", 1234)]))
     assert {r["id"]: r["v"] for r in t.snapshot().select("id", "v").collect()}[51] == 1234

@@ -14,7 +14,8 @@ either commits it or aborts it. Two things are pinned here:
   instant, no ``data/<instant>/`` and an unchanged snapshot;
 - claim ownership: an abort deletes ``<ts>.claim`` only when the write
   claimed the instant itself, never a rival's claim on a caller-supplied
-  instant.
+  instant; a failed inline ``cluster()`` drops its plan and the plan's
+  claim together.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ import shutil
 
 import pytest
 
+import hudi_0_10_0_spark.operators.clustering as C
 import hudi_0_10_0_spark.operators.write as W
 from hudi_0_10_0_spark import HudiTable, WriteConfig
 
@@ -176,4 +178,29 @@ def test_late_abort_deletes_only_its_own_claim(
     claims = [n for n in h.fs.list_names(h.timeline.dir) if n.endswith(".claim")]
     assert claims == ([f"{ts}.claim"] if rival else []), claims
     assert list(h.timeline.pending()) == [], "pending instant left behind"
+    assert _state(spark, t.base_path) == before
+
+
+def test_failed_inline_cluster_drops_its_claim(spark, tmp_path, monkeypatch):
+    """Inline ``cluster()`` schedules its plan (claiming the instant)
+    and, when execution fails, drops the plan: the claim must go too."""
+    t = HudiTable.create(
+        spark, str(tmp_path / "t"),
+        WriteConfig(record_key_field="id", partition_field="part", precombine_field="v"),
+    )
+    t.bulk_insert(_df(spark, SEED))
+    before = _state(spark, t.base_path)
+
+    def fail(*a, **kw):
+        raise RuntimeError("injected stats failure")
+
+    monkeypatch.setattr(C, "collect_write_stats", fail)
+    with pytest.raises(RuntimeError, match="injected stats failure"):
+        t.cluster(sort_cols=["v"])
+    monkeypatch.undo()
+
+    h = HudiTable.load(spark, t.base_path)
+    claims = [n for n in h.fs.list_names(h.timeline.dir) if n.endswith(".claim")]
+    assert claims == [], f"claim left behind: {claims}"
+    assert list(h.timeline.pending()) == [], "plan left behind"
     assert _state(spark, t.base_path) == before

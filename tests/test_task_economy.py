@@ -8,6 +8,9 @@
   group the bucket plan targets, no padding.
 - One file per group: a COW rewrite writes each group it touches,
   packed with inserts or not, as exactly one file.
+- Tagging: the Spark jobs ``tag_location`` starts per index type stay at
+  or below their pinned counts, and the tag path's cached frames do not
+  take their task count from ``spark.sql.shuffle.partitions``.
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ from contextlib import contextmanager
 import pytest
 from pyspark.sql import functions as F
 
+import hudi_0_10_0_spark.operators.write as W
 from hudi_0_10_0_spark import HudiTable, TableType, WriteConfig
 from hudi_0_10_0_spark.sources import read
 
@@ -68,8 +72,8 @@ def answer(df) -> list[tuple]:
 
 @contextmanager
 def job_group(spark):
-    """Yields a list that, after the block, holds (name, description) of
-    every Spark job the block started."""
+    """Yields a list that, after the block, holds (name, description,
+    tasks run) of every Spark job the block started."""
     sc = spark.sparkContext
     group = f"task-economy-{uuid.uuid4().hex[:8]}"
     jobs: list[tuple[str, str]] = []
@@ -84,7 +88,9 @@ def job_group(spark):
         for jid in sc.statusTracker().getJobIdsForGroup(group):
             jd = store.job(int(jid))
             desc = jd.description()
-            jobs.append((jd.name(), desc.get() if desc.isDefined() else ""))
+            jobs.append(
+                (jd.name(), desc.get() if desc.isDefined() else "", jd.numCompletedTasks())
+            )
 
 
 def listing_jobs(jobs) -> list[tuple[str, str]]:
@@ -321,3 +327,84 @@ def test_packed_groups_are_written_as_one_file(spark, tmp_path, op, budget):
     assert stats
     assert all(len(s["paths"]) == 1 for s in stats), stats
     assert answer(t.snapshot()) == answer(kept.unionByName(batch))
+
+
+# -- tagging -------------------------------------------------------------------------
+SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+def _tag_table(spark, path: str, index_type: str, parts: int) -> HudiTable:
+    t = HudiTable.create(
+        spark, path,
+        WriteConfig(
+            record_key_field="id", partition_field="part", precombine_field="ts",
+            index_type=index_type, auto_clean=False, auto_archive=False,
+        ),
+    )
+    t.bulk_insert(rows(spark, 0, 4000).withColumn(
+        "part", F.concat(F.lit("p"), (F.col("id") % parts).cast("string"))
+    ))
+    return t
+
+
+def _trickle(spark, t, salt: int) -> None:
+    """A 10-row upsert spread over the table's partitions."""
+    parts = len(t.partitions())
+    t.upsert(rows(spark, 0, 4000, salt=salt).filter(f"id % 400 = {salt}").withColumn(
+        "part", F.concat(F.lit("p"), (F.col("id") % parts).cast("string"))
+    ))
+
+
+# jobs tag_location starts per 10-row upsert, at most: the counts the
+# five-branch tagger had (local[2]), except BLOOM on 80 partitions, whose
+# partition discovery and key-range collects are now one summary job
+TAG_JOBS = [
+    ("SIMPLE", 4, 0),
+    ("BLOOM", 4, 4),
+    ("GLOBAL_BLOOM", 4, 4),
+    ("INMEMORY", 4, 1),
+    ("RECORD_INDEX", 4, 2),
+    ("SIMPLE", 80, 4),
+    ("BLOOM", 80, 4),
+]
+
+
+@pytest.mark.parametrize(
+    "index_type,parts,most", TAG_JOBS, ids=[f"{i}-{p}" for i, p, _ in TAG_JOBS]
+)
+def test_tag_jobs_per_index(spark, tmp_path, monkeypatch, index_type, parts, most):
+    t = _tag_table(spark, str(tmp_path / "t"), index_type, parts)
+    _trickle(spark, t, 1)  # warm: the second upsert is the steady state
+    tag_jobs: list = []
+    orig = W.tag_location
+
+    def counted(*a):
+        with job_group(spark) as jobs:
+            out = orig(*a)
+        tag_jobs.extend(jobs)
+        return out
+
+    monkeypatch.setattr(W, "tag_location", counted)
+    _trickle(spark, t, 7)
+    assert len(tag_jobs) <= most, tag_jobs
+    assert t.snapshot().count() == 4000
+
+
+def test_tag_cache_tasks_do_not_follow_shuffle_partitions(spark, tmp_path):
+    """A 10-row upsert on a session at 200 shuffle partitions runs at
+    most twice the tasks it runs at 8: the cached ``tagged`` frame and
+    its readers are sized by their data, not by the session setting."""
+    t = _tag_table(spark, str(tmp_path / "t"), "SIMPLE", 4)
+    _trickle(spark, t, 1)
+    tasks = {}
+    old = spark.conf.get(SHUFFLE)
+    try:
+        for n, salt in (("8", 7), ("200", 9)):
+            spark.conf.set(SHUFFLE, n)
+            with job_group(spark) as jobs:
+                _trickle(spark, t, salt)
+            tasks[n] = sum(j[2] for j in jobs)
+    finally:
+        spark.conf.set(SHUFFLE, old)
+    assert tasks["200"] <= 2 * tasks["8"], tasks
+    assert t.snapshot().filter("val LIKE '%_9'").count() == 10

@@ -18,7 +18,10 @@ Builds small deterministic tables in a temporary directory and writes one
 - ``mor_upsert``: MOR deltacommit write of the same mixed batch;
 - ``mor_compaction``: the write plan of a MOR compaction;
 - ``mor_clustering``: the write plan of clustering a MOR table whose
-  groups are partly log-bearing, partly log-free.
+  groups are partly log-bearing, partly log-free;
+- ``tag_simple``, ``tag_bloom``, ``tag_global_bloom``, ``tag_inmemory``,
+  ``tag_record_index``: the frame ``tag_location`` returns for a trickle
+  batch on a COW table of that index type (an unexecuted plan).
 
 Write plans are captured at ``DataFrameWriter.save``, before the write
 runs. Normalization replaces expression ids (``#123``), plan ids, the
@@ -48,6 +51,11 @@ SHAPES = (
     "mor_upsert",
     "mor_compaction",
     "mor_clustering",
+    "tag_simple",
+    "tag_bloom",
+    "tag_global_bloom",
+    "tag_inmemory",
+    "tag_record_index",
 )
 N_ROWS = 2000
 
@@ -104,7 +112,7 @@ def rows(spark, n: int, salt: int = 0):
     )
 
 
-def make_table(spark, path: str, mor: bool):
+def make_table(spark, path: str, mor: bool, index_type: str = "SIMPLE"):
     from hudi_0_10_0_spark import HudiTable, TableType, WriteConfig
 
     cfg = WriteConfig(
@@ -112,6 +120,7 @@ def make_table(spark, path: str, mor: bool):
         partition_field="part",
         precombine_field="ts",
         table_type=TableType.MERGE_ON_READ if mor else TableType.COPY_ON_WRITE,
+        index_type=index_type,
         inline_compact=False,
         auto_clean=False,
         auto_archive=False,
@@ -179,6 +188,16 @@ def dump(spark, tmp: str) -> dict[str, str]:
     with captured_saves() as plans:
         clu.cluster()
     out["mor_clustering"] = plans[-1]
+
+    from hudi_0_10_0_spark.keygen import stamp_keys
+    from hudi_0_10_0_spark.operators import write
+
+    for kind in ("SIMPLE", "BLOOM", "GLOBAL_BLOOM", "INMEMORY", "RECORD_INDEX"):
+        t = make_table(spark, f"{tmp}/tag_{kind}", mor=False, index_type=kind)
+        batch = rows(spark, N_ROWS, salt=10).filter("id % 41 = 0")  # every partition
+        incoming = write._align_to_table_schema(stamp_keys(batch, t.cfg), t.schema())
+        out["tag_" + kind.lower()] = explain(write.tag_location(t, t.view(), incoming))
+        incoming.unpersist()
     return out
 
 

@@ -282,22 +282,24 @@ def run_point(spark, sf_dir: str, mode: str, mult: int) -> dict:
             # no matter how many groups the table has
             slices = view.latest_file_slices()
             t0 = time.perf_counter()
-            kept = B.prune_slices(t, stamped, slices, global_idx=True)
+            kept = B.prune_slices(t, stamped, slices, global_idx=True, n_keys=batch_rows)
             out["prune_s"] = round(time.perf_counter() - t0, 3)
             out["groups_kept"] = len(kept)
             out["bytes_total_mb"] = sum(s.base.bytes for s in slices) >> 20
             out["bytes_kept_mb"] = sum(s.base.bytes for s in kept) >> 20
-            for label, flag in (("filters_off", False), ("filters_on", True)):
-                t.cfg.bloom_index_use_filters = flag
+            # the membership stage is switched off by its size gate: no
+            # candidate set is ever as large as the "off" bound
+            for label, min_bytes in (("filters_off", 1 << 62), ("filters_on", 0)):
+                t.cfg.bloom_prune_min_bytes = min_bytes
                 t0 = time.perf_counter()
                 tagged_n = tag_location(t, view, stamped).where(
                     F.col("_hoodie_file_id").isNotNull()
                 ).count()
+                stamped.unpersist()
                 out[f"tag_s_{label}"] = round(time.perf_counter() - t0, 3)
                 out[f"tagged_{label}"] = tagged_n
             assert out["tagged_filters_on"] == out["tagged_filters_off"]
             # end-to-end sanity: one real upsert with filters on
-            t.cfg.bloom_index_use_filters = True
             upsert_s, stages = _timed_upsert(t, batch)
             out["upsert_s"] = round(upsert_s, 3)
             out["stages"] = stages
