@@ -27,7 +27,7 @@ from ..functions.zorder import with_hilbert_value, with_zvalue
 from ..metadata import make_commit_metadata
 from ..timeline import REPLACE_COMMIT
 from ..sources.read import base_format as _base_format
-from .write import WriteInstant, collect_write_stats
+from .write import WriteInstant, collect_write_stats, range_file_groups
 
 
 def pending_clustering_plans(table) -> dict[str, set[tuple[str, str]]]:
@@ -276,24 +276,20 @@ def _execute_cluster(
 
         total_bytes = sum(s.total_bytes for s in slices)
         n_out = target_file_groups or max(1, int(total_bytes / target))
-        prefix = uuid.uuid4().hex[:8]
         order_cols = [F.col(PARTITION_PATH_COL)] + (
             [F.col(c) for c in (sort_cols if sort_key != "__curve" else [sort_key])]
             if sort_cols
             else [F.col(RECORD_KEY_COL)]
         )
-        df = df.repartitionByRange(n_out, *order_cols).withColumn(
-            FILE_ID_COL,
-            F.concat_ws("-", F.lit(prefix), F.spark_partition_id().cast("string")),
-        )
+        df = range_file_groups(df, n_out, order_cols, total_bytes // n_out)
 
         # write directly (file groups are pre-assigned by the range
-        # partitioner — no reshuffle). The single local sort leads with
-        # the layout (directory) columns so the dynamic-partition writer
-        # accepts the ordering as-is: otherwise it inserts its own sort
-        # by (_pp, _fg) alone, which both duplicates the work and
-        # scrambles the curve/sort-key order inside each file — the
-        # entire point of clustering.
+        # partitioner and packed into tasks by size — no reshuffle). The
+        # single local sort leads with the layout (directory) columns so
+        # the dynamic-partition writer accepts the ordering as-is:
+        # otherwise it inserts its own sort by (_pp, _fg) alone, which
+        # both duplicates the work and scrambles the curve/sort-key
+        # order inside each file — the entire point of clustering.
         from ..config import LAYOUT_FILEGROUP_COL, LAYOUT_PARTITION_COL
 
         out = df.withColumns(
@@ -334,7 +330,7 @@ def _execute_cluster(
         from .key_index import append_from_written, enabled as _ki_enabled
 
         if _ki_enabled(cfg):
-            append_from_written(table, instant)
+            append_from_written(table, instant, sum(st.rows for st in stats))
         replaced: dict[str, list[str]] = {}
         for s in slices:
             replaced.setdefault(s.partition, []).append(s.file_id)

@@ -73,6 +73,8 @@ NBUCKETS_MARKER = "_nbuckets"
 # inheriting such a count would scatter every small delta into tens of
 # thousands of tiny parquet files between compactions
 DELTA_MAX_BUCKETS = 1024
+# rough on-disk bytes of one index entry (key, partition, file id, flag)
+ENTRY_BYTES = 40
 # Per-file record-key ranges of a compacted base (verdict r7 #2):
 # written at compaction alongside _nbuckets, maps
 # "<bucket_dir>/<file>" -> [min_key, max_key]. Bucket-level pruning
@@ -225,13 +227,13 @@ def _index_bytes(table, dirs: list[str]) -> int:
 def _split_max_records(table, total_bytes: int, n_buckets: int) -> int | None:
     """maxRecordsPerFile for the compacted base so each bucket lands as
     ~key_index_file_target_bytes key-sorted files (≤16 per bucket).
-    Rows are ESTIMATED from on-disk bytes at ~40 B/entry — only pruning
+    Rows are ESTIMATED from on-disk bytes at ~ENTRY_BYTES — only pruning
     granularity depends on the estimate, never correctness (the
     _key_ranges sidecar records whatever files actually materialize)."""
     tgt = int(getattr(table.cfg, "key_index_file_target_bytes", 0) or 0)
     if tgt <= 0:
         return None
-    est_rows = max(1, total_bytes // 40)
+    est_rows = max(1, total_bytes // ENTRY_BYTES)
     bucket_bytes = max(1, total_bytes // max(1, n_buckets))
     splits = max(1, min(16, (bucket_bytes + tgt - 1) // tgt))
     # low floor is safe: the ≤16-splits-per-bucket cap above already
@@ -306,9 +308,11 @@ def _index_dirs(table) -> list[str]:
     return sorted(out)
 
 
-def append_delta(table, instant: str, entries: DataFrame) -> None:
+def append_delta(table, instant: str, entries: DataFrame, rows: int) -> None:
     """Write one instant's index delta. ``entries``:
-    (record_key, partition, file_id, deleted)."""
+    (record_key, partition, file_id, deleted), about ``rows`` of them
+    (the commit's written row count), which sizes the write's tasks
+    (``write_tasks``, at ~``ENTRY_BYTES`` per entry)."""
     if entries.isEmpty():
         # an EMPTY partitionBy write produces a dir with only _SUCCESS;
         # spark.read.parquet on it throws 'Unable to infer schema' and
@@ -316,11 +320,13 @@ def append_delta(table, instant: str, entries: DataFrame) -> None:
         # via a delete matching no keys, or build_full on a fully
         # tombstoned table.
         return
+    from .write import write_tasks
+
     n = min(current_bucket_count(table), DELTA_MAX_BUCKETS)
     out = (
         entries.withColumn(BUCKET_COL, _bucket_expr(n))
         .withColumn(INSTANT_COL, F.lit(instant))
-        .repartition(min(n, 32), F.col(BUCKET_COL))
+        .repartition(write_tasks(table.spark, n, rows * ENTRY_BYTES // n), F.col(BUCKET_COL))
     )
     path = f"{index_root(table)}/{instant}"
     out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
@@ -330,12 +336,15 @@ def append_delta(table, instant: str, entries: DataFrame) -> None:
     _write_bucket_marker(table, path, n)
 
 
-def append_from_written(table, instant: str, tombstones: DataFrame | None = None) -> None:
+def append_from_written(
+    table, instant: str, rows: int, tombstones: DataFrame | None = None
+) -> None:
     """Derive the delta from the files the write just produced — the
     written meta columns are the (key → location) truth, and reading
     3 narrow columns of the new files costs one small job. MOR delete
     tombstones arrive as rows with the delete marker set.
 
+    ``rows``: the commit's written row count (``append_delta``).
     ``tombstones``: extra (record_key, partition, file_id) rows to record
     as deleted.  The COW rewrite simply OMITS deleted rows from the new
     base file, so the written files alone carry no trace of a delete —
@@ -382,7 +391,7 @@ def append_from_written(table, instant: str, tombstones: DataFrame | None = None
                 F.lit(True).alias(DELETED_COL),
             )
         )
-    append_delta(table, instant, entries)
+    append_delta(table, instant, entries, rows)
 
 
 def build_full(table, view) -> None:
@@ -411,7 +420,8 @@ def build_full(table, view) -> None:
         F.col(FILE_ID_COL),
         F.lit(False).alias(DELETED_COL),
     )
-    append_delta(table, comp[-1].timestamp, entries)
+    rows = sum(s.base.rows + sum(l.rows for l in s.logs) for s in slices)
+    append_delta(table, comp[-1].timestamp, entries, rows)
 
 
 # sentinel: the ranges sidecar proved NO file of this dir can hold any

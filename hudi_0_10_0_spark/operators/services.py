@@ -327,6 +327,7 @@ def _run_compaction_claimed(table, instant, req):
         created_commit = True
         timeline.transition_to_completed(instant, COMMIT, md)
         committed = True
+        timeline.release_claim(instant)
         # post-commit plan cleanup: the instant is DURABLE from the line
         # above, so a transient failure here must surface as-is — the
         # except below would otherwise delete committed data
@@ -627,6 +628,8 @@ def finish_service(table, action: str, instant: str, replay: bool = False) -> No
     except Exception:
         if not tl.is_completed(instant, action):
             raise
+        return  # the rival that completed it retires the claim
+    tl.release_claim(instant)
 
 
 def _service_step(action: str):
@@ -974,7 +977,7 @@ def _sweep_failed_writes(table, occ: bool) -> list[str]:
         table.timeline.delete_pending_instant_files(inst.timestamp, inst.action)
         # the crashed writer's timestamp claim dies with its instant
         # (owner confirmed dead: heartbeat expired / single-writer)
-        table.fs.delete(f"{table.timeline.dir}/{inst.timestamp}.claim")
+        table.timeline.release_claim(inst.timestamp)
         table.fs.delete(f"{table.meta_path}/heartbeat/{inst.timestamp}")
         from .key_index import drop_instant as _ki_drop
 
@@ -1020,9 +1023,9 @@ def _sweep_failed_writes(table, occ: bool) -> list[str]:
     # Eager in single-writer mode (any claim without an owning
     # pending instant at write start is garbage, like the pending
     # instants themselves); under OCC a completed instant at the
-    # timestamp means the retirement crashed (safe to collect:
-    # completion itself deletes the claim), otherwise the owner may
-    # be INSIDE the milliseconds-wide claim→create_requested window
+    # timestamp means the retirement crashed (safe to collect: the
+    # owner retires its claim right after completion), otherwise the
+    # owner may be INSIDE the milliseconds-wide claim→create_requested window
     # — collect only when the claim has aged past heartbeat expiry
     # AND no live heartbeat guards the timestamp.
     completed_ts = (

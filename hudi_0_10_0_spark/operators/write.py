@@ -196,27 +196,21 @@ SUMMARY_MIN_PARTITIONS = 64
 
 
 def persist_tag_frame(df: DataFrame) -> DataFrame:
-    """Persist ``incoming`` or ``tagged``. Spark plans a cached frame with
-    AQE's final-stage coalescing off, so its output keeps
-    ``spark.sql.shuffle.partitions`` partitions — 200 by default, for a
-    10-row batch — and every reader of the cache runs that many tasks.
-    When that width is above two tasks per core (the Spark tuning
-    guide's rule), the frame is cached with coalescing on, so AQE sizes
-    the final stage by the data; the write plans then read it through an
-    ``AQEShuffleRead`` and add no exchange. Narrower sessions keep
-    Spark's plan."""
+    """Persist ``incoming`` or ``tagged`` with AQE's final-stage
+    coalescing on. Spark plans a cached frame with that coalescing off,
+    so its output would keep ``spark.sql.shuffle.partitions`` partitions
+    — 200 by default, for a 10-row batch — and every reader of the cache
+    would run that many tasks. With it on, AQE sizes the cached frame by
+    its data on every session; the write plans read it through an
+    ``AQEShuffleRead`` and add no exchange. The flag is set on the shared
+    session for the ``persist`` call only (``session_conf``)."""
     from pyspark import StorageLevel
 
     from ..sources.read import session_conf
 
-    spark = df.sparkSession
-    level = StorageLevel.MEMORY_AND_DISK
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if width <= 2 * spark.sparkContext.defaultParallelism:
-        return df.persist(level)
     key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    with session_conf(spark, key, "true"):
-        return df.persist(level)
+    with session_conf(df.sparkSession, key, "true"):
+        return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def tag_location(table, view: FileSystemView, incoming: DataFrame) -> DataFrame:
@@ -479,24 +473,62 @@ def assign_inserts(
 # --------------------------------------------------------------------------
 
 
+def write_tasks(spark, n_groups: int, group_bytes: int) -> int:
+    """Tasks for a stage that writes ``n_groups`` file groups of about
+    ``group_bytes`` each: as many groups per task as fit the session's
+    ``spark.sql.files.maxPartitionBytes`` (the target Spark's scans size
+    their tasks by), but no fewer tasks than cores while there are
+    groups to spread. At the default 120 MB groups one group fills a
+    task, so every group keeps its own task; the rule only packs groups
+    under half the target, where a task's fixed cost outweighs its
+    work. Callers keep each group inside one task, so each group is
+    still written as one file."""
+    n = max(1, n_groups)
+    target = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    per_task = max(1, target // max(1, group_bytes))
+    return max(min(n, spark.sparkContext.defaultParallelism), -(-n // per_task))
+
+
+def range_file_groups(df: DataFrame, n_groups: int, cols: list, group_bytes: int) -> DataFrame:
+    """Range-partition ``df`` on ``cols`` into ``n_groups`` file groups,
+    each named by a fresh uuid prefix and its range partition id, then
+    pack the ranges into ``write_tasks`` tasks with a ``coalesce``: no
+    shuffle, and a range never splits across tasks, so a group is still
+    one file (the reference's row-path bulk insert likewise rolls one
+    task through many files, ``HoodieDatasetBulkInsertHelper.java:70-133``).
+    The id is stamped before the coalesce, where the partition id is
+    still the range's."""
+    prefix = uuid.uuid4().hex[:8]
+    out = df.repartitionByRange(n_groups, *cols).withColumn(
+        FILE_ID_COL,
+        F.concat_ws("-", F.lit(prefix), F.spark_partition_id().cast("string")),
+    )
+    tasks = write_tasks(df.sparkSession, n_groups, group_bytes)
+    return out.coalesce(tasks) if tasks < n_groups else out
+
+
 def write_instant_files(
     table, df: DataFrame, instant: str, n_groups: int,
-    pre_partitioned: bool = False,
+    pre_partitioned: bool = False, stamp_seqno: bool = False,
 ) -> None:
     """One pass: shuffle by file group, sort by key within the file, and
     let Spark's parquet sink lay out ``data/<instant>/_pp=…/_fg=…/``.
     File-group identity is carried by directory structure + manifest, so
     Spark's own (parallel, committer-backed) writer does all data I/O.
-    ``pre_partitioned`` skips the shuffle (bulk-insert has already
-    range-partitioned + sorted; the merge kernel's output is already
-    hash-partitioned by file group).
+    The shuffle has ``write_tasks`` partitions for ``n_groups`` new
+    groups of ``max_file_size_bytes`` each (a MOR deltacommit, an
+    insert overwrite). ``pre_partitioned`` skips it: bulk insert and
+    clustering have range-partitioned, the COW rewrite and compaction
+    have hash-partitioned by file group.
 
     The in-task sort leads with the two layout (directory) columns:
     Spark's dynamic-partition writer requires rows sorted by the
     partition columns and inserts its own sort when the child's output
     ordering doesn't already start with them — by matching that prefix
     we pay ONE sort instead of two, and the writer's (non-key-aware)
-    re-sort can't destroy the key order inside each file."""
+    re-sort can't destroy the key order inside each file.
+    ``stamp_seqno`` (bulk insert) replaces ``_hoodie_commit_seqno``
+    after that sort, so seqnos ascend with the key in every file."""
     out = df.withColumns(
         {
             LAYOUT_PARTITION_COL: F.when(
@@ -505,16 +537,15 @@ def write_instant_files(
             LAYOUT_FILEGROUP_COL: F.col(FILE_ID_COL),
         }
     )
-    sort_cols = [LAYOUT_PARTITION_COL, LAYOUT_FILEGROUP_COL, RECORD_KEY_COL]
     if not pre_partitioned:
-        out = out.repartition(
-            max(1, n_groups), F.col(LAYOUT_FILEGROUP_COL)
-        ).sortWithinPartitions(*sort_cols)
-    else:
-        # always sort locally: the writer would sort by the layout columns
-        # anyway, so including the record key is free and keeps files
-        # key-ordered (footer key ranges stay tight for index pruning)
-        out = out.sortWithinPartitions(*sort_cols)
+        tasks = write_tasks(table.spark, n_groups, table.cfg.max_file_size_bytes)
+        out = out.repartition(tasks, F.col(LAYOUT_FILEGROUP_COL))
+    # always sort locally: the writer would sort by the layout columns
+    # anyway, so including the record key is free and keeps files
+    # key-ordered (footer key ranges stay tight for index pruning)
+    out = out.sortWithinPartitions(LAYOUT_PARTITION_COL, LAYOUT_FILEGROUP_COL, RECORD_KEY_COL)
+    if stamp_seqno:
+        out = out.withColumn(SEQNO_COL, seqno_expr(instant))
     from ..sources.read import base_format
 
     if table.cfg.drop_partition_columns:
@@ -830,30 +861,32 @@ def _estimate_bulk_groups(table, df: DataFrame) -> int:
 def _bulk_insert_df(
     table, incoming: DataFrame, data_cols: list[str], instant: str
 ) -> DataFrame:
-    """Sort-mode layout (``BulkInsertSortMode.java:24-28``):
-    GLOBAL_SORT = range-shuffle on (partition, key) + local sort;
-    PARTITION_SORT = local sort only; NONE = leave as-is. File-group id
-    = fresh-uuid prefix + output Spark partition id (each task writes
-    exactly its own file groups — zero extra shuffles)."""
+    """Sort-mode layout (``BulkInsertSortMode.java:24-28``). GLOBAL_SORT
+    range-partitions on (partition, key) into the estimated group count
+    (``range_file_groups``): each range is one file group, and groups of
+    new files well under ``maxPartitionBytes`` share a task. Otherwise
+    (PARTITION_SORT, NONE) each input partition is one group. No sort
+    here: ``write_instant_files`` sorts each task once by (partition,
+    group, key), which orders every file by key whatever the mode, and
+    stamps the seqno placeholder left here after that sort."""
     from ..config import BulkInsertSortMode
 
-    mode = table.cfg.bulk_insert_sort_mode
-    n = _estimate_bulk_groups(table, incoming)
     df = incoming
-    if mode == BulkInsertSortMode.GLOBAL_SORT:
-        df = df.repartitionByRange(
-            n, F.col(PARTITION_PATH_COL), F.col(RECORD_KEY_COL)
-        ).sortWithinPartitions(PARTITION_PATH_COL, RECORD_KEY_COL)
-    elif mode == BulkInsertSortMode.PARTITION_SORT:
-        df = df.sortWithinPartitions(PARTITION_PATH_COL, RECORD_KEY_COL)
-    fid_prefix = uuid.uuid4().hex[:8]
-    df = df.withColumn(
-        FILE_ID_COL,
-        F.concat_ws("-", F.lit(fid_prefix), F.spark_partition_id().cast("string")),
-    )
+    if table.cfg.bulk_insert_sort_mode == BulkInsertSortMode.GLOBAL_SORT:
+        df = range_file_groups(
+            df, _estimate_bulk_groups(table, incoming),
+            [F.col(PARTITION_PATH_COL), F.col(RECORD_KEY_COL)],
+            table.cfg.max_file_size_bytes,
+        )
+    else:
+        fid = F.concat_ws("-", F.lit(uuid.uuid4().hex[:8]), F.spark_partition_id().cast("string"))
+        df = df.withColumn(FILE_ID_COL, fid)
     if DELETE_MARKER_COL in df.columns:
         df = df.filter(~F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False)))
-    return _finalize(_stamp_meta(df, instant), data_cols)
+    df = df.withColumns(
+        {COMMIT_TIME_COL: F.lit(instant), SEQNO_COL: F.lit(None).cast("string")}
+    )
+    return _finalize(df, data_cols)
 
 
 # --------------------------------------------------------------------------
@@ -1025,7 +1058,7 @@ def _claim_write_instant(table, action, operation, instant_time=None):
                     # infra failure on a millisecond WE claimed, before
                     # any instant file existed — release the claim
                     # directly rather than stranding it for the sweep
-                    table.fs.delete(f"{table.timeline.dir}/{instant}.claim")
+                    table.timeline.release_claim(instant)
                 raise
             last = e
     raise last
@@ -1117,7 +1150,7 @@ class WriteInstant:
         millisecond to a third writer (code-review r7)."""
         self.table.timeline.delete_pending_instant_files(self.instant, self.action)
         if self.owns_claim:
-            self.table.fs.delete(f"{self.table.timeline.dir}/{self.instant}.claim")
+            self.table.timeline.release_claim(self.instant)
 
     def commit(self, md: dict, txn_start: str | None = None) -> str:
         table, instant, action, hooks = self.table, self.instant, self.action, self.hooks
@@ -1127,6 +1160,8 @@ class WriteInstant:
         # durable from here on: a failure below must NOT erase committed
         # data, so the abort becomes a no-op and the error surfaces as-is
         self._pending = False
+        if self.owns_claim:
+            table.timeline.release_claim(instant)
         self._stop_heartbeat()
         if hooks.callback:
             fire_commit_callback(table, instant, action, md)
@@ -1232,13 +1267,14 @@ def plan_cow_rewrite(
       tagging against live base files otherwise makes every update key
       present in the stored rows and every insert key absent;
     - **kernel**: stored ∪ incoming in one exchange on (file_id,
-      partition) with one task per written group
+      partition) sized by ``write_tasks`` over the written groups
       (``merge_stored_and_incoming``), inserts included.
 
     Outside the kernel, inserts go through ONE insert exchange on
-    (file_id, partition) with one task per insert group. The stored rows
-    of a packed group join that exchange, so one task writes the group;
-    the other touched groups stream from their scan. The exchange output
+    (file_id, partition) sized by ``write_tasks`` over the insert
+    groups. The stored rows of a packed group join that exchange, so
+    one task writes the group; the other touched groups stream from
+    their scan. The exchange output
     then reconciles like stored rows: insert keys are absent from the
     incoming winners, so the broadcast merge passes them through
     unchanged, and that merge keeps a single broadcast consumer (Spark
@@ -1251,6 +1287,17 @@ def plan_cow_rewrite(
     ]
     touched = set(update_groups) | {(s.partition, s.file_id) for s in slices}
     passthrough = operation == WriteOperation.INSERT or not slices
+    stored_bytes = {(s.partition, s.file_id): s.total_bytes for s in slices}
+
+    def tasks(groups: set) -> int:
+        # ``write_tasks`` by the groups' mean size: manifest bytes for a
+        # rewritten group, the file-size target for a new or packed one
+        max_b = table.cfg.max_file_size_bytes
+        total = sum(
+            max_b if g in insert_groups else stored_bytes.get(g, max_b) for g in groups
+        )
+        return write_tasks(table.spark, len(groups), total // max(1, len(groups)))
+
     fresh = inserts
     if not passthrough:
         if not needs_combine:
@@ -1266,7 +1313,7 @@ def plan_cow_rewrite(
                 _read_stored(table, slices),
                 updates.unionByName(inserts, allowMissingColumns=True),
                 data_cols, col_types, payload, instant,
-                num_partitions=len(touched | insert_groups),
+                num_partitions=tasks(touched | insert_groups),
             )
             return touched, merged
         winners = _arrival_winners(updates)
@@ -1290,7 +1337,7 @@ def plan_cow_rewrite(
             ).unionByName(appended)
         stored.append(
             appended.repartition(
-                max(1, len(insert_groups)), F.col(FILE_ID_COL), F.col(PARTITION_PATH_COL)
+                tasks(insert_groups), F.col(FILE_ID_COL), F.col(PARTITION_PATH_COL)
             )
         )
     stored = functools.reduce(
@@ -1409,15 +1456,17 @@ def run_batch_write(
             if operation == WriteOperation.BULK_INSERT:
                 # fast path (row-writer analogue,
                 # HoodieDatasetBulkInsertHelper.java:70-133): no index lookup,
-                # no small-file packing — one range shuffle + local sort,
-                # file groups derived from the output partition id
+                # no small-file packing — one range shuffle + one local sort,
+                # each range partition one file group, packed into tasks
                 out = _bulk_insert_df(table, incoming, data_cols, instant)
-                write_instant_files(table, out, instant, 0, pre_partitioned=True)
+                write_instant_files(
+                    table, out, instant, 0, pre_partitioned=True, stamp_seqno=True
+                )
                 timer.mark("bulk_write")
                 stats = collect_write_stats(table, instant, schema=out.schema)
                 timer.mark("stats")
                 if key_index.enabled(cfg):
-                    key_index.append_from_written(table, instant)
+                    key_index.append_from_written(table, instant, sum(st.rows for st in stats))
                 md = make_commit_metadata(
                     operation.value, out.schema.json(), stats, extra=extra
                 )
@@ -1471,6 +1520,7 @@ def run_batch_write(
             timer.mark("profile")
             insert_counts = [(r[0], r[2]) for r in profile if r[1] is None]
             update_groups = {(r[0], r[1]) for r in profile if r[1] is not None}
+            n_updates = sum(r[2] for r in profile if r[1] is not None)
             group_tombstones = {
                 (r[0], r[1]): bool(r[3]) for r in profile if r[1] is not None
             }
@@ -1533,9 +1583,8 @@ def run_batch_write(
             else:
                 touched, merged = plan_cow_rewrite(
                     table, view, operation, payload, updates, assigned_inserts,
-                    update_groups, insert_groups,
-                    sum(r[2] for r in profile if r[1] is not None),
-                    needs_combine, global_idx, data_cols, col_types, instant,
+                    update_groups, insert_groups, n_updates, needs_combine, global_idx,
+                    data_cols, col_types, instant,
                 )
                 out = _finalize(merged, data_cols)
                 timer.mark("merge_plan")
@@ -1565,8 +1614,9 @@ def run_batch_write(
                         F.col(FILE_ID_COL).isNotNull()
                         & F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False))
                     ).select(RECORD_KEY_COL, PARTITION_PATH_COL, FILE_ID_COL)
+                rows = sum(st.rows for st in stats) + n_updates
                 if table.fs.exists(table.instant_data_path(instant)):
-                    key_index.append_from_written(table, instant, tombstones=tomb)
+                    key_index.append_from_written(table, instant, rows, tombstones=tomb)
                 elif tomb is not None:
                     # every affected group came out empty: no data files were
                     # written, but the deletes must still tombstone the index
@@ -1574,6 +1624,7 @@ def run_batch_write(
                         table,
                         instant,
                         tomb.withColumn(key_index.DELETED_COL, F.lit(True)),
+                        rows,
                     )
             if not mor_delta:
                 # a rewritten file group can come out EMPTY (every record
@@ -1785,7 +1836,7 @@ def run_replace_write(
             from . import key_index as _ki
 
             if _ki.enabled(cfg) and table.fs.exists(table.instant_data_path(instant)):
-                _ki.append_from_written(table, instant)
+                _ki.append_from_written(table, instant, sum(st.rows for st in stats))
             schema_json = out.schema.json()
         else:
             schema_json = view.latest_schema() or ""

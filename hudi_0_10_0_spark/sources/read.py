@@ -477,8 +477,9 @@ def merge_slices(
     the merge shuffle never covers the whole table.
 
     ``by_group=True`` promises output hash-partitioned on (file_id,
-    partition) into ``len(slices)`` partitions, for a writer that takes
-    one partition per file group (``pre_partitioned=True``): every slice
+    partition), into ``write_tasks`` partitions sized by the slices'
+    manifest bytes, for a writer that keeps each file group in one
+    partition (``pre_partitioned=True``): every slice
     goes through the one exchange, with no log-free split and no
     log-key bypass. The window merge's ClusteredDistribution((fid, pp,
     key)) is satisfied by that HashPartitioning((fid, pp)), so it adds
@@ -543,9 +544,12 @@ def merge_slices(
         logs.withColumn("__log", F.lit(1))
     )
     if by_group:
-        both = both.repartition(
-            max(1, len(slices)), F.col(FILE_ID_COL), F.col(PARTITION_PATH_COL)
+        from ..operators.write import write_tasks
+
+        tasks = write_tasks(
+            table.spark, len(slices), sum(s.total_bytes for s in slices) // max(1, len(slices))
         )
+        both = both.repartition(tasks, F.col(FILE_ID_COL), F.col(PARTITION_PATH_COL))
     payload = get_payload(table.cfg.payload, table.cfg.precombine_field)
     merged = mor_merge_window(
         both, payload,

@@ -300,16 +300,22 @@ class Timeline:
 
     def transition_to_completed(self, timestamp: str, action: str, metadata: dict):
         """The commit point: atomic rename of a temp file to the completed
-        instant file (reference: ``HoodieActiveTimeline.transitionState``)."""
+        instant file (reference: ``HoodieActiveTimeline.transitionState``).
+        The instant's claim file stays: only its owner retires it
+        (``release_claim``)."""
         inst = Instant(timestamp, action, COMPLETED)
         self.fs.write_text_atomic(
             f"{self.dir}/{inst.filename()}",
             json.dumps(metadata, sort_keys=True),
         )
-        # the millisecond can no longer be re-issued to a live rival —
-        # retire its cross-action claim file (claim_timestamp)
-        self.fs.delete(f"{self.dir}/{timestamp}.claim")
         return inst
+
+    def release_claim(self, timestamp: str) -> None:
+        """Retire the instant's cross-action claim file (``claim_timestamp``)
+        once the instant is completed or dropped. Only the claim's owner
+        calls this: a commit on a caller-supplied instant never claimed
+        the millisecond, so the claim there is a rival's."""
+        self.fs.delete(f"{self.dir}/{timestamp}.claim")
 
     def delete_instant_files(self, timestamp: str, action: str, claim: bool = True) -> None:
         """Remove every state file of the instant and, unless
@@ -317,7 +323,7 @@ class Timeline:
         for state in (REQUESTED, INFLIGHT, COMPLETED):
             self.fs.delete(f"{self.dir}/{Instant(timestamp, action, state).filename()}")
         if claim:
-            self.fs.delete(f"{self.dir}/{timestamp}.claim")
+            self.release_claim(timestamp)
 
     def delete_pending_instant_files(self, timestamp: str, action: str) -> None:
         """Remove only the requested/inflight state files — the

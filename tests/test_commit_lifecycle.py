@@ -12,10 +12,10 @@ either commits it or aborts it. Two things are pinned here:
 - early-abort hygiene: a write that fails at ``transition_to_inflight``
   or at ``guarded_commit`` leaves no claim, no heartbeat, no pending
   instant, no ``data/<instant>/`` and an unchanged snapshot;
-- claim ownership: an abort deletes ``<ts>.claim`` only when the write
-  claimed the instant itself, never a rival's claim on a caller-supplied
-  instant; a failed inline ``cluster()`` drops its plan and the plan's
-  claim together.
+- claim ownership: an abort or a commit deletes ``<ts>.claim`` only
+  when the write claimed the instant itself, never a rival's claim on a
+  caller-supplied instant; a failed inline ``cluster()`` drops its plan
+  and the plan's claim together.
 """
 
 from __future__ import annotations
@@ -179,6 +179,20 @@ def test_late_abort_deletes_only_its_own_claim(
     assert claims == ([f"{ts}.claim"] if rival else []), claims
     assert list(h.timeline.pending()) == [], "pending instant left behind"
     assert _state(spark, t.base_path) == before
+
+
+def test_commit_on_caller_instant_keeps_rival_claim(spark, pristine, tmp_path):
+    """A write that COMMITS on a caller-supplied instant never claimed
+    the millisecond, so the ``<ts>.claim`` there is a rival's and must
+    survive the commit, as it survives an abort."""
+    t = _table(spark, pristine, tmp_path, "upsert")
+    ts = t.new_instant()
+    assert t.fs.create_exclusive(f"{t.timeline.dir}/{ts}.claim", "")
+    assert t.upsert(_df(spark, UPD), instant_time=ts) == ts
+    h = HudiTable.load(spark, t.base_path)
+    claims = [n for n in h.fs.list_names(h.timeline.dir) if n.endswith(".claim")]
+    assert claims == [f"{ts}.claim"], claims
+    assert h.timeline.is_completed(ts, "commit")
 
 
 def test_failed_inline_cluster_drops_its_claim(spark, tmp_path, monkeypatch):

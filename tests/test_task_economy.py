@@ -4,8 +4,11 @@
   the driver, not by a Spark job with one task per path (Spark starts
   that job past ``parallelPartitionDiscovery.threshold`` = 32 paths). The
   session's threshold is left exactly as found.
-- Shuffle size: every write shuffle has exactly one partition per file
-  group the bucket plan targets, no padding.
+- Task sizing: every group-sized write stage has ``write_tasks``
+  partitions. Groups that fill ``spark.sql.files.maxPartitionBytes``
+  get one partition each, no padding; smaller groups share a task,
+  down to one task per core, and each is still one file. The bulk
+  insert sorts its rows once, and its seqnos follow the key.
 - One file per group: a COW rewrite writes each group it touches,
   packed with inserts or not, as exactly one file.
 - Tagging: the Spark jobs ``tag_location`` starts per index type stay at
@@ -227,6 +230,20 @@ def test_rows_match_parallel_listing(spark, wide):
 
 
 # -- shuffle size --------------------------------------------------------------------
+TARGET = "spark.sql.files.maxPartitionBytes"
+
+
+@contextmanager
+def task_target(spark, value: str):
+    """The block runs with ``maxPartitionBytes`` at ``value``."""
+    old = spark.conf.get(TARGET)
+    spark.conf.set(TARGET, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(TARGET, old)
+
+
 def _new_groups(t, before: set) -> set:
     return {
         (s["partition"], s["file_id"]) for s in last_commit(t)["write_stats"]
@@ -253,7 +270,8 @@ def test_trickle_upsert_insert_exchange_has_one_partition_per_group(spark, tmp_p
     t = make_table(
         spark, str(tmp_path / "t"), 4, small_file_limit_bytes=0, max_file_size_bytes=2000
     )
-    plan, new = _split_upsert(spark, t)
+    with task_target(spark, "2000"):  # each group fills a task
+        plan, new = _split_upsert(spark, t)
     k = len(new)
     assert k > 9, k  # more groups than the old padded count
     assert exchange_counts(plan, "_hoodie_file_id,_hoodie_partition_path") == [k], plan
@@ -265,7 +283,8 @@ def test_kernel_upsert_exchange_has_one_partition_per_group(spark, tmp_path):
         spark, str(tmp_path / "t"), 4, small_file_limit_bytes=0,
         max_file_size_bytes=2000, broadcast_budget_bytes=0,
     )
-    plan, new = _split_upsert(spark, t)
+    with task_target(spark, "2000"):  # each group fills a task
+        plan, new = _split_upsert(spark, t)
     written = len(last_commit(t)["write_stats"])
     assert written > len(new) > 9
     assert exchange_counts(plan, "_hoodie_file_id,_hoodie_partition_path") == [written], plan
@@ -277,7 +296,8 @@ def test_mor_deltacommit_exchange_has_one_partition_per_group(spark, tmp_path):
         spark, str(tmp_path / "t"), 4, table_type=TableType.MERGE_ON_READ,
         max_file_size_bytes=2000,
     )
-    plan, _ = _split_upsert(spark, t)
+    with task_target(spark, "2000"):  # each group fills a task
+        plan, _ = _split_upsert(spark, t)
     md = last_commit(t)
     assert md.get("operation") == "upsert"
     written = len(md["write_stats"])
@@ -287,11 +307,12 @@ def test_mor_deltacommit_exchange_has_one_partition_per_group(spark, tmp_path):
 
 
 def test_insert_overwrite_writes_one_file_per_group(spark, tmp_path):
-    """An overwrite into more than 8 new groups: one writer task and one
-    file per group, and the rows of the overwritten partition replaced."""
+    """An overwrite into more than 8 new groups that each fill a task:
+    one writer task and one file per group, and the rows of the
+    overwritten partition replaced."""
     t = make_table(spark, str(tmp_path / "t"), 4, max_file_size_bytes=2000)
     src = rows(spark, 0, N_ROWS, salt=7).filter("part = 'p0'")
-    with captured_saves() as plans:
+    with task_target(spark, "2000"), captured_saves() as plans:
         t.insert_overwrite(src)
     stats = last_commit(t)["write_stats"]
     assert len(stats) > 8
@@ -299,6 +320,96 @@ def test_insert_overwrite_writes_one_file_per_group(spark, tmp_path):
     assert exchange_counts(plans[-1], "_fg") == [len(stats)], plans[-1]
     want = answer(src.unionByName(rows(spark, 0, N_ROWS).filter("part = 'p1'")))
     assert answer(t.snapshot()) == want
+
+
+def _packed_write(spark, tmp_path, site: str):
+    """One write whose groups (2000 B new files, KB-sized stored ones)
+    are far under the default target: (its save plan, the exchange's
+    columns, groups the exchange writes, the commit's stats)."""
+    kw = {
+        "insert": dict(small_file_limit_bytes=0),
+        "kernel": dict(small_file_limit_bytes=0, broadcast_budget_bytes=0),
+        "mor": dict(table_type=TableType.MERGE_ON_READ),
+        "overwrite": {},
+    }[site]
+    t = make_table(spark, str(tmp_path / "t"), 4, max_file_size_bytes=2000, **kw)
+    if site == "overwrite":
+        with captured_saves() as plans:
+            t.insert_overwrite(rows(spark, 0, N_ROWS, salt=7).filter("part = 'p0'"))
+        plan, new = plans[-1], set()
+    else:
+        plan, new = _split_upsert(spark, t)
+    stats = last_commit(t)["write_stats"]
+    groups = len(new) if site == "insert" else len(stats)
+    cols = "_fg" if site in ("mor", "overwrite") else "_hoodie_file_id,_hoodie_partition_path"
+    return plan, cols, groups, stats
+
+
+@pytest.mark.parametrize("site", ["insert", "kernel", "mor", "overwrite"])
+def test_small_groups_share_core_sized_tasks(spark, tmp_path, site):
+    """At the default target, groups of a few KB pack into one task per
+    core: each exchange has ``min(groups, cores)`` partitions, and every
+    group is still written as one file."""
+    plan, cols, groups, stats = _packed_write(spark, tmp_path, site)
+    cores = spark.sparkContext.defaultParallelism
+    assert groups > cores, groups
+    assert exchange_counts(plan, cols) == [cores], plan
+    assert all(len(s["paths"]) <= 1 for s in stats), stats
+
+
+def _bulk(spark, path: str, **cfg):
+    """Bulk-load N_ROWS into 40 range groups; (table, save plan)."""
+    with captured_saves() as plans:
+        t = make_table(spark, path, **cfg)
+    return t, plans[-1]
+
+
+def _group_keys(t) -> set:
+    """Each group's (partition, sorted keys), ids left out."""
+    groups: dict = {}
+    for pp, fid, k in t.snapshot().select("_hoodie_partition_path", "_hoodie_file_id", "id").collect():
+        groups.setdefault((pp, fid), []).append(k)
+    return {(pp, tuple(sorted(keys))) for (pp, _), keys in groups.items()}
+
+
+def test_bulk_insert_packs_ranges_into_core_tasks(spark, tmp_path, monkeypatch):
+    """40 small range groups are written by one task per core (one
+    ``Coalesce`` after the range exchange, ONE sort), each group as one
+    file, with the same group boundaries as one task per range."""
+    t, plan = _bulk(spark, str(tmp_path / "packed"), max_file_size_bytes=2000)
+    cores = spark.sparkContext.defaultParallelism
+    assert re.findall(r"\(\d+\) Coalesce\nInput .*\nArguments: (\d+)", plan) == [str(cores)], plan
+    assert re.findall(r"rangepartitioning\(.*, (\d+)\)", plan) == [str(N_GROUPS)], plan
+    assert len(re.findall(r"\+- Sort \(\d+\)", plan)) == 1, plan
+    assert all(len(s.base.paths) == 1 for s in t.file_slices())
+    monkeypatch.setattr(W, "write_tasks", lambda spark, n, b: max(1, n))
+    ref, ref_plan = _bulk(spark, str(tmp_path / "ref"), max_file_size_bytes=2000)
+    assert "Coalesce" not in ref_plan, ref_plan
+    assert _group_keys(t) == _group_keys(ref)
+    assert answer(t.snapshot()) == answer(rows(spark, 0, N_ROWS))
+
+
+def test_bulk_seqnos_follow_the_key_in_every_file(spark, tmp_path):
+    import pyarrow.parquet as pq
+
+    t, _ = _bulk(spark, str(tmp_path / "t"), max_file_size_bytes=2000)
+    files = [p for s in t.file_slices() for p in s.base.paths]
+    assert len(files) >= N_GROUPS
+    for p in files:
+        f = pq.read_table(f"{t.base_path}/{p}", columns=["_hoodie_record_key", "_hoodie_commit_seqno"])
+        keys, seqnos = f.column(0).to_pylist(), f.column(1).to_pylist()
+        assert keys == sorted(keys) and seqnos == sorted(seqnos), p
+        assert len(set(seqnos)) == len(seqnos)
+
+
+def test_default_file_size_keeps_one_task_per_group(spark, tmp_path):
+    """With 120 MB groups one group fills a task: the bulk range exchange
+    keeps one partition per group and nothing is coalesced."""
+    t, plan = _bulk(spark, str(tmp_path / "t"), max_file_size_bytes=120 << 20)
+    assert "Coalesce" not in plan, plan
+    assert re.findall(r"rangepartitioning\(.*, (\d+)\)", plan) == [str(N_GROUPS)], plan
+    assert W.write_tasks(spark, N_GROUPS, 120 << 20) == N_GROUPS
+    assert W.write_tasks(spark, 3, 120 << 20) == 3
 
 
 # -- one file per rewritten group ----------------------------------------------------
@@ -388,6 +499,33 @@ def test_tag_jobs_per_index(spark, tmp_path, monkeypatch, index_type, parts, mos
     _trickle(spark, t, 7)
     assert len(tag_jobs) <= most, tag_jobs
     assert t.snapshot().count() == 4000
+
+
+def test_trickle_upsert_reads_the_tag_cache_in_one_task(spark, tmp_path, monkeypatch):
+    """On a session as wide as the benchmark's (4 shuffle partitions),
+    the cached ``tagged`` frame of a 10-row upsert is one partition."""
+    t = _tag_table(spark, str(tmp_path / "t"), "SIMPLE", 4)
+    cached, widths = [], []
+    persist, plan = W.persist_tag_frame, W.plan_cow_rewrite
+
+    def persisted(df):
+        cached.append(persist(df))
+        return cached[-1]
+
+    def planned(*a, **kw):  # the profile collect has filled the cache
+        widths.extend(df.rdd.getNumPartitions() for df in cached)
+        return plan(*a, **kw)
+
+    monkeypatch.setattr(W, "persist_tag_frame", persisted)
+    monkeypatch.setattr(W, "plan_cow_rewrite", planned)
+    old = spark.conf.get(SHUFFLE)
+    spark.conf.set(SHUFFLE, "4")
+    try:
+        _trickle(spark, t, 7)
+    finally:
+        spark.conf.set(SHUFFLE, old)
+    assert widths == [1], widths
+    assert t.snapshot().filter("val LIKE '%_7'").count() == 10
 
 
 def test_tag_cache_tasks_do_not_follow_shuffle_partitions(spark, tmp_path):

@@ -8,6 +8,8 @@ Usage:
 Builds small deterministic tables in a temporary directory and writes one
 ``explain("formatted")`` file per shape, named ``<shape>_<suffix>.txt``:
 
+- ``bulk_insert``: the write plan of a COW bulk insert into 8 range
+  groups of 64 KB files, small enough that groups share a task;
 - ``cow_snapshot``: COW snapshot read;
 - ``cow_upsert``: COW upsert write (a trickle batch);
 - ``cow_upsert_mixed``: COW upsert write of a batch that updates some
@@ -42,6 +44,7 @@ import sys
 import tempfile
 
 SHAPES = (
+    "bulk_insert",
     "cow_snapshot",
     "cow_upsert",
     "cow_upsert_mixed",
@@ -112,7 +115,7 @@ def rows(spark, n: int, salt: int = 0):
     )
 
 
-def make_table(spark, path: str, mor: bool, index_type: str = "SIMPLE"):
+def make_table(spark, path: str, mor: bool, index_type: str = "SIMPLE", **extra):
     from hudi_0_10_0_spark import HudiTable, TableType, WriteConfig
 
     cfg = WriteConfig(
@@ -124,6 +127,7 @@ def make_table(spark, path: str, mor: bool, index_type: str = "SIMPLE"):
         inline_compact=False,
         auto_clean=False,
         auto_archive=False,
+        **extra,
     )
     t = HudiTable.create(spark, path, cfg)
     t.bulk_insert(rows(spark, N_ROWS))
@@ -152,6 +156,9 @@ def dump(spark, tmp: str) -> dict[str, str]:
     from hudi_0_10_0_spark.sources import read
 
     out = {}
+    with captured_saves() as plans:
+        make_table(spark, f"{tmp}/bulk", False, write_parallelism=8, max_file_size_bytes=64 << 10)
+    out["bulk_insert"] = plans[-1]
     cow = make_table(spark, f"{tmp}/cow", mor=False)
     out["cow_snapshot"] = explain(cow.snapshot())
     with captured_saves() as plans:
